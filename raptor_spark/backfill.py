@@ -2,11 +2,12 @@
 
 Shards the entity-key space by ``pmod(xxhash64(key), n_shards)`` and
 runs the full historical feature plan (``plans.historical.get_historical``)
-shard-by-shard, committing each shard's output parquet + a lineage
-record before moving on. A killed run resumes by skipping committed
-shards — output is byte-stable because sharding is deterministic on the
-key and every feature window is contained within one key (a
-conversation never spans shards).
+per shard, up to ``defaultParallelism`` shards in flight at once, each
+committing its own output parquet + a lineage record (commits can land
+out of shard order). A killed run loses only its in-flight shards and
+resumes by skipping committed ones — output is byte-stable because
+sharding is deterministic on the key and every feature window is
+contained within one key (a conversation never spans shards).
 
 Reference parity: the reference's historian commits per-bucket parquet
 files and dedupes re-handled buckets via a TTL cache
@@ -18,6 +19,8 @@ plan-hash guarding against resuming across a changed feature plan
 Lineage record per shard (JSON, atomically renamed into place):
 ``{shard, input_rows, output_rows, wall_s, plan_hash, status}`` —
 the per-partition row-count/latency metrics the north rule requires.
+``output_rows`` is observed during the shard's own write; shard
+``wall_s`` values overlap, so their sum can exceed the run's ``wall_s``.
 
 Run via spark-submit (``--py-files raptor_spark.zip``)::
 
@@ -34,10 +37,12 @@ import hashlib
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .plans.historical import get_historical
@@ -187,8 +192,15 @@ def backfill(
     input.) Fingerprints for ALL shards come from ONE full-source
     groupBy pass, not one aggregate job per shard.
 
-    fail_after_shard: test hook — raise after committing shard k to
-    simulate a killed run (resume covered by tests).
+    Pending shards run on ``min(pending, defaultParallelism)`` driver
+    threads inheriting the caller's job group and local properties, so
+    commits can land out of shard order and a kill loses at most the
+    in-flight shards. If a shard raises, queued shards are cancelled,
+    in-flight ones still commit, and the error propagates.
+
+    fail_after_shard: test hook simulating a killed run — runs only the
+    pending shards ≤ k, then raises (so a fresh run commits exactly
+    shards 0..k; resume covered by tests).
     """
     key = shard_key or fs.resolve_key_feature().keys[0]
     ts_col = fs.resolve_key_feature().timestamp_col
@@ -261,8 +273,6 @@ def backfill(
             except (OSError, json.JSONDecodeError):
                 pass
     t_run = time.perf_counter()
-    in_rows = out_rows = 0
-    ran = skipped = 0
 
     # ONE pass over the source for every shard's row count (+ the
     # incremental fingerprint fields) — not a per-shard aggregate job.
@@ -293,8 +303,8 @@ def backfill(
                 "re-key the source first"
             )
 
+    pending = []
     for k in range(n_shards):
-        src_k = source.filter(shard_expr == k)
         st = stats.get(k)
         fp = None
         if incremental:
@@ -304,38 +314,53 @@ def backfill(
                 "hash": st["h"] if st else None,
             }
             if k in done and prior.get(k, {}).get("fingerprint") == fp:
-                skipped += 1
                 continue
         elif k in done:
-            skipped += 1
             continue
+        pending.append((k, st["n"] if st else 0, fp))
+    skipped = n_shards - len(pending)
+    if fail_after_shard is not None:
+        pending = [p for p in pending if p[0] <= fail_after_shard]
+
+    def run_shard(k: int, n_in: int, fp: Optional[dict]) -> int:
         t0 = time.perf_counter()
-        n_in = st["n"] if st else 0
-        out = get_historical(src_k, fs, mode=mode)
+        out = get_historical(source.filter(shard_expr == k), fs, mode=mode)
         data_path = os.path.join(out_dir, "data", f"shard={k:05d}")
+        obs = Observation()  # counts output rows during the write
+        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
         out.write.mode("overwrite").parquet(data_path)
-        n_out = (
-            spark.read.parquet(data_path).count() if n_in else out.count()
-        )
-        wall = time.perf_counter() - t0
+        n_out = obs.get["n"]
         _write_atomic(
             _shard_record_path(out_dir, k),
             {
                 "shard": k,
                 "input_rows": n_in,
                 "output_rows": n_out,
-                "wall_s": round(wall, 3),
+                "wall_s": round(time.perf_counter() - t0, 3),
                 "plan_hash": phash,
                 "status": "committed",
                 "data_path": data_path,
                 **({"fingerprint": fp} if fp is not None else {}),
             },
         )
-        ran += 1
-        in_rows += n_in
-        out_rows += n_out
-        if fail_after_shard is not None and k >= fail_after_shard:
-            raise RuntimeError(f"injected failure after shard {k}")
+        return n_out
+
+    width = min(len(pending), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=max(width, 1)) as pool:
+        # wrapped per submit: each shard copies the caller's job group
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(run_shard), *p)
+            for p in pending
+        ]
+        try:
+            out_rows = sum(f.result() for f in futs)
+        except BaseException:
+            pool.shutdown(cancel_futures=True)  # in-flight shards finish
+            raise
+    ran = len(pending)
+    in_rows = sum(p[1] for p in pending)
+    if fail_after_shard is not None:
+        raise RuntimeError(f"injected failure after shard {fail_after_shard}")
 
     wall_s = time.perf_counter() - t_run
     res = BackfillResult(

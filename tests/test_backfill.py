@@ -232,3 +232,82 @@ def test_rerun_with_fewer_shards_prunes_stale_dirs(spark, src, tmp_path_factory)
     backfill(spark, src, fs, out, n_shards=2, source_id="t")
     got = read_backfill(spark, out)
     assert got.count() == n4  # no duplication from stale shard dirs
+
+
+def _lineage_records(out):
+    lin = os.path.join(out, "_lineage")
+    return [
+        json.loads(open(os.path.join(lin, f)).read())
+        for f in sorted(os.listdir(lin))
+        if f.startswith("shard-")
+    ]
+
+
+def test_lineage_output_rows_match_disk(spark, src, tmp_path_factory):
+    """Each shard's output_rows is observed during its own write (no
+    re-read) — it must equal what that write left on disk."""
+    out = str(tmp_path_factory.mktemp("bf_counts"))
+    backfill(spark, src, transcript_feature_set(), out, n_shards=N_SHARDS,
+             source_id="t")
+    recs = _lineage_records(out)
+    assert len(recs) == N_SHARDS
+    for rec in recs:
+        assert rec["output_rows"] == spark.read.parquet(rec["data_path"]).count()
+
+
+def test_backfill_shard_failure_in_worker_thread(spark, src, tmp_path_factory):
+    """One shard's write fails inside its worker thread: backfill raises,
+    that shard leaves no lineage record, every record that does exist is
+    committed, and a clean rerun resumes to the one-shot result. The
+    stats pass prunes ``text``, so only the bad conversation's shard
+    evaluates the raise_error."""
+    from pyspark.sql import functions as F
+
+    bad = "conv_00000007"
+    bad_shard = (
+        spark.range(1)
+        .select(F.pmod(F.xxhash64(F.lit(bad)), F.lit(N_SHARDS)).alias("k"))
+        .first()["k"]
+    )
+    poisoned = src.withColumn(
+        "text",
+        F.when(F.col("conv_id") == bad, F.raise_error(F.lit("poisoned shard")))
+        .otherwise(F.col("text")),
+    )
+    out = str(tmp_path_factory.mktemp("bf_shard_fail"))
+    fs = transcript_feature_set()
+    with pytest.raises(Exception, match="poisoned shard"):
+        backfill(spark, poisoned, fs, out, n_shards=N_SHARDS, source_id="t")
+    recs = _lineage_records(out)
+    assert bad_shard not in {r["shard"] for r in recs}
+    assert all(r["status"] == "committed" for r in recs)
+
+    res = backfill(spark, src, fs, out, n_shards=N_SHARDS, source_id="t")
+    assert res.shards_run >= 1
+    assert res.shards_run + res.shards_skipped == N_SHARDS
+    assert bad_shard in committed_shards(out, plan_hash(fs, N_SHARDS, "t"))
+    got = _collect_sorted(read_backfill(spark, out))
+    want = _collect_sorted(get_historical(src, fs))
+    assert got == want
+
+
+def test_backfill_shard_jobs_carry_caller_job_group(spark, src, tmp_path_factory):
+    """Shard jobs run on worker threads but must carry the caller's job
+    group (cancelJobGroup and group-scoped counters rely on it). The
+    count is pinned: 2 jobs for the stats pass plus 2 per shard (its
+    write, with no re-read of the output to count rows)."""
+    sc = spark.sparkContext
+    src.count()  # cache materialised outside the group
+    group = "bf-job-group-test"
+    out = str(tmp_path_factory.mktemp("bf_group"))
+    sc.setJobGroup(group, "backfill job-group propagation")
+    try:
+        backfill(spark, src, transcript_feature_set(), out, n_shards=N_SHARDS,
+                 source_id="t")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store fed async
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 2 + 2 * N_SHARDS
