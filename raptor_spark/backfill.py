@@ -2,16 +2,19 @@
 
 Shards the entity-key space by ``pmod(xxhash64(key), n_shards)`` and
 runs the full historical feature plan (``plans.historical.get_historical``)
-per shard, up to ``defaultParallelism`` shards in flight at once, each
-committing its own output parquet + a lineage record (commits can land
-out of shard order). A killed run loses only its in-flight shards and
-resumes by skipping committed ones — output is byte-stable because
-sharding is deterministic on the key and every feature window is
-contained within one key (a conversation never spans shards).
+over WAVES of pending shards. A wave holds up to ``defaultParallelism``
+shards (derived from the cluster, not a knob) and is ONE Spark write:
+the source filtered to the wave's shards, through the plan, written
+``partitionBy("shard")`` into a staging dir. Each of the wave's shard
+dirs is then moved into ``data/shard=k`` and its lineage record
+committed. A killed run loses only its in-flight wave and resumes by
+skipping committed shards — output is byte-stable because sharding is
+deterministic on the key and every feature window is contained within
+one key (a conversation never spans shards).
 
 Reference parity: the reference's historian commits per-bucket parquet
 files and dedupes re-handled buckets via a TTL cache
-(``/root/reference/internal/historian/write.go:26-49``,
+(``internal/historian/write.go:26-49``,
 ``collect.go:108-119``); our shard manifest plays that role, with the
 plan-hash guarding against resuming across a changed feature plan
 (analog of the program checksum cache, ``runtime/svc.py:55-64``).
@@ -19,8 +22,10 @@ plan-hash guarding against resuming across a changed feature plan
 Lineage record per shard (JSON, atomically renamed into place):
 ``{shard, input_rows, output_rows, wall_s, plan_hash, status}`` —
 the per-partition row-count/latency metrics the north rule requires.
-``output_rows`` is observed during the shard's own write; shard
-``wall_s`` values overlap, so their sum can exceed the run's ``wall_s``.
+``input_rows`` and ``output_rows`` are observed during the wave's
+write; ``wall_s`` is the WAVE's wall time, shared by its shards, so
+their sum exceeds the run's ``wall_s``. The number of files in a
+shard dir follows the wave's write-task count, not one per shard.
 
 Run via spark-submit (``--py-files raptor_spark.zip``)::
 
@@ -36,12 +41,11 @@ import argparse
 import hashlib
 import json
 import os
+import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Callable, Optional, Sequence
+from typing import Optional, Sequence
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,19 +95,14 @@ def _expr_id(e) -> str:
         )
 
 
-def plan_hash(
-    fs: FeatureSetSpec,
-    n_shards: int,
-    source_id: str,
-    shard_expr_id: str = "key-hash",
-) -> str:
-    """Checkpoint identity: feature plan + sharding (count AND the
-    shard-ASSIGNMENT expression — a ``shard_col`` run whose column
-    partitions keys differently from key-hashing must not share
-    identity with it, ADVICE r2) + source. Changing any of these
-    invalidates prior shard commits. Every output-changing spec field
-    participates (keys_expr/ts_expr re-key rows; namespace changes the
-    fqn; derived_inputs change the DAG — review r3)."""
+def plan_hash(fs: FeatureSetSpec, n_shards: int, source_id: str) -> str:
+    """Checkpoint identity: feature plan + shard count + source.
+    Changing any of these invalidates prior shard commits. Every
+    output-changing spec field participates (keys_expr/ts_expr re-key
+    rows; namespace changes the fqn; derived_inputs change the DAG —
+    review r3). Shard assignment is always key hashing (a ``shard_col``
+    must agree with it), spelled ``key-hash`` in the hashed string so
+    checkpoints written before that rule still resume."""
     spec_repr = repr([
         (f.name, f.namespace, f.keys, _expr_id(f.expr), f.timestamp_col,
          _expr_id(f.keys_expr), _expr_id(f.ts_expr), f.staleness_us,
@@ -112,8 +111,7 @@ def plan_hash(
         for f in fs.features
     ])
     h = hashlib.sha256(
-        f"{spec_repr}|{fs.key_feature}|{n_shards}|{shard_expr_id}|"
-        f"{source_id}".encode()
+        f"{spec_repr}|{fs.key_feature}|{n_shards}|key-hash|{source_id}".encode()
     )
     return h.hexdigest()[:16]
 
@@ -160,7 +158,6 @@ def backfill(
     fs: FeatureSetSpec,
     out_dir: str,
     n_shards: int = 16,
-    shard_key: Optional[str] = None,
     shard_col: Optional[str] = None,
     resume: bool = True,
     source_id: str = "source",
@@ -168,21 +165,24 @@ def backfill(
     fail_after_shard: Optional[int] = None,
     incremental: bool = False,
 ) -> BackfillResult:
-    """Run the historical plan shard-wise with per-shard commit.
+    """Run the historical plan wave by wave with per-shard commit.
 
-    shard_key defaults to the key feature's first key column. Each shard
-    filters the SOURCE on ``pmod(xxhash64(key), n_shards) == k``. A hash
-    predicate prunes NOTHING in a flat parquet layout — a 16-shard run
-    would read the input 16× — so when the source is catalog-laid-out,
-    pass ``shard_col`` (e.g. the catalog's ``pbucket`` hive-partition
-    column): the shard predicate becomes
-    ``pmod(shard_col, n_shards) == k``, which Spark turns into a
-    PartitionFilter, and each shard's scan touches only ~1/n_shards of
-    the files. Because the catalog derives pbucket with the SAME hash
-    (``pmod(xxhash64(conv_id), n_buckets)``, sources/catalog.py), the
-    shard assignment is IDENTICAL to key-hash sharding whenever
-    n_buckets % n_shards == 0 — a checkpointed run can switch between
-    the two and resume cleanly.
+    Shard k holds the rows with ``pmod(xxhash64(key), n_shards) == k``
+    (key: the key feature's first key column). Each wave of up to
+    ``defaultParallelism`` pending shards is one write; no record of a
+    wave is written before its write finished, so a kill or a failing
+    shard loses that wave while earlier waves stay committed.
+
+    A hash predicate prunes NOTHING in a flat parquet layout, so each
+    wave reads the whole input. For a catalog-laid-out source pass
+    ``shard_col`` (e.g. its ``pbucket`` hive-partition column) as a
+    pruning hint: the wave predicate ``pmod(shard_col, n_shards) IN
+    (wave)`` becomes a PartitionFilter. ``shard_col`` must put every
+    row in the SAME shard as key hashing — for the catalog's pbucket
+    (``pmod(xxhash64(conv_id), n_buckets)``) that means
+    ``n_buckets % n_shards == 0``. Whenever a write could happen, one
+    aggregate checks this and raises ValueError on a NULL or
+    mismatching assignment.
 
     incremental=True: data-aware resume — each committed shard stores a
     cheap input FINGERPRINT (row count, max ts µs, xxhash of key+ts);
@@ -192,78 +192,69 @@ def backfill(
     input.) Fingerprints for ALL shards come from ONE full-source
     groupBy pass, not one aggregate job per shard.
 
-    Pending shards run on ``min(pending, defaultParallelism)`` driver
-    threads inheriting the caller's job group and local properties, so
-    commits can land out of shard order and a kill loses at most the
-    in-flight shards. If a shard raises, queued shards are cancelled,
-    in-flight ones still commit, and the error propagates.
-
     fail_after_shard: test hook simulating a killed run — runs only the
     pending shards ≤ k, then raises (so a fresh run commits exactly
     shards 0..k; resume covered by tests).
     """
-    key = shard_key or fs.resolve_key_feature().keys[0]
-    ts_col = fs.resolve_key_feature().timestamp_col
-
-    key_hash_expr = F.pmod(F.xxhash64(F.col(key)), F.lit(n_shards))
+    kf = fs.resolve_key_feature()
+    key, ts_col = kf.keys[0], kf.timestamp_col
+    if kf.keys_expr is not None:
+        # output rows would carry re-keyed keys that hash to other
+        # shards than their input rows
+        raise ValueError(
+            f"backfill shards on the key column {key}; the key feature "
+            "must not re-key it (keys_expr)"
+        )
+    key_hash = F.pmod(F.xxhash64(F.col(key)), F.lit(n_shards))
     shard_expr = (
         F.pmod(F.col(shard_col).cast("long"), F.lit(n_shards))
         if shard_col
-        else key_hash_expr
+        else key_hash
     )
-    shard_expr_id = f"col:{shard_col}" if shard_col else "key-hash"
-    if shard_col:
-        # a shard_col run may only share checkpoint identity with
-        # key-hash sharding when the ASSIGNMENTS agree (e.g. catalog
-        # pbucket with n_buckets % n_shards == 0) — otherwise a resume
-        # would skip shards whose key membership differs (ADVICE r2).
-        # Verified on the data with one column-pruned aggregate;
-        # eqNullSafe so a NULL shard assignment counts as MISMATCH
-        # (plain != yields NULL, which max() would ignore — a null-
-        # bearing column would silently share the key-hash identity).
-        # Skipped when this run's own identity already covers every
-        # shard (a fully-committed plain resume stays scan-free).
-        own_done = (
-            committed_shards(
-                out_dir, plan_hash(fs, n_shards, source_id, shard_expr_id)
+    phash = plan_hash(fs, n_shards, source_id)
+    done = committed_shards(out_dir, phash) if resume else set()
+
+    if shard_col and (incremental or len(done) < n_shards):
+        bad = source.select(
+            F.count_if(shard_expr.isNull()).alias("null"),
+            F.count_if(shard_expr != key_hash).alias("mismatch"),
+        ).first()
+        if bad["null"]:
+            # such rows match no wave filter: they would silently vanish
+            raise ValueError(
+                f"{bad['null']} row(s) have a NULL shard assignment "
+                f"(column {shard_col}) — they would be dropped by every "
+                "shard filter; clean or re-key the source first"
             )
-            if resume
-            else set()
-        )
-        if len(own_done) < n_shards:
-            mismatch = source.select(
-                F.max(
-                    (~shard_expr.eqNullSafe(key_hash_expr)).cast("int")
-                ).alias("m")
-            ).first()["m"]
-            if not mismatch:
-                shard_expr_id = "key-hash"
-    phash = plan_hash(fs, n_shards, source_id, shard_expr_id)
+        if bad["mismatch"]:
+            raise ValueError(
+                f"{bad['mismatch']} row(s) have a shard assignment from "
+                f"column {shard_col} that differs from key hashing on "
+                f"{key}; shard_col must equal pmod(xxhash64({key}), "
+                "n_shards) (catalog pbucket: n_buckets % n_shards == 0)"
+            )
     os.makedirs(_lineage_dir(out_dir), exist_ok=True)
+    data_root = os.path.join(out_dir, "data")
+    os.makedirs(data_root, exist_ok=True)
 
     # a prior run with MORE shards leaves data/shard=k dirs beyond this
     # run's range; nothing would ever overwrite them, and read_backfill
     # globs the whole data dir — stale rows would silently duplicate
     # the output (review r3). Shards < n_shards are re-committed (per-
-    # shard overwrite) so only the out-of-range tail needs removal.
-    import shutil
-
-    data_root = os.path.join(out_dir, "data")
-    if os.path.isdir(data_root):
-        for name in os.listdir(data_root):
-            if name.startswith("shard="):
+    # shard replace) so only the out-of-range tail needs removal.
+    for name in os.listdir(data_root):
+        if name.startswith("shard="):
+            try:
+                k = int(name.split("=", 1)[1])
+            except ValueError:
+                continue
+            if k >= n_shards:
+                shutil.rmtree(os.path.join(data_root, name))
                 try:
-                    k = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if k >= n_shards:
-                    shutil.rmtree(os.path.join(data_root, name))
-                    try:
-                        os.remove(_shard_record_path(out_dir, k))
-                    except OSError:
-                        pass
+                    os.remove(_shard_record_path(out_dir, k))
+                except OSError:
+                    pass
 
-    done = committed_shards(out_dir, phash) if resume else set()
     prior: dict[int, dict] = {}
     if incremental and resume:
         for k in done:
@@ -274,91 +265,94 @@ def backfill(
                 pass
     t_run = time.perf_counter()
 
-    # ONE pass over the source for every shard's row count (+ the
-    # incremental fingerprint fields) — not a per-shard aggregate job.
-    # Plain-resume runs with nothing left to do skip even this scan
-    # (incremental always needs it: the fingerprints decide skipping).
-    stats: dict[int, object] = {}
-    if incremental or any(k not in done for k in range(n_shards)):
-        stat_aggs = [F.count(F.lit(1)).alias("n")]
-        if incremental:
-            stat_aggs += [
+    # incremental: ONE pass over the source fingerprints every shard —
+    # the fingerprints decide which shards to skip
+    fps: dict[int, dict] = {}
+    if incremental:
+        fps = {
+            r["_shard"]: {"n": r["n"], "max_ts_us": r["mx"], "hash": r["h"]}
+            for r in source.groupBy(shard_expr.alias("_shard"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
                 F.max(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("mx"),
                 F.bit_xor(F.xxhash64(F.col(key), F.col(ts_col))).alias("h"),
-            ]
-        stats = {
-            r["_shard"]: r
-            for r in source.groupBy(shard_expr.alias("_shard"))
-            .agg(*stat_aggs)
+            )
             .collect()
         }
-        if None in stats:
-            # rows whose shard assignment is NULL (null shard_col /
-            # null key) match NO shard filter — they would silently
-            # vanish from the output
-            raise ValueError(
-                f"{stats[None]['n']} row(s) have a NULL shard assignment "
-                f"({'column ' + shard_col if shard_col else 'key ' + key}) "
-                "— they would be dropped by every shard filter; clean or "
-                "re-key the source first"
-            )
-
-    pending = []
-    for k in range(n_shards):
-        st = stats.get(k)
-        fp = None
-        if incremental:
-            fp = {
-                "n": st["n"] if st else 0,
-                "max_ts_us": st["mx"] if st else None,
-                "hash": st["h"] if st else None,
-            }
-            if k in done and prior.get(k, {}).get("fingerprint") == fp:
-                continue
-        elif k in done:
-            continue
-        pending.append((k, st["n"] if st else 0, fp))
+    empty_fp = {"n": 0, "max_ts_us": None, "hash": None}
+    pending = [
+        k for k in range(n_shards)
+        if k not in done or (
+            incremental
+            and prior.get(k, {}).get("fingerprint") != fps.get(k, empty_fp)
+        )
+    ]
     skipped = n_shards - len(pending)
     if fail_after_shard is not None:
-        pending = [p for p in pending if p[0] <= fail_after_shard]
+        pending = [k for k in pending if k <= fail_after_shard]
 
-    def run_shard(k: int, n_in: int, fp: Optional[dict]) -> int:
+    in_rows = out_rows = 0
+    staging = os.path.join(out_dir, "_staging")
+    width = spark.sparkContext.defaultParallelism
+    for i in range(0, len(pending), width):
+        wave = pending[i:i + width]
         t0 = time.perf_counter()
-        out = get_historical(source.filter(shard_expr == k), fs, mode=mode)
-        data_path = os.path.join(out_dir, "data", f"shard={k:05d}")
-        obs = Observation()  # counts output rows during the write
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        out.write.mode("overwrite").parquet(data_path)
-        n_out = obs.get["n"]
-        _write_atomic(
-            _shard_record_path(out_dir, k),
-            {
-                "shard": k,
-                "input_rows": n_in,
-                "output_rows": n_out,
-                "wall_s": round(time.perf_counter() - t0, 3),
-                "plan_hash": phash,
-                "status": "committed",
-                "data_path": data_path,
-                **({"fingerprint": fp} if fp is not None else {}),
-            },
+        obs_in, obs_out = Observation(), Observation()
+        part = source.filter(shard_expr.isin(wave)).observe(
+            obs_in, *[F.count_if(shard_expr == k).alias(str(k)) for k in wave]
         )
-        return n_out
-
-    width = min(len(pending), spark.sparkContext.defaultParallelism)
-    with ThreadPoolExecutor(max_workers=max(width, 1)) as pool:
-        # wrapped per submit: each shard copies the caller's job group
-        futs = [
-            pool.submit(inheritable_thread_target(spark)(run_shard), *p)
-            for p in pending
-        ]
-        try:
-            out_rows = sum(f.result() for f in futs)
-        except BaseException:
-            pool.shutdown(cancel_futures=True)  # in-flight shards finish
-            raise
+        out = get_historical(part, fs, mode=mode).withColumn(
+            "shard", F.format_string("%05d", key_hash)
+        )
+        out.observe(
+            obs_out,
+            *[F.count_if(F.col("shard") == f"{k:05d}").alias(str(k))
+              for k in wave],
+        ).write.partitionBy("shard").mode("overwrite").parquet(staging)
+        wall_s = round(time.perf_counter() - t0, 3)
+        n_out = obs_out.get
+        if any(n_out.values()):
+            n_in = obs_in.get
+        else:
+            # AQE replaces a plan over empty stages by an empty relation,
+            # dropping the input observation with it: count directly
+            n_in = {str(k): 0 for k in wave}
+            n_in.update(
+                (str(r["k"]), r["n"])
+                for r in source.filter(shard_expr.isin(wave))
+                .groupBy(shard_expr.alias("k"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+        for k in wave:
+            data_path = os.path.join(data_root, f"shard={k:05d}")
+            staged = os.path.join(staging, f"shard={k:05d}")
+            record = _shard_record_path(out_dir, k)
+            # uncommit k before touching its data, and drop the old dir
+            # even when k's new output is empty
+            if os.path.exists(record):
+                os.remove(record)
+            shutil.rmtree(data_path, ignore_errors=True)
+            if os.path.isdir(staged):
+                os.replace(staged, data_path)
+            _write_atomic(
+                record,
+                {
+                    "shard": k,
+                    "input_rows": n_in[str(k)],
+                    "output_rows": n_out[str(k)],
+                    "wall_s": wall_s,
+                    "plan_hash": phash,
+                    "status": "committed",
+                    "data_path": data_path,
+                    **({"fingerprint": fps.get(k, empty_fp)}
+                       if incremental else {}),
+                },
+            )
+            in_rows += n_in[str(k)]
+            out_rows += n_out[str(k)]
+        shutil.rmtree(staging)
     ran = len(pending)
-    in_rows = sum(p[1] for p in pending)
     if fail_after_shard is not None:
         raise RuntimeError(f"injected failure after shard {fail_after_shard}")
 
@@ -435,7 +429,7 @@ def main(argv: Optional[Sequence[str]] = None) -> None:
                    help="lay the transcript table out through the "
                         "partitioned catalog (bucket(conv_id), days(ts)) "
                         "and shard on its pbucket partition column — each "
-                        "shard's scan partition-prunes to ~1/n of the files")
+                        "wave's scan partition-prunes to its shards' files")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--incremental", action="store_true",
                    help="data-aware resume: recompute only shards whose "

@@ -123,7 +123,7 @@ class Catalog:
     def read(self, name: str, with_partition_cols: bool = False) -> DataFrame:
         """``with_partition_cols=True`` keeps the layout's pbucket/pday
         columns — pass pbucket as ``backfill(shard_col=...)`` so each
-        shard's scan partition-prunes to 1/n of the files."""
+        wave's scan partition-prunes to its shards' share of the files."""
         if self.kind == "iceberg":
             return self.spark.table(self._ident(name))
         df = self.spark.read.parquet(self._path(name))

@@ -2,6 +2,7 @@
 equivalence with the one-shot historical plan."""
 
 import json
+import math
 import os
 
 import pytest
@@ -78,6 +79,8 @@ def test_backfill_bucketed_mode(spark, src, tmp_path_factory):
     got = _collect_sorted(read_backfill(spark, out))
     want = _collect_sorted(get_historical(src, fs, mode="bucketed"))
     assert got == want
+    # the observed input count holds under the multi-branch replay plan
+    assert sum(r["input_rows"] for r in _lineage_records(out)) == src.count()
 
 
 def test_backfill_incremental_recomputes_changed_shards(spark, tmp_path_factory):
@@ -256,10 +259,10 @@ def test_lineage_output_rows_match_disk(spark, src, tmp_path_factory):
 
 
 def test_backfill_shard_failure_in_worker_thread(spark, src, tmp_path_factory):
-    """One shard's write fails inside its worker thread: backfill raises,
-    that shard leaves no lineage record, every record that does exist is
-    committed, and a clean rerun resumes to the one-shot result. The
-    stats pass prunes ``text``, so only the bad conversation's shard
+    """One shard's rows fail inside its wave's write: backfill raises,
+    that shard (and the rest of its wave) leaves no lineage record,
+    every record that does exist is committed, and a clean rerun
+    resumes to the one-shot result. Only the bad conversation's wave
     evaluates the raise_error."""
     from pyspark.sql import functions as F
 
@@ -292,10 +295,10 @@ def test_backfill_shard_failure_in_worker_thread(spark, src, tmp_path_factory):
 
 
 def test_backfill_shard_jobs_carry_caller_job_group(spark, src, tmp_path_factory):
-    """Shard jobs run on worker threads but must carry the caller's job
-    group (cancelJobGroup and group-scoped counters rely on it). The
-    count is pinned: 2 jobs for the stats pass plus 2 per shard (its
-    write, with no re-read of the output to count rows)."""
+    """Shard jobs must carry the caller's job group (cancelJobGroup and
+    group-scoped counters rely on it). The count is pinned: 2 jobs per
+    wave of up to defaultParallelism shards (its one partitioned write,
+    with no stats pass and no re-read of the output to count rows)."""
     sc = spark.sparkContext
     src.count()  # cache materialised outside the group
     group = "bf-job-group-test"
@@ -310,4 +313,90 @@ def test_backfill_shard_jobs_carry_caller_job_group(spark, src, tmp_path_factory
             sc.setLocalProperty(prop, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store fed async
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 2 + 2 * N_SHARDS
+    assert len(jobs) == 2 * math.ceil(N_SHARDS / sc.defaultParallelism)
+
+
+def test_backfill_empty_shards_and_stale_dirs(spark, tmp_path_factory):
+    """More shards than conversations: empty shards commit with
+    output_rows == 0, and a resume=False rerun over a different subset
+    replaces every shard dir — including ones whose new output is
+    empty — so no stale rows survive."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path_factory.mktemp("bf_empty"))
+    fs = transcript_feature_set()
+    convs = transcripts(spark, n_convs=6)
+    first = convs.filter(F.col("conv_id") < "conv_00000003")
+    second = convs.filter(F.col("conv_id") >= "conv_00000003")
+    backfill(spark, first, fs, out, n_shards=8, source_id="t")
+    res = backfill(spark, second, fs, out, n_shards=8, source_id="t",
+                   resume=False)
+    assert res.shards_run == 8
+    got = _collect_sorted(read_backfill(spark, out))
+    assert got == _collect_sorted(get_historical(second, fs))
+    recs = _lineage_records(out)
+    assert len(recs) == 8 and all(r["status"] == "committed" for r in recs)
+    empty = [r for r in recs if not os.path.isdir(r["data_path"])]
+    assert empty and all(r["output_rows"] == 0 for r in empty)
+    assert sum(r["output_rows"] for r in recs) == len(got)
+    assert sum(r["input_rows"] for r in recs) == second.count()
+    again = backfill(spark, second, fs, out, n_shards=8, source_id="t")
+    assert again.shards_skipped == 8 and again.shards_run == 0
+
+
+def test_backfill_shard_col_mismatch_raises(spark, src, tmp_path_factory):
+    """A shard_col that disagrees with key hashing (n_buckets % n_shards
+    != 0) is refused before anything is committed."""
+    from raptor_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, root=str(tmp_path_factory.mktemp("cat3")), n_buckets=3)
+    cat.write_transcripts(src, "transcripts")
+    laid_out = cat.read("transcripts", with_partition_cols=True)
+    out = str(tmp_path_factory.mktemp("bf_mismatch"))
+    with pytest.raises(ValueError, match="differs from key hashing"):
+        backfill(spark, laid_out, transcript_feature_set(), out, n_shards=2,
+                 shard_col="pbucket", source_id="t")
+    lin = os.path.join(out, "_lineage")
+    assert not os.path.isdir(lin) or not os.listdir(lin)
+
+
+def test_backfill_rekeyed_key_feature_raises(spark, src, tmp_path):
+    """A key feature re-keyed by keys_expr would hash output rows into
+    shards other than their input rows' — refused before any write."""
+    from raptor_spark.specs import FeatureSetSpec, FeatureSpec
+
+    fs = FeatureSetSpec(
+        features=[
+            FeatureSpec(name="turn_len", keys=("conv_id",),
+                        expr="cast(length(text) as double)",
+                        keys_expr="upper(conv_id)"),
+        ],
+        key_feature="turn_len",
+    )
+    with pytest.raises(ValueError, match="keys_expr"):
+        backfill(spark, src, fs, str(tmp_path), n_shards=2, source_id="t")
+    assert not os.listdir(tmp_path)
+
+
+def test_backfill_incremental_shard_col_null_raises(spark, tmp_path_factory):
+    """An incremental shard_col run validates the source even when every
+    shard is committed: grown rows with a NULL pbucket must raise."""
+    from pyspark.sql import functions as F
+
+    def with_pbucket(df):
+        return df.withColumn(
+            "pbucket",
+            F.when(F.col("conv_id") < "conv_00000020",
+                   F.pmod(F.xxhash64("conv_id"), F.lit(2 * N_SHARDS))),
+        )
+
+    out = str(tmp_path_factory.mktemp("bf_incr_null"))
+    fs = transcript_feature_set()
+    small = with_pbucket(transcripts(spark, n_convs=20))
+    res = backfill(spark, small, fs, out, n_shards=N_SHARDS,
+                   shard_col="pbucket", source_id="t", incremental=True)
+    assert res.shards_run == N_SHARDS
+    grown = with_pbucket(transcripts(spark, n_convs=30))
+    with pytest.raises(ValueError, match="NULL shard assignment"):
+        backfill(spark, grown, fs, out, n_shards=N_SHARDS,
+                 shard_col="pbucket", source_id="t", incremental=True)

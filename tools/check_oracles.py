@@ -90,7 +90,7 @@ def main():
     # driver's bit-equal gate would fail (round-2 lesson). "0" loosens.
     exact = os.environ.get("SPARK_GRAFT_EXACT", "1") == "1"
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from raptor_spark.session import get_spark
 

@@ -11,10 +11,11 @@ scales to 10^12 rows. Run from the repo root:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from raptor_spark.queries import QUERIES  # noqa: E402
 from raptor_spark.session import get_spark  # noqa: E402
