@@ -71,25 +71,6 @@ def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """n-gram word shingles as an array<string> (distinct). For
-    per-row hot paths prefer staging ``split(_norm(text), ' ')`` in
-    its own select and calling :func:`word_shingles_from_tokens`."""
-    t = F.col(text) if isinstance(text, str) else text
-    return word_shingles_from_tokens(F.split(_norm(t), " "), n)
-
-
-def char_shingles(text: Column | str, n: int = 5) -> Column:
-    """character n-gram shingles (distinct)."""
-    t = _norm(F.col(text) if isinstance(text, str) else text)
-    k = F.length(t) - (n - 1)
-    sh = F.when(
-        k > 0,
-        F.transform(F.sequence(F.lit(1), k), lambda i: t.substr(i, F.lit(n))),
-    ).otherwise(F.array(t))
-    return F.array_distinct(sh)
-
-
 # MinHash permutation constants: perm_i(h) = (a_i*h + b_i) mod P over
 # h = md5_long(shingle) mod 2^30. P < 2^30 keeps a_i*h < 2^60 (no
 # bigint overflow under ANSI mode, same arithmetic in any SQL engine).
@@ -104,23 +85,6 @@ def minhash_coeffs(k: int) -> list[tuple[int, int]]:
         b = (0x85EBCA77 * (i + 1)) % MINHASH_P
         out.append((a, b))
     return out
-
-
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """k-permutation MinHash signature as array<long>.
-
-    Each shingle is md5-hashed ONCE (the expensive step); the k
-    permutations are linear congruential transforms of that hash —
-    k ways cheaper than k independent md5 passes, and portable to any
-    engine with md5 + bigint arithmetic."""
-    hashes = F.transform(shingles, lambda s: md5_long(s) % MINHASH_H_MOD)
-    sigs = [
-        F.array_min(
-            F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)
-        )
-        for a, b in minhash_coeffs(k)
-    ]
-    return F.array(*sigs)
 
 
 def _bucket_pairs(buckets: DataFrame) -> DataFrame:
@@ -422,7 +386,6 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 20,
-    fallback_star: bool = True,
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: connected components by
     min-label propagation. Returns (id, cluster_rep = min id in the
@@ -432,17 +395,18 @@ def connected_components(
     its neighbors (one join + groupBy-min per round); converges in
     O(diameter) ≤ O(log n) rounds for near-dup graphs (components are
     tiny cliques/chains). Driver loop with early exit when a round
-    changes nothing — at 10⁹ edges each round is two shuffles; for
-    pathological giant components switch to alternating large/small
-    star (same primitive ops).
+    changes nothing — at 10⁹ edges each round is two shuffles.
 
     The convergence check rides the label-update pass: a ``_changed``
     flag is computed inside the update join, the result is
     localCheckpoint'ed (materialized), and the changed-count is a cheap
     scan of the cached partitions — no extra join, no recompute.
-    Raises ``RuntimeError`` if labels have not converged after
-    ``max_iter`` rounds (silent truncation would return WRONG cluster
-    labels).
+    If labels have not converged after ``max_iter`` rounds (a
+    high-diameter graph), the same edge list is handed to alternating
+    large/small star, which converges on any graph in O(log² n) rounds.
+    Raises ``RuntimeError`` only if star has not converged within
+    ``max(2 * max_iter, 50)`` rounds (silent truncation would return
+    WRONG cluster labels).
     """
     # materialize the edge list ONCE — every propagation round joins
     # against it, and without the checkpoint each round would recompute
@@ -493,48 +457,19 @@ def connected_components(
         if changed == 0:
             break
     if changed != 0:
-        if fallback_star:
-            # high-diameter graph (min-label propagation needs
-            # O(diameter) rounds) → the O(log²)-round alternating-star
-            # algorithm on the already-checkpointed edge list
-            return _star_components(edges, max_iter=max(2 * max_iter, 50))
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter or use connected_components_star for "
-            "high-diameter graphs"
-        )
+        # high-diameter graph (min-label propagation needs
+        # O(diameter) rounds) → the O(log²)-round alternating-star
+        # algorithm on the already-checkpointed edge list
+        return _star_components(edges, max_iter=max(2 * max_iter, 50))
     return labels.select(F.col("id"), F.col("label").alias("cluster_rep"))
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    (the two-phase MapReduce CC algorithm: per round every node hooks
-    its larger neighbors (large-star) / its smaller neighbors and
-    itself (small-star) onto the minimum of its closed neighborhood).
-    Converges on ANY graph in O(log² n) rounds — the high-diameter
-    complement to min-label propagation (O(diameter) rounds, the right
-    default for near-dup graphs of tiny cliques/chains). Same output
-    contract: (id, cluster_rep = min id in the component)."""
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    return _star_components(edges, max_iter=max_iter)
-
-
 def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Core alternating-star loop over a materialized BOTH-DIRECTIONS
-    edge list (src, dst). Each round is large-star ∘ small-star; the
+    """Alternating large-star / small-star connected components over a
+    materialized BOTH-DIRECTIONS edge list (src, dst): per round every
+    node hooks its larger neighbors (large-star), then its smaller
+    neighbors and itself (small-star), onto the minimum of its closed
+    neighborhood. Each round is large-star ∘ small-star; the
     fixpoint is a forest of stars whose centers are the component
     minima. Convergence test: canonical-edge-set checksum (count +
     xor of row hashes) — an order-independent aggregate on the freshly

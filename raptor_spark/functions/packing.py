@@ -149,11 +149,3 @@ def pack_sequences(
     )
     return out
 
-
-def packing_okey_sql(id_sql: str, salt: str = "pack") -> str:
-    """DuckDB expression replaying :func:`sampling.shuffle_order` —
-    shared so query and oracle use one definition."""
-    return (
-        "CAST('0x' || substr(md5('" + salt + "|' || CAST(" + id_sql
-        + " AS VARCHAR)), 1, 15) AS BIGINT)"
-    )

@@ -211,8 +211,8 @@ def get_historical_fused(
     # and removes the range-bound evaluation, but needs a SECOND
     # WindowExec below the orderBy(tsu) sliding aggregates — a
     # same-JVM alternating A/B at 48M turns put that design ~15-20%
-    # SLOWER than the single-WindowExec RANGE plan (tools/ab_fused.py;
-    # BENCH/BASELINE.md r3), so RANGE fill + one WindowExec stays. The
+    # SLOWER than the single-WindowExec RANGE plan (BENCH/BASELINE.md
+    # r3), so RANGE fill + one WindowExec stays. The
     # tie ordering IS used below for the filtered keep_previous lag
     # chains, whose `lag IGNORE NULLS` walk has no tie-aware frame
     # equivalent and was order-dependent without it (ADVICE r2).

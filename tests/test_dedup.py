@@ -103,13 +103,6 @@ class TestConnectedComponents:
         }
         assert got == {(i, 0) for i in range(10)}
 
-    def test_nonconvergence_raises_without_fallback(self, spark):
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(30)], "id_a long, id_b long"
-        )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(pairs, max_iter=2, fallback_star=False)
-
     def test_high_diameter_falls_back_to_star(self, spark):
         """Path graph of diameter 60: min-label propagation cannot
         converge in max_iter=4 rounds — the alternating-star fallback
@@ -126,10 +119,9 @@ class TestConnectedComponents:
         assert got == want
 
     def test_star_matches_label_propagation(self, spark):
-        """connected_components_star ≡ min-label propagation on a mixed
-        graph (cliques + chains + isolated edge)."""
-        from raptor_spark.functions.dedup import connected_components_star
-
+        """The star fallback ≡ min-label propagation on a mixed graph
+        (cliques + chains + isolated edge). The 9-node chain needs 8
+        hops, so ``max_iter=1`` forces the first call onto star."""
         edges = (
             [(a, b) for a in range(5) for b in range(a + 1, 5)]  # clique
             + [(10 + i, 11 + i) for i in range(8)]               # chain
@@ -137,14 +129,11 @@ class TestConnectedComponents:
             + [(60, 61), (61, 62), (60, 62)]                     # triangle
         )
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        star = {
-            (r["id"], r["cluster_rep"])
-            for r in connected_components_star(pairs).collect()
-        }
-        prop = {
-            (r["id"], r["cluster_rep"])
-            for r in connected_components(
-                pairs, max_iter=30, fallback_star=False
-            ).collect()
-        }
+        star, prop = (
+            {
+                (r["id"], r["cluster_rep"])
+                for r in connected_components(pairs, max_iter=m).collect()
+            }
+            for m in (1, 30)
+        )
         assert star == prop

@@ -8,9 +8,16 @@ local[8] vs local[32]) over the SAME parquet input and report:
 
     eff = (thr_4N / thr_N) / (4N / N)
 
-Writes BENCH/BASELINE.md and prints one JSON line.
+Each level also reports the timed run's shuffle read/write and
+memory/disk spill, read from the AppStatusStore (the UI is disabled, so
+the REST API is not available) with the warm-up's share subtracted.
+
+Writes BENCH/scaling_latest.md and prints one JSON line.
 
 Usage:  python tools/scaling_bench.py [--n-convs 60000] [--low 8 --high 32]
+            [--shuffle-partitions N]  (default 4 x cores per level)
+10x:    SPARK_GRAFT_DRIVER_MEM=8g python tools/scaling_bench.py \
+            --n-convs 20000000 --low 2 --high 8 --shuffle-partitions 256
 Child:  python tools/scaling_bench.py --run local[8] --input DIR  (internal)
 """
 
@@ -27,7 +34,30 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def child(master: str, input_dir: str, mode: str) -> None:
+def _stage_totals(spark) -> dict:
+    """Sum shuffle/spill bytes across all completed stages so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is fed async
+    store = sc._jsc.sc().statusStore()
+    # Spark 4.1 signature: stageList(statuses, details, withSummaries,
+    # unsortedQuantiles, taskStatus) — empty statuses = all stages
+    empty = sc._jvm.java.util.ArrayList()
+    no_q = sc._gateway.new_array(sc._jvm.double, 0)
+    tot = {"shuffle_read": 0, "shuffle_write": 0,
+           "mem_spill": 0, "disk_spill": 0}
+    it = store.stageList(empty, False, False, no_q, empty).iterator()
+    while it.hasNext():
+        s = it.next()
+        tot["shuffle_read"] += s.shuffleReadBytes()
+        tot["shuffle_write"] += s.shuffleWriteBytes()
+        tot["mem_spill"] += s.memoryBytesSpilled()
+        tot["disk_spill"] += s.diskBytesSpilled()
+    return tot
+
+
+def child(
+    master: str, input_dir: str, mode: str, shuffle_partitions: int | None
+) -> None:
     from pyspark.sql import functions as F
 
     from raptor_spark.session import get_spark
@@ -38,7 +68,8 @@ def child(master: str, input_dir: str, mode: str) -> None:
     # 4x cores: small per-task window buffers (no spill, short GC);
     # a real cluster sizes shuffle.partitions the same way
     spark = get_spark(
-        app=f"scaling_{cores}", master=master, shuffle_partitions=4 * cores
+        app=f"scaling_{cores}", master=master,
+        shuffle_partitions=shuffle_partitions or 4 * cores,
     )
     try:
         def force(df):
@@ -50,27 +81,35 @@ def child(master: str, input_dir: str, mode: str) -> None:
         # warmup: JVM + codegen on a slice, excluded from timing
         force(get_historical(src.limit(10_000), transcript_feature_set(), mode=mode))
         n_in = src.count()
+        base = _stage_totals(spark)
         t0 = time.perf_counter()
         force(get_historical(src, transcript_feature_set(), mode=mode))
         wall = time.perf_counter() - t0
+        after = _stage_totals(spark)
         print(json.dumps({
             "master": master, "cores": cores, "input_rows": n_in,
             "wall_s": round(wall, 3),
             "turns_per_sec": round(n_in / wall, 1),
+            **{f"{k}_mb": round((after[k] - base[k]) / 1e6, 1) for k in base},
         }))
     finally:
         spark.stop()
 
 
-def measure(cores: int, input_dir: str, mode: str) -> dict:
+def measure(
+    cores: int, input_dir: str, mode: str, shuffle_partitions: int | None
+) -> dict:
     env = dict(os.environ)
     # 16g: headroom above the narrow-row window buffers without the
-    # multi-second ParallelGC old-gen pauses a 48g heap produces
+    # multi-second ParallelGC old-gen pauses a 48g heap produces (the
+    # 480M-turn runs use 8g: see BENCH/BASELINE.md)
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    cmd = [sys.executable, os.path.abspath(__file__), "--run",
+           f"local[{cores}]", "--input", input_dir, "--mode", mode]
+    if shuffle_partitions:
+        cmd += ["--shuffle-partitions", str(shuffle_partitions)]
     out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--run", f"local[{cores}]",
-         "--input", input_dir, "--mode", mode],
-        capture_output=True, text=True, env=env, check=True,
+        cmd, capture_output=True, text=True, env=env, check=True,
     )
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(line)
@@ -88,6 +127,9 @@ def main() -> None:
     p.add_argument("--input-dir", default=None,
                    help="reuse an existing transcripts parquet dir")
     p.add_argument("--mode", choices=["exact", "bucketed"], default="exact")
+    p.add_argument("--shuffle-partitions", type=int, default=None,
+                   help="spark.sql.shuffle.partitions for every level "
+                   "(default: 4 x that level's cores)")
     # latest-run report; BENCH/BASELINE.md is the curated writeup
     p.add_argument("--out-md", default=os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -95,7 +137,7 @@ def main() -> None:
     args = p.parse_args()
 
     if args.run:
-        child(args.run, args.input, args.mode)
+        child(args.run, args.input, args.mode, args.shuffle_partitions)
         return
 
     if args.input_dir:
@@ -114,13 +156,14 @@ def main() -> None:
 
     # Interleave low/high reps (L,H,L,H,...) so a machine-drift burst
     # inflates adjacent reps on BOTH sides instead of systematically
-    # biasing whichever side happened to run during it (same lesson as
-    # tools/ab_fused.py's alternating same-JVM reps).
+    # biasing whichever side happened to run during it.
     lo_runs: list = []
     hi_runs: list = []
     for _ in range(args.reps):
-        lo_runs.append(measure(args.low, input_dir, args.mode))
-        hi_runs.append(measure(args.high, input_dir, args.mode))
+        lo_runs.append(
+            measure(args.low, input_dir, args.mode, args.shuffle_partitions))
+        hi_runs.append(
+            measure(args.high, input_dir, args.mode, args.shuffle_partitions))
 
     def best(runs: list) -> dict:
         b = min(runs, key=lambda r: r["wall_s"])
@@ -135,6 +178,7 @@ def main() -> None:
         "input": args.input_dir or f"generated n_convs={args.n_convs}",
         "input_rows": lo["input_rows"],
         "mode": args.mode,
+        "shuffle_partitions": args.shuffle_partitions or "4 x cores",
         "low": lo, "high": hi,
         "efficiency": round(eff, 3),
         "passes_0.8": eff >= 0.8,
