@@ -22,7 +22,10 @@ Spark-first realization for batch backfill:
    dict survives across batches inside one Python worker).
 3. Responses parse with ``from_json`` into the declared schema and
    **broadcast-join back to the spine** (the enrichment frame is
-   |distinct keys| rows — small by construction).
+   |distinct keys| rows). The broadcast is a hint, not left to the
+   optimizer: Spark picks the join before anything runs, from a size
+   estimate of the enrichment frame that scales with the spine, so
+   without the hint a large spine would be shuffled for the join.
 
 No network exists in this sandbox: tests and the driver query
 exercise the identical code path through ``file://`` URLs (urllib
@@ -32,6 +35,7 @@ files) plus an injectable ``fetcher`` for fault cases.
 
 from __future__ import annotations
 
+import hashlib
 import re
 import time
 from dataclasses import dataclass, field
@@ -79,7 +83,10 @@ def url_expr(template: str, key_cols: list[str]) -> Column:
 
     ``{key:<col>}`` substitutes that key column; ``{keys}`` substitutes
     every key column ';'-joined (the engine's composite-key encoding,
-    plans/replay.py P3). Unknown key names raise at build time.
+    plans/replay.py P3). The reference substitutes ``{keys}`` in
+    ``url.Values`` encoding (``name=value&...``) instead; a template
+    that needs that form spells it with ``{key:<col>}`` placeholders.
+    Unknown key names raise at build time.
     """
     parts: list[Column] = []
     pos = 0
@@ -154,22 +161,37 @@ def _http_fetch(url: str, cfg: RestSourceConfig) -> tuple[int, str]:
     raise RuntimeError(f"REST fetch failed after {cfg.retries} attempts: {url}") from last_exc
 
 
-def _cache_key(url: str, cfg: RestSourceConfig, fetcher) -> tuple:
+def _fetcher_key(fetcher) -> str:
+    """Digest of the pickled fetcher: a module-level function pickles
+    by reference, a closure by value with its code and captured cells.
+    Two closures that share a ``__qualname__`` but capture different
+    payloads get different keys, while every task's unpickled copy of
+    one fetcher gets the same key, so the cache still hits across tasks.
+    Unhashable callables key fine too."""
+    from pyspark import cloudpickle
+
+    return hashlib.sha256(cloudpickle.dumps(fetcher)).hexdigest()
+
+
+def _cache_key(url: str, cfg: RestSourceConfig, fetcher_key: str) -> tuple:
     # the response depends on the whole request shape, not the URL
     # alone — two configs POSTing different bodies to one URL (or two
     # different injected fetchers) must not serve each other's cached
     # payloads
-    return (
-        url, cfg.method, cfg.body, cfg.headers,
-        getattr(fetcher, "__qualname__", repr(fetcher)),
-    )
+    return (url, cfg.method, cfg.body, cfg.headers, fetcher_key)
 
 
 def _cached_fetch(
-    url: str, cfg: RestSourceConfig, fetcher: Callable[[str, RestSourceConfig], tuple[int, str]]
+    url: str,
+    cfg: RestSourceConfig,
+    fetcher: Callable[[str, RestSourceConfig], tuple[int, str]],
+    fetcher_key: str | None = None,
 ) -> tuple[int, str]:
+    """``fetcher(url, cfg)`` through the TTL cache. ``fetch_urls``
+    passes ``fetcher_key`` computed once on the driver; without it the
+    key is taken from ``fetcher`` on this call."""
     now = time.monotonic()
-    key = _cache_key(url, cfg, fetcher)
+    key = _cache_key(url, cfg, fetcher_key or _fetcher_key(fetcher))
     hit = _RESPONSE_CACHE.get(key)
     if hit is not None and now - hit[0] <= cfg.cache_ttl_s:
         return hit[1], hit[2]
@@ -197,6 +219,7 @@ def fetch_urls(
     import pandas as pd
 
     fetch = fetcher or _http_fetch
+    fetch_key = _fetcher_key(fetch)
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in keys_with_url.schema.fields]
         + ["_status int", "_payload string"]
@@ -210,7 +233,7 @@ def fetch_urls(
                     statuses.append(None)
                     payloads.append(None)
                     continue
-                status, text = _cached_fetch(str(url), cfg, fetch)
+                status, text = _cached_fetch(str(url), cfg, fetch, fetch_key)
                 statuses.append(status)
                 payloads.append(text)
             out = pdf.copy()
@@ -233,8 +256,17 @@ def rest_enrich(
     Plan shape (the 100 TB contract): ONE distinct over the key
     columns bounds every HTTP call; the fetch output is |distinct
     keys| rows and broadcast-joins back, so the corpus itself is never
-    shuffled for enrichment. NULL keys are left un-enriched (no URL to
-    build), mirroring the engine's null-key handling elsewhere.
+    shuffled for enrichment. The broadcast is forced because the
+    optimizer's size estimate of that frame scales with the spine (the
+    key count is unknown until the fetch runs); a key set too large to
+    broadcast is not handled. NULL keys are left un-enriched (no URL
+    to build), mirroring the engine's null-key handling elsewhere.
+    ``{keys}`` in the URL is ';'-joined,
+    not the reference's ``url.Values`` encoding (see ``url_expr``).
+
+    Raises ``ValueError`` at build time when a spine column other than
+    ``key_cols`` shares its name with ``rest_status`` or a field of
+    ``schema`` (the joined frame would carry it twice).
     """
     keys = (
         df.select(*key_cols)
@@ -250,4 +282,11 @@ def rest_enrich(
         F.col("_status").alias("rest_status"),
         F.from_json(F.col("_payload"), schema).alias("_e"),
     ).select(*key_cols, "rest_status", "_e.*")
+    added = {c.lower() for c in enriched.columns if c not in key_cols}
+    clash = sorted(c for c in df.columns if c not in key_cols and c.lower() in added)
+    if clash:
+        raise ValueError(
+            f"spine columns {clash} collide with the enrichment columns "
+            f"{sorted(added)}; rename or drop them before rest_enrich"
+        )
     return df.join(F.broadcast(enriched), on=key_cols, how="left")

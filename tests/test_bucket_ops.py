@@ -1,5 +1,6 @@
 """HLL approx-distinct window accuracy and bucket-write dedup (J6)."""
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from raptor_spark.operators.window_agg import (
@@ -71,6 +72,47 @@ def test_dedup_bucket_writes_deterministic_ties(spark):
         for r in dedup_bucket_writes(a, order_col="flush").collect()
     }
     assert gc[("k1",)] == 2.0 and gc[("k2",)] == 5.0
+
+
+@st.composite
+def flush_logs(draw, max_rows=30):
+    """Bucket writes in random order: (keys, bucket, alive, flush_seq,
+    value) with flush_seq a permutation, so every flush is distinct."""
+    n = draw(st.integers(1, max_rows))
+    ids = st.lists(st.tuples(st.sampled_from(["k1", "k2"]), st.integers(0, 2),
+                             st.booleans()), min_size=n, max_size=n)
+    seqs = draw(st.permutations(range(n)))
+    return [(k, b, alive, seq, float(i))
+            for i, ((k, b, alive), seq) in enumerate(zip(draw(ids), seqs))]
+
+
+def merge_replay(log):
+    """The reference's cleanup MERGE applied one flush at a time, in
+    flush order: a dead (final) source deletes a matched alive target
+    and is inserted; a same-flag source replaces the target (highest
+    flush wins); an alive source never reopens a dead target."""
+    target = {}
+    for k, b, alive, seq, val in sorted(log, key=lambda r: r[3]):
+        cur = target.get((k, b))
+        if cur is None or cur[0] == alive or (cur[0] and not alive):
+            target[(k, b)] = (alive, seq, val)
+    return target
+
+
+class TestDedupBucketWritesIsMerge:
+    @settings(max_examples=25, deadline=None)
+    @given(log=flush_logs(), parts=st.integers(1, 4))
+    def test_matches_sequential_merge(self, spark, log, parts):
+        fv = spark.createDataFrame(
+            [("f", k, b, alive, seq, val) for k, b, alive, seq, val in log],
+            "fqn string, keys string, bucket long, bucket_active boolean,"
+            " flush long, value double",
+        ).repartition(parts)
+        got = {
+            (r["keys"], r["bucket"]): (r["bucket_active"], r["flush"], r["value"])
+            for r in dedup_bucket_writes(fv, order_col="flush").collect()
+        }
+        assert got == merge_replay(log)
 
 
 def test_sliding_agg_exact_rejects_empty_window(spark):

@@ -143,6 +143,7 @@ def test_rest_enrich_malformed_payload_yields_null_fields(spark, tmp_path):
 
 
 def test_rest_enrich_plan_broadcasts_enrichment(spark, tmp_path):
+    """The final (post-AQE) plan broadcasts the enrichment frame."""
     d = _fixture_dir(tmp_path, {1: {"v": 1}})
     spine = spark.createDataFrame([(1,)], "user_id int")
     out = rest_enrich(
@@ -151,8 +152,68 @@ def test_rest_enrich_plan_broadcasts_enrichment(spark, tmp_path):
         "v int",
         ["user_id"],
     )
+    out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def test_rest_enrich_never_shuffles_a_large_spine(spark, tmp_path):
+    """A parquet spine whose size estimate is past the broadcast
+    threshold but that holds only 3 keys: the optimizer's estimate of
+    the enrichment frame scales with the spine, so without the
+    broadcast hint the join would be planned as a shuffle join and
+    the spine shuffle-written before AQE could demote it. The spine
+    (left) side of the executed join must hold no exchange."""
+    d = _fixture_dir(tmp_path, {k: {"v": k} for k in range(3)})
+    path = str(tmp_path / "spine")
+    spark.range(20_000).select(
+        (F.col("id") % 3).cast("int").alias("user_id"), F.col("id").alias("x")
+    ).write.parquet(path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")  # the spine's parquet files are larger
+    try:
+        out = rest_enrich(
+            spark.read.parquet(path),
+            RestSourceConfig(url=f"file://{d}/{{key:user_id}}.json"),
+            "v int",
+            ["user_id"],
+        )
+        assert out.where(F.col("v") == F.col("user_id")).count() == 20_000
+        out.collect()
+        final = out._jdf.queryExecution().executedPlan().executedPlan()
+    finally:
+        spark.conf.set(key, old)
+    joins = [n for n in _nodes(final) if n.nodeName().endswith("Join")]
+    assert len(joins) == 1, [n.nodeName() for n in joins]
+    spine_side = joins[0].left().toString()
+    for shuffle in ("Exchange", "QueryStage", "ShuffleRead"):
+        assert shuffle not in spine_side, spine_side
+
+
+def _nodes(plan):
+    """Every node of a JVM physical plan, pre-order, looking inside
+    AQE's query stages (leaves whose stage plan is ``plan()``)."""
+    yield plan
+    if plan.nodeName().endswith("QueryStage"):
+        yield from _nodes(plan.plan())
+        return
+    it = plan.children().iterator()
+    while it.hasNext():
+        yield from _nodes(it.next())
+
+
+def test_rest_enrich_spine_column_collision_raises(spark, tmp_path):
+    d = _fixture_dir(tmp_path, {1: {"plan": "pro"}})
+    cfg = RestSourceConfig(url=f"file://{d}/{{key:user_id}}.json")
+    for clash in ("plan", "rest_status", "PLAN"):
+        spine = spark.createDataFrame([(1, "x")], f"user_id int, {clash} string")
+        with pytest.raises(ValueError, match="collide"):
+            rest_enrich(spine, cfg, "plan string", ["user_id"])
+    # a non-clashing extra spine column still enriches
+    spine = spark.createDataFrame([(1, "x")], "user_id int, event string")
+    assert rest_enrich(spine, cfg, "plan string", ["user_id"]).first()["plan"] == "pro"
 
 
 def test_http_fetch_retries_connection_errors_n_times(monkeypatch):
@@ -226,6 +287,53 @@ def test_cache_key_includes_request_shape():
     assert rest_mod._cached_fetch("http://x/4", post, fetch_b) == (200, "B")
     # same URL+cfg, different fetcher -> different cache slot
     assert rest_mod._cached_fetch("http://x/4", get, fetch_b) == (200, "B")
+
+
+def test_cache_key_distinguishes_closures_with_one_qualname():
+    import pickle
+
+    from pyspark import cloudpickle
+
+    from raptor_spark.sources import rest as rest_mod
+
+    calls = []
+
+    def make(payload):
+        def fetch(url, cfg):
+            calls.append(payload)
+            return 200, payload
+        return fetch
+
+    a, b = make("A"), make("B")
+    assert a.__qualname__ == b.__qualname__
+    ka, kb = rest_mod._fetcher_key(a), rest_mod._fetcher_key(b)
+    assert ka != kb
+    # a task's unpickled copy of a fetcher keys like the original, so
+    # the cache hits across tasks
+    assert rest_mod._fetcher_key(pickle.loads(cloudpickle.dumps(a))) == ka
+    cfg = RestSourceConfig(url="http://x/")
+    assert rest_mod._cached_fetch("http://x/5", cfg, a, ka) == (200, "A")
+    assert rest_mod._cached_fetch("http://x/5", cfg, b, kb) == (200, "B")
+    assert rest_mod._cached_fetch("http://x/5", cfg, a, ka) == (200, "A")
+    assert calls == ["A", "B"]
+
+
+def test_cache_accepts_unhashable_fetcher():
+    from raptor_spark.sources import rest as rest_mod
+
+    class Fetch:
+        def __init__(self, payload):
+            self.payload = payload
+
+        def __eq__(self, other):  # defines __eq__ only: unhashable
+            return isinstance(other, Fetch) and other.payload == self.payload
+
+        def __call__(self, url, cfg):
+            return 200, self.payload
+
+    cfg = RestSourceConfig(url="http://x/")
+    assert rest_mod._cached_fetch("http://x/6", cfg, Fetch("C")) == (200, "C")
+    assert rest_mod._cached_fetch("http://x/6", cfg, Fetch("D")) == (200, "D")
 
 
 def test_missing_file_maps_to_404_not_crash(spark, tmp_path):

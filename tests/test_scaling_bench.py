@@ -8,17 +8,32 @@ from pyspark.sql import functions as F
 from tools.scaling_bench import _stage_totals
 
 
+def _run_in_group(spark, group, df):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_stage_totals_grow_with_a_shuffle(spark):
-    # The session's status store keeps at most spark.ui.retainedStages
-    # stages; evicting old ones between the two reads lowers the sums.
-    # An eviction drops at least a tenth of that limit, so it cannot hit
-    # every one of three consecutive two-stage read pairs.
-    for _ in range(3):
-        base = _stage_totals(spark)
-        spark.range(10_000).groupBy((F.col("id") % 7).alias("k")).count().collect()
-        after = _stage_totals(spark)
-        if all(after[k] >= base[k] for k in base):
-            break
-    assert set(after) == {"shuffle_read", "shuffle_write", "mem_spill", "disk_spill"}
-    assert after["shuffle_write"] > base["shuffle_write"]
-    assert all(after[k] >= base[k] for k in base), (base, after)
+    _run_in_group(spark, "stage_totals_grow",
+                  spark.range(10_000).groupBy((F.col("id") % 7).alias("k")).count())
+    tot = _stage_totals(spark, "stage_totals_grow")
+    assert set(tot) == {"shuffle_read", "shuffle_write", "mem_spill", "disk_spill"}
+    assert tot["shuffle_write"] > 0 and tot["shuffle_read"] > 0
+
+
+def test_stage_totals_counts_only_its_group(spark):
+    _run_in_group(spark, "stage_totals_a",
+                  spark.range(10_000).groupBy((F.col("id") % 7).alias("k")).count())
+    _run_in_group(spark, "stage_totals_b", spark.range(1_000).where(F.col("id") % 3 == 0))
+    a = _stage_totals(spark, "stage_totals_a")
+    # a later shuffle in another group adds nothing to group a's sums
+    _run_in_group(spark, "stage_totals_c",
+                  spark.range(20_000).groupBy((F.col("id") % 5).alias("k")).count())
+    assert a["shuffle_write"] > 0
+    assert _stage_totals(spark, "stage_totals_a") == a
+    assert _stage_totals(spark, "stage_totals_b")["shuffle_write"] == 0
+    assert _stage_totals(spark, "no_such_group") == dict.fromkeys(a, 0)

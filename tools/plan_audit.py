@@ -26,9 +26,11 @@ NOTES = {
     "rest_enrich": (
         "S5 REST enrichment: ONE distinct over the key columns bounds "
         "every HTTP call (fetch fan-out = |distinct keys|, never per "
-        "spine row); the |keys|-row fetched frame broadcast-joins back, "
-        "so the spine is never shuffled for enrichment. The only "
-        "Python is the Arrow-batched fetch loop itself."
+        "spine row); the |keys|-row fetched frame broadcast-joins back "
+        "(a hint: the optimizer's size estimate of that frame scales "
+        "with the spine), so the spine is never shuffled for "
+        "enrichment. The only Python is the Arrow-batched fetch loop "
+        "itself."
     ),
     "backfill_wide": (
         "Fused single-pass PIT plan: every per-row expr is projected "

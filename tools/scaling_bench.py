@@ -34,10 +34,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _stage_totals(spark) -> dict:
-    """Sum shuffle/spill bytes across all completed stages so far."""
+def _stage_totals(spark, group: str) -> dict:
+    """Sum shuffle/spill bytes across the stages of job group
+    ``group``'s jobs. Scoping to one group, rather than taking a
+    before/after delta of all stages, stays exact when the status
+    store evicts old stages past ``spark.ui.retainedStages``."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is fed async
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stage_ids = {s for j in jobs if j is not None for s in j.stageIds}
     store = sc._jsc.sc().statusStore()
     # Spark 4.1 signature: stageList(statuses, details, withSummaries,
     # unsortedQuantiles, taskStatus) — empty statuses = all stages
@@ -48,6 +54,8 @@ def _stage_totals(spark) -> dict:
     it = store.stageList(empty, False, False, no_q, empty).iterator()
     while it.hasNext():
         s = it.next()
+        if s.stageId() not in stage_ids:
+            continue
         tot["shuffle_read"] += s.shuffleReadBytes()
         tot["shuffle_write"] += s.shuffleWriteBytes()
         tot["mem_spill"] += s.memoryBytesSpilled()
@@ -58,8 +66,7 @@ def _stage_totals(spark) -> dict:
 def child(
     master: str, input_dir: str, mode: str, shuffle_partitions: int | None
 ) -> None:
-    from pyspark.sql import functions as F
-
+    from bench import _force
     from raptor_spark.session import get_spark
     from raptor_spark.plans.historical import get_historical
     from raptor_spark.backfill import transcript_feature_set
@@ -72,25 +79,20 @@ def child(
         shuffle_partitions=shuffle_partitions or 4 * cores,
     )
     try:
-        def force(df):
-            # agg over the hash: unpruneable (select(hash).count() lets
-            # Catalyst drop the projection AND the window compute above)
-            df.agg(F.bit_xor(F.xxhash64(*df.columns)).alias("h")).collect()
-
         src = spark.read.parquet(input_dir)
         # warmup: JVM + codegen on a slice, excluded from timing
-        force(get_historical(src.limit(10_000), transcript_feature_set(), mode=mode))
+        _force(get_historical(src.limit(10_000), transcript_feature_set(), mode=mode))
         n_in = src.count()
-        base = _stage_totals(spark)
+        spark.sparkContext.setJobGroup("scaling_bench timed", "timed run")
         t0 = time.perf_counter()
-        force(get_historical(src, transcript_feature_set(), mode=mode))
+        _force(get_historical(src, transcript_feature_set(), mode=mode))
         wall = time.perf_counter() - t0
-        after = _stage_totals(spark)
+        tot = _stage_totals(spark, "scaling_bench timed")
         print(json.dumps({
             "master": master, "cores": cores, "input_rows": n_in,
             "wall_s": round(wall, 3),
             "turns_per_sec": round(n_in / wall, 1),
-            **{f"{k}_mb": round((after[k] - base[k]) / 1e6, 1) for k in base},
+            **{f"{k}_mb": round(v / 1e6, 1) for k, v in tot.items()},
         }))
     finally:
         spark.stop()
