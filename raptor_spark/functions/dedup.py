@@ -16,8 +16,11 @@ MinHash+LSH, SimHash, n-gram Jaccard. Designed for 100 TB corpora:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .rounding import round6
 from .text import fingerprint
@@ -387,38 +390,64 @@ def connected_components(
     b_col: str = "id_b",
     max_iter: int = 20,
 ) -> DataFrame:
-    """Duplicate clusters from candidate pairs: connected components by
-    min-label propagation. Returns (id, cluster_rep = min id in the
-    component).
+    """Duplicate clusters from candidate pairs: connected components,
+    as (id, cluster_rep = min id in the component) for every id that
+    appears in a pair.
 
-    Each iteration: every node adopts the min label among itself and
-    its neighbors (one join + groupBy-min per round); converges in
-    O(diameter) ≤ O(log n) rounds for near-dup graphs (components are
-    tiny cliques/chains). Driver loop with early exit when a round
-    changes nothing — at 10⁹ edges each round is two shuffles.
+    The pairs become a deduplicated both-direction edge list (src, dst),
+    materialized ONCE by ``localCheckpoint`` with its row count observed
+    on that same pass. The count picks the path:
 
-    The convergence check rides the label-update pass: a ``_changed``
-    flag is computed inside the update join, the result is
-    localCheckpoint'ed (materialized), and the changed-count is a cheap
-    scan of the cached partitions — no extra join, no recompute.
-    If labels have not converged after ``max_iter`` rounds (a
-    high-diameter graph), the same edge list is handed to alternating
-    large/small star, which converges on any graph in O(log² n) rounds.
-    Raises ``RuntimeError`` only if star has not converged within
-    ``max(2 * max_iter, 50)`` rounds (silent truncation would return
-    WRONG cluster labels).
+    - **driver**, when ``rows × 16 B`` (two 8-byte ids) ≤ the session's
+      ``spark.sql.autoBroadcastJoinThreshold``: one collect, then a
+      vectorized numpy solve (``_local_components``), returned as a
+      local DataFrame. The broadcast threshold is the bound because it
+      is Spark's own "fits on the driver" rule — an edge list under it
+      is one Spark would already ship whole to every executor for a
+      join. A threshold ≤ 0 (broadcasts off) disables this path.
+    - **distributed**, for anything larger: min-label propagation, two
+      hops (join + groupBy-min each) per localCheckpoint'ed round,
+      stopping once a round changes nothing — O(diameter) hops, each
+      two shuffles at 10⁹ edges. A round's changed count is an
+      Observation on its checkpoint, so the convergence test costs no
+      job of its own. If labels have not converged after ``max_iter``
+      hops (a high-diameter graph), the same edge list goes to
+      alternating large/small star, which converges on any graph in
+      O(log² n) rounds. Raises ``RuntimeError`` only if star has not
+      converged within ``max(2 * max_iter, 50)`` rounds (silent
+      truncation would return WRONG cluster labels).
+
+    Both paths return the same rows. An empty pair set returns an empty
+    frame before either runs.
     """
     # materialize the edge list ONCE — every propagation round joins
     # against it, and without the checkpoint each round would recompute
-    # the entire upstream pipeline (e.g. the MinHash candidate pass)
+    # the entire upstream pipeline (e.g. the MinHash candidate pass).
+    # The observation is the checkpointed plan's root, so AQE cannot
+    # drop it along with an empty subtree.
+    sized = Observation()
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
             pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
         )
         .distinct()
+        .observe(sized, F.count(F.lit(1)).alias("rows"))
         .localCheckpoint(eager=True)
     )
+    id_type = edges.schema["src"].dataType
+    schema = StructType(
+        [StructField("id", id_type), StructField("cluster_rep", id_type)]
+    )
+    spark = edges.sparkSession
+    rows = sized.get["rows"]
+    if rows == 0:
+        return spark.createDataFrame([], schema)
+    # the parsed long: the string conf echoes what was set ("10MB", "-1")
+    conf = spark._jsparkSession.sessionState().conf()
+    if rows * 16 <= conf.autoBroadcastJoinThreshold():
+        return spark.createDataFrame(_local_components(edges.toArrow()), schema)
+
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -443,17 +472,20 @@ def connected_components(
     # two propagation hops per checkpoint round: the fixpoint test only
     # needs the LAST hop's changed flag (an update pass with no changes
     # IS the fixpoint), so batching hops halves the per-round
-    # checkpoint + count job overhead that dominates on small rounds.
+    # checkpoint overhead that dominates on small rounds.
     hops = 2
     changed = 1
     for _ in range(-(-max_iter // hops)):
         new_labels = labels
         for _ in range(hops):
             new_labels = _update(new_labels.drop("_changed"))
-        new_labels = new_labels.localCheckpoint(eager=True)  # cut lineage
-        # checkpointed → this count scans cached partitions, no recompute
-        changed = new_labels.filter("_changed").limit(1).count()
-        labels = new_labels.drop("_changed")
+        flag = Observation()
+        labels = (
+            new_labels.observe(flag, F.count_if("_changed").alias("changed"))
+            .localCheckpoint(eager=True)  # cut lineage
+            .drop("_changed")
+        )
+        changed = flag.get["changed"]
         if changed == 0:
             break
     if changed != 0:
@@ -462,6 +494,35 @@ def connected_components(
         # algorithm on the already-checkpointed edge list
         return _star_components(edges, max_iter=max(2 * max_iter, 50))
     return labels.select(F.col("id"), F.col("label").alias("cluster_rep"))
+
+
+def _local_components(edges: pa.Table) -> pa.Table:
+    """Connected components of a collected both-direction edge list
+    (src, dst) → (id, cluster_rep = min id in the component).
+
+    Ids map to dense indices in id order (``np.unique``), so the min
+    index of a component is its min id. Each pass hooks every node onto
+    the smallest label among its neighbors (``np.minimum.at``), then
+    jumps pointers (``lab = lab[lab]``) until every label is a root;
+    passes repeat until one changes nothing. A label only ever moves to
+    a smaller index in the same component, and at the fixpoint both
+    ends of every edge share a label, so each component is labelled by
+    its minimum."""
+    src = edges.column("src").to_numpy()
+    ids, idx = np.unique(
+        np.concatenate([src, edges.column("dst").to_numpy()]),
+        return_inverse=True,
+    )
+    s, d = idx[: len(src)], idx[len(src):]
+    lab = np.arange(len(ids))
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, s, lab[d])
+        while not np.array_equal(jumped := lab[lab], lab):
+            lab = jumped
+        if np.array_equal(lab, prev):
+            break
+    return pa.table({"id": ids, "cluster_rep": ids[lab]})
 
 
 def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -850,13 +911,16 @@ def keep_cluster_representatives(
     representative (min id) per cluster plus every unclustered row.
 
     Plan shape (100 TB): the CC stages touch only the candidate
-    subgraph (a small fraction of the corpus); the corpus-side filter
-    is a **broadcast LEFT ANTI join** against the non-representative
-    ids and a broadcast left join against per-rep cluster sizes — the
-    full corpus is ONE scan with map-side probes, no corpus shuffle.
-    The CC result is localCheckpoint'ed inside
-    ``connected_components``, so its double use (losers + sizes) costs
-    nothing extra.
+    subgraph (a small fraction of the corpus). While its edge list is
+    under the broadcast threshold that subgraph is solved on the driver
+    in one collect; past it, label propagation runs distributed (see
+    ``connected_components``). The corpus-side filter is a **broadcast
+    LEFT ANTI join** against the non-representative ids and a broadcast
+    left join against per-rep cluster sizes — the full corpus is ONE
+    scan with map-side probes, no corpus shuffle. The CC result is a
+    local relation (driver path) or localCheckpoint'ed labels
+    (distributed path), so its double use (losers + sizes) recomputes
+    nothing.
 
     Returns one row per SURVIVING input row: ``(id_col,
     cluster_size)`` — cluster_size = number of input rows this

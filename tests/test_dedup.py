@@ -7,7 +7,10 @@ an LLM-data-pipeline extension required by the brief); semantics are
 pinned by the DuckDB oracles in raptor_spark/queries.py.
 """
 
+from contextlib import contextmanager, nullcontext
+
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -91,6 +94,44 @@ class TestLshBucketCap:
         assert n == 20 * 19 // 2
 
 
+@contextmanager
+def _distributed(spark):
+    """Broadcasts off: ``connected_components`` skips its driver path
+    and runs label propagation (and star, when that does not converge)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _components(pairs, **kw):
+    return {
+        (r["id"], r["cluster_rep"])
+        for r in connected_components(pairs, **kw).collect()
+    }
+
+
+def _union_find(edges):
+    """Pure-Python reference: {(id, min id of its component)}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in list(parent)}
+
+
 class TestConnectedComponents:
     def test_chain_converges(self, spark):
         # path graph 0-1-2-...-9: one component, rep 0
@@ -111,10 +152,8 @@ class TestConnectedComponents:
             [(i, i + 1) for i in range(60)] + [(100, 101), (101, 102)],
             "id_a long, id_b long",
         )
-        got = {
-            (r["id"], r["cluster_rep"])
-            for r in connected_components(pairs, max_iter=4).collect()
-        }
+        with _distributed(spark):
+            got = _components(pairs, max_iter=4)
         want = {(i, 0) for i in range(61)} | {(i, 100) for i in (100, 101, 102)}
         assert got == want
 
@@ -129,11 +168,62 @@ class TestConnectedComponents:
             + [(60, 61), (61, 62), (60, 62)]                     # triangle
         )
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        star, prop = (
-            {
-                (r["id"], r["cluster_rep"])
-                for r in connected_components(pairs, max_iter=m).collect()
-            }
-            for m in (1, 30)
-        )
+        with _distributed(spark):
+            star, prop = (_components(pairs, max_iter=m) for m in (1, 30))
         assert star == prop
+
+    @settings(max_examples=12, deadline=None)
+    @given(
+        edges=st.lists(
+            st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=40
+        )
+    )
+    def test_paths_match_union_find(self, spark, edges):
+        """Random graphs — duplicate and reversed pairs, self-pairs,
+        disconnected pieces, the empty graph: the driver path, the
+        distributed path and a union-find reference agree."""
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        local = _components(pairs)
+        with _distributed(spark):
+            dist = _components(pairs, max_iter=6)
+        assert local == dist == _union_find(edges)
+
+    @pytest.mark.parametrize("distributed", [False, True])
+    def test_empty_pairs(self, spark, distributed):
+        """No pairs, from a literal and from a filter after a shuffle
+        join (a plan AQE proves empty at run time): an empty result
+        with the id type, on both paths."""
+        literal = spark.createDataFrame([], "id_a long, id_b long")
+        left = spark.range(50).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )
+        right = spark.range(100, 150).select(F.col("id").alias("id_a"))
+        joined = left.join(right.repartition(3), "id_a").where(F.col("id_b") > 0)
+        for pairs in (literal, joined):
+            with _distributed(spark) if distributed else nullcontext():
+                out = connected_components(pairs)
+            assert out.collect() == []
+            assert out.schema.simpleString() == "struct<id:bigint,cluster_rep:bigint>"
+
+    def test_job_counts_per_path(self, spark):
+        """On a small graph the driver path runs the edge checkpoint
+        (its distinct's shuffle-map job and the checkpoint job) and one
+        collect; with broadcasts off the propagation rounds run too."""
+        sc = spark.sparkContext
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+        )
+
+        def jobs(group):
+            sc.setJobGroup(group, group)
+            try:
+                connected_components(pairs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert jobs("cc-driver-path") == 3
+        with _distributed(spark):
+            assert jobs("cc-distributed-path") > 3

@@ -217,9 +217,12 @@ NOTES = {
     "fuzzy_dedup": (
         "End-to-end dedup: LSH pair generation + CC run on the "
         "candidate subgraph only (banded, capped buckets; edges "
-        "localCheckpoint'ed once, label propagation batched 2 hops/ "
-        "round — the audited plan shows the final stage because CC's "
-        "driver loop materialized upstream). Corpus-side filter is an "
+        "localCheckpoint'ed once with their row count observed; an "
+        "edge list under the broadcast threshold is collected and "
+        "solved on the driver, a larger one runs label propagation "
+        "batched 2 hops/round — either way the audited plan shows only "
+        "the final stage, as CC materialized upstream at build time). "
+        "Corpus-side filter is an "
         "explicit broadcast LEFT ANTI join against the small "
         "duplicate-id set + a broadcast left join for cluster sizes: "
         "the full corpus is ONE scan with map-side probes."
