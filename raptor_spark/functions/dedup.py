@@ -385,10 +385,7 @@ def dedup_against_corpus(
 
 
 def connected_components(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 20,
+    pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: connected components,
     as (id, cluster_rep = min id in the component) for every id that
@@ -405,24 +402,16 @@ def connected_components(
       is Spark's own "fits on the driver" rule — an edge list under it
       is one Spark would already ship whole to every executor for a
       join. A threshold ≤ 0 (broadcasts off) disables this path.
-    - **distributed**, for anything larger: min-label propagation, two
-      hops (join + groupBy-min each) per localCheckpoint'ed round,
-      stopping once a round changes nothing — O(diameter) hops, each
-      two shuffles at 10⁹ edges. A round's changed count is an
-      Observation on its checkpoint, so the convergence test costs no
-      job of its own. If labels have not converged after ``max_iter``
-      hops (a high-diameter graph), the same edge list goes to
-      alternating large/small star, which converges on any graph in
-      O(log² n) rounds. Raises ``RuntimeError`` only if star has not
-      converged within ``max(2 * max_iter, 50)`` rounds (silent
-      truncation would return WRONG cluster labels).
+    - **distributed**, for anything larger: alternating large/small
+      star (``_star_components``), O(log² n) rounds on any graph
+      whatever its diameter, one checkpoint per round.
 
-    Both paths return the same rows. An empty pair set returns an empty
-    frame before either runs.
+    Both paths return the same rows; an empty pair set gives an empty
+    frame on either.
     """
-    # materialize the edge list ONCE — every propagation round joins
-    # against it, and without the checkpoint each round would recompute
-    # the entire upstream pipeline (e.g. the MinHash candidate pass).
+    # materialize the edge list ONCE — every star round starts from it,
+    # and without the checkpoint each would recompute the entire
+    # upstream pipeline (e.g. the MinHash candidate pass).
     # The observation is the checkpointed plan's root, so AQE cannot
     # drop it along with an empty subtree.
     sized = Observation()
@@ -435,65 +424,18 @@ def connected_components(
         .observe(sized, F.count(F.lit(1)).alias("rows"))
         .localCheckpoint(eager=True)
     )
-    id_type = edges.schema["src"].dataType
-    schema = StructType(
-        [StructField("id", id_type), StructField("cluster_rep", id_type)]
-    )
     spark = edges.sparkSession
-    rows = sized.get["rows"]
-    if rows == 0:
-        return spark.createDataFrame([], schema)
     # the parsed long: the string conf echoes what was set ("10MB", "-1")
     conf = spark._jsparkSession.sessionState().conf()
-    if rows * 16 <= conf.autoBroadcastJoinThreshold():
+    if sized.get["rows"] * 16 <= conf.autoBroadcastJoinThreshold():
+        id_type = edges.schema["src"].dataType
+        schema = StructType(
+            [StructField("id", id_type), StructField("cluster_rep", id_type)]
+        )
+        # an Arrow table becomes a LocalRelation whose size Spark knows,
+        # so joins against the result plan as broadcasts without a hint
         return spark.createDataFrame(_local_components(edges.toArrow()), schema)
-
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    def _update(lbl: DataFrame) -> DataFrame:
-        neighbor_min = (
-            edges.join(lbl, edges["dst"] == lbl["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        return lbl.join(
-            neighbor_min, lbl["id"] == neighbor_min["src"], "left"
-        ).select(
-            "id",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-            ).alias("label"),
-            (F.col("nmin") < F.col("label")).alias("_changed"),
-        )
-
-    # two propagation hops per checkpoint round: the fixpoint test only
-    # needs the LAST hop's changed flag (an update pass with no changes
-    # IS the fixpoint), so batching hops halves the per-round
-    # checkpoint overhead that dominates on small rounds.
-    hops = 2
-    changed = 1
-    for _ in range(-(-max_iter // hops)):
-        new_labels = labels
-        for _ in range(hops):
-            new_labels = _update(new_labels.drop("_changed"))
-        flag = Observation()
-        labels = (
-            new_labels.observe(flag, F.count_if("_changed").alias("changed"))
-            .localCheckpoint(eager=True)  # cut lineage
-            .drop("_changed")
-        )
-        changed = flag.get["changed"]
-        if changed == 0:
-            break
-    if changed != 0:
-        # high-diameter graph (min-label propagation needs
-        # O(diameter) rounds) → the O(log²)-round alternating-star
-        # algorithm on the already-checkpointed edge list
-        return _star_components(edges, max_iter=max(2 * max_iter, 50))
-    return labels.select(F.col("id"), F.col("label").alias("cluster_rep"))
+    return _star_components(edges)
 
 
 def _local_components(edges: pa.Table) -> pa.Table:
@@ -525,36 +467,26 @@ def _local_components(edges: pa.Table) -> pa.Table:
     return pa.table({"id": ids, "cluster_rep": ids[lab]})
 
 
-def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Alternating large-star / small-star connected components over a
-    materialized BOTH-DIRECTIONS edge list (src, dst): per round every
-    node hooks its larger neighbors (large-star), then its smaller
-    neighbors and itself (small-star), onto the minimum of its closed
-    neighborhood. Each round is large-star ∘ small-star; the
-    fixpoint is a forest of stars whose centers are the component
-    minima. Convergence test: canonical-edge-set checksum (count +
-    xor of row hashes) — an order-independent aggregate on the freshly
-    checkpointed round output, no join."""
-    # canonical (hi, lo): hi > lo
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("hi"),
-            F.least("src", "dst").alias("lo"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .localCheckpoint(eager=True)
-    )
+# Safety cap, not a knob: alternating star needs O(log² n) rounds, and
+# stopping short would return WRONG cluster labels, so hitting it raises.
+_STAR_MAX_ROUNDS = 50
 
-    def _checksum(df: DataFrame) -> tuple:
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("hi", "lo")).alias("h"),
-        ).first()
-        return (r["n"], r["h"])
+
+def _star_components(edges: DataFrame) -> DataFrame:
+    """Alternating large-star / small-star connected components
+    (Kiveris et al., SoCC 2014) over a checkpointed, distinct,
+    BOTH-DIRECTIONS edge list (src, dst): per round every node hooks
+    its larger neighbors (large-star), then its smaller neighbors and
+    itself (small-star), onto the minimum of its closed neighborhood.
+    The fixpoint is a forest of stars whose centers are the component
+    minima. Each round's canonical edge set is checkpointed with its
+    checksum (count + xor of row hashes, order-independent) observed on
+    that same pass; two consecutive equal checksums end the loop."""
+    # canonical (hi, lo), hi > lo: the list is distinct and symmetric,
+    # so one direction of each non-self edge is already a set
+    e = edges.where(F.col("src") > F.col("dst")).select(
+        F.col("src").alias("hi"), F.col("dst").alias("lo")
+    )
 
     def _large_star(cur: DataFrame) -> DataFrame:
         b = cur.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
@@ -588,19 +520,29 @@ def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
         )
         return out
 
-    prev = _checksum(e)
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        cur = _checksum(e)
+    prev = None
+    for _ in range(_STAR_MAX_ROUNDS):
+        sums = Observation()
+        e = (
+            _small_star(_large_star(e))
+            .observe(
+                sums,
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(F.xxhash64("hi", "lo")).alias("h"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        cur = sums.get
         if cur == prev:
             break
         prev = cur
     else:
         raise RuntimeError(
-            f"star components did not converge in {max_iter} rounds"
+            f"star components did not converge in {_STAR_MAX_ROUNDS} rounds"
         )
     # fixpoint edges are (member, center): label = center, centers and
     # isolated-in-final nodes label themselves
+    nodes = edges.select(F.col("src").alias("id")).distinct()
     return nodes.join(
         e.select(F.col("hi").alias("id"), F.col("lo").alias("rep")), "id", "left"
     ).select("id", F.coalesce(F.col("rep"), F.col("id")).alias("cluster_rep"))
@@ -913,14 +855,17 @@ def keep_cluster_representatives(
     Plan shape (100 TB): the CC stages touch only the candidate
     subgraph (a small fraction of the corpus). While its edge list is
     under the broadcast threshold that subgraph is solved on the driver
-    in one collect; past it, label propagation runs distributed (see
-    ``connected_components``). The corpus-side filter is a **broadcast
-    LEFT ANTI join** against the non-representative ids and a broadcast
-    left join against per-rep cluster sizes — the full corpus is ONE
-    scan with map-side probes, no corpus shuffle. The CC result is a
-    local relation (driver path) or localCheckpoint'ed labels
-    (distributed path), so its double use (losers + sizes) recomputes
-    nothing.
+    in one collect; past it, alternating star runs distributed (see
+    ``connected_components``). The corpus-side filter is a LEFT ANTI
+    join against the non-representative ids and a left join against
+    per-rep cluster sizes, with no hints: the driver path returns a
+    local relation whose size Spark knows, so both joins plan as
+    broadcasts — the full corpus is ONE scan with map-side probes — and
+    the distributed path's frames, about as large as the candidate
+    node set, are left to Spark's join planning instead of being forced
+    into a broadcast. The CC result is a local relation (driver path)
+    or a left join of checkpointed frames (distributed path), so its
+    double use (losers + sizes) recomputes no CC round.
 
     Returns one row per SURVIVING input row: ``(id_col,
     cluster_size)`` — cluster_size = number of input rows this
@@ -935,12 +880,8 @@ def keep_cluster_representatives(
     )
     return (
         df.select(id_col)
-        .join(F.broadcast(losers), id_col, "left_anti")
-        .join(
-            F.broadcast(sizes.withColumnRenamed("cluster_rep", id_col)),
-            id_col,
-            "left",
-        )
+        .join(losers, id_col, "left_anti")
+        .join(sizes.withColumnRenamed("cluster_rep", id_col), id_col, "left")
         .select(
             id_col,
             F.coalesce(F.col("cluster_size"), F.lit(1))

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from raptor_spark.functions.dedup import fuzzy_dedup_corpus
 from raptor_spark.functions.text import remove_boilerplate_segments
+from tests.test_dedup import _distributed
 
 BOILER = "terms of service apply"  # 4 tokens
 
@@ -144,14 +145,39 @@ class TestFuzzyDedup:
     def test_anti_join_is_broadcast(self, spark):
         import re
 
+        def plan(rows):
+            return fuzzy_dedup_corpus(
+                _docs(spark, rows), "doc_id"
+            )._jdf.queryExecution().executedPlan().toString()
+
         rows = [(i, f"doc number {i} content words") for i in range(6)]
-        plan = fuzzy_dedup_corpus(
-            _docs(spark, rows), "doc_id"
-        )._jdf.queryExecution().executedPlan().toString()
+        dup = "the quick brown fox jumps over the lazy dog again today"
         # the corpus-side filter must be a BROADCAST anti join, never a
-        # corpus shuffle — dropping the broadcast hint regresses the
-        # scale property and must fail here
-        assert re.search(r"BroadcastHashJoin .*LeftAnti", plan)
+        # corpus shuffle: the driver-path CC result is a local relation
+        # whose size Spark knows, so it is broadcast without a hint
+        with_dups = rows + [(6, dup), (7, dup)]
+        assert re.search(r"BroadcastHashJoin .*LeftAnti", plan(with_dups))
+        # no duplicates: the CC result is an empty local relation and
+        # the optimizer drops the filter joins, so nothing is exchanged
+        assert "Exchange" not in plan(rows)
+
+    def test_no_forced_broadcast_when_broadcasts_off(self, spark):
+        """With broadcasts off, CC runs distributed and nothing forces
+        a broadcast of its (node-set sized) output: the executed plan
+        has no BroadcastExchange, and the rows equal the default run's."""
+        text = "the quick brown fox jumps over the lazy dog again today"
+        rows = [(i, text) for i in (10, 11, 12)] + [
+            (20, "completely different content about spark window functions"),
+        ]
+        docs = _docs(spark, rows)
+        want = set(fuzzy_dedup_corpus(docs, "doc_id").collect())
+        with _distributed(spark):
+            out = fuzzy_dedup_corpus(docs, "doc_id")
+            got = set(out.collect())
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        assert "BroadcastExchange" not in plan
+        assert got == want == {(10, 3), (20, 1)}
 
 
 class TestTokenizeCorpus:

@@ -10,7 +10,7 @@ pinned by the DuckDB oracles in raptor_spark/queries.py.
 from contextlib import contextmanager, nullcontext
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -97,7 +97,7 @@ class TestLshBucketCap:
 @contextmanager
 def _distributed(spark):
     """Broadcasts off: ``connected_components`` skips its driver path
-    and runs label propagation (and star, when that does not converge)."""
+    and runs alternating star distributed."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -107,10 +107,9 @@ def _distributed(spark):
         spark.conf.set(key, old)
 
 
-def _components(pairs, **kw):
+def _components(pairs):
     return {
-        (r["id"], r["cluster_rep"])
-        for r in connected_components(pairs, **kw).collect()
+        (r["id"], r["cluster_rep"]) for r in connected_components(pairs).collect()
     }
 
 
@@ -132,45 +131,43 @@ def _union_find(edges):
     return {(x, find(x)) for x in list(parent)}
 
 
+# fixed graphs for the union-find comparison, beside the random ones
+MIXED = (
+    [(a, b) for a in range(5) for b in range(a + 1, 5)]  # clique
+    + [(10 + i, 11 + i) for i in range(8)]               # chain
+    + [(50, 51)]                                         # edge
+    + [(60, 61), (61, 62), (60, 62)]                     # triangle
+    + [(70, 70), (4, 4), (80, 80)]                       # self-pairs
+)
+# canonical edge set is empty: the star rounds observe an empty plan
+SELF_PAIRS_ONLY = [(3, 3)]
+
+
 class TestConnectedComponents:
     def test_chain_converges(self, spark):
         # path graph 0-1-2-...-9: one component, rep 0
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(9)], "id_a long, id_b long"
         )
-        got = {
-            (r["id"], r["cluster_rep"])
-            for r in connected_components(pairs, max_iter=15).collect()
-        }
-        assert got == {(i, 0) for i in range(10)}
+        assert _components(pairs) == {(i, 0) for i in range(10)}
 
-    def test_high_diameter_falls_back_to_star(self, spark):
-        """Path graph of diameter 60: min-label propagation cannot
-        converge in max_iter=4 rounds — the alternating-star fallback
-        must still produce correct component minima."""
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(60)] + [(100, 101), (101, 102)],
-            "id_a long, id_b long",
-        )
-        with _distributed(spark):
-            got = _components(pairs, max_iter=4)
-        want = {(i, 0) for i in range(61)} | {(i, 100) for i in (100, 101, 102)}
-        assert got == want
-
-    def test_star_matches_label_propagation(self, spark):
-        """The star fallback ≡ min-label propagation on a mixed graph
-        (cliques + chains + isolated edge). The 9-node chain needs 8
-        hops, so ``max_iter=1`` forces the first call onto star."""
-        edges = (
-            [(a, b) for a in range(5) for b in range(a + 1, 5)]  # clique
-            + [(10 + i, 11 + i) for i in range(8)]               # chain
-            + [(50, 51)]                                         # edge
-            + [(60, 61), (61, 62), (60, 62)]                     # triangle
-        )
+    def test_high_diameter_matches_union_find(self, spark):
+        """Path graph of diameter 60 plus a 3-node path, on the
+        distributed path: every node gets its component minimum."""
+        edges = [(i, i + 1) for i in range(60)] + [(100, 101), (101, 102)]
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         with _distributed(spark):
-            star, prop = (_components(pairs, max_iter=m) for m in (1, 30))
-        assert star == prop
+            assert _components(pairs) == _union_find(edges)
+
+    def test_round_cap_raises(self, spark, monkeypatch):
+        """Star never stops short: a cap too small to see two equal
+        rounds raises instead of returning partial labels."""
+        from raptor_spark.functions import dedup
+
+        monkeypatch.setattr(dedup, "_STAR_MAX_ROUNDS", 1)
+        pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+        with _distributed(spark), pytest.raises(RuntimeError, match="1 rounds"):
+            connected_components(pairs)
 
     @settings(max_examples=12, deadline=None)
     @given(
@@ -178,14 +175,18 @@ class TestConnectedComponents:
             st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=40
         )
     )
+    @example(edges=MIXED)
+    @example(edges=SELF_PAIRS_ONLY)
     def test_paths_match_union_find(self, spark, edges):
         """Random graphs — duplicate and reversed pairs, self-pairs,
-        disconnected pieces, the empty graph: the driver path, the
-        distributed path and a union-find reference agree."""
+        disconnected pieces, the empty graph — plus a mixed graph
+        (clique, chain, edge, triangle, self-pairs) and a self-pairs-only
+        graph: the driver path, the distributed path and a union-find
+        reference agree."""
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         local = _components(pairs)
         with _distributed(spark):
-            dist = _components(pairs, max_iter=6)
+            dist = _components(pairs)
         assert local == dist == _union_find(edges)
 
     @pytest.mark.parametrize("distributed", [False, True])
@@ -208,7 +209,9 @@ class TestConnectedComponents:
     def test_job_counts_per_path(self, spark):
         """On a small graph the driver path runs the edge checkpoint
         (its distinct's shuffle-map job and the checkpoint job) and one
-        collect; with broadcasts off the propagation rounds run too."""
+        collect. With broadcasts off the same checkpoint is followed by
+        two star rounds of 8 jobs each (the second observes the first's
+        checksum unchanged); the count repeats exactly from run to run."""
         sc = spark.sparkContext
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
@@ -226,4 +229,4 @@ class TestConnectedComponents:
 
         assert jobs("cc-driver-path") == 3
         with _distributed(spark):
-            assert jobs("cc-distributed-path") > 3
+            assert jobs("cc-distributed-path") == 18

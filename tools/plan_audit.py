@@ -219,12 +219,13 @@ NOTES = {
         "candidate subgraph only (banded, capped buckets; edges "
         "localCheckpoint'ed once with their row count observed; an "
         "edge list under the broadcast threshold is collected and "
-        "solved on the driver, a larger one runs label propagation "
-        "batched 2 hops/round — either way the audited plan shows only "
-        "the final stage, as CC materialized upstream at build time). "
-        "Corpus-side filter is an "
-        "explicit broadcast LEFT ANTI join against the small "
-        "duplicate-id set + a broadcast left join for cluster sizes: "
+        "solved on the driver, a larger one runs alternating "
+        "large/small star, one checkpoint per round — either way the "
+        "audited plan shows only the final stage, as CC materialized "
+        "upstream at build time). Corpus-side filter is a LEFT ANTI "
+        "join against the duplicate-id set + a left join for cluster "
+        "sizes, with no hints: the driver-path CC result is a local "
+        "relation under the threshold, so both plan as broadcasts and "
         "the full corpus is ONE scan with map-side probes."
     ),
     "semantic_dedup": (
