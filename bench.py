@@ -90,7 +90,7 @@ HEADLINE = [
     "tokenize_corpus",      # vocab build + rank-id token sequences
     "dedup_incremental",    # batch-vs-corpus probe of signature stores
     "domain_cap",           # salted two-level per-domain top-n
-    "quality_classifier",   # distributed-GD linear quality filter
+    "quality_classifier",   # sample-trained linear quality filter
     "hybrid_search",        # BM25 recall -> cosine re-rank
     "budget_sample",        # per-source token-budget greedy fill
     "repeated_span_scrub",  # exact repeated-substring scrub (Lee et al.)

@@ -1,8 +1,8 @@
-"""Model-based quality filtering: a linear classifier trained
-DISTRIBUTED with order-independent quantized-gradient aggregates —
-the "quality classifier" stage of LLM data pipelines (CCNet / GPT-3
-style: fit a cheap linear model on weak labels, score the whole
-corpus, keep what clears the bar).
+"""Model-based quality filtering: a linear classifier trained on a
+bounded sample with integer-quantized gradient sums — the "quality
+classifier" stage of LLM data pipelines (CCNet / GPT-3 style: fit a
+cheap linear model on weak labels, score the whole corpus, keep what
+clears the bar).
 
 Engine-portable determinism (the DuckDB oracle replays the identical
 training iterations, same guarantees as similarity.kmeans_fit):
@@ -17,18 +17,18 @@ training iterations, same guarantees as similarity.kmeans_fit):
   logistic out of an oracle-gated pipeline; the fast sigmoid has the
   same sign, monotonicity, and [0,1] range, so gradient descent
   drives the same decision boundary;
-- per-iteration gradient = ONE aggregate with integer-quantized
-  partials (``sum(floor(g·quant))`` as BIGINT — double summation
-  order can never change the result, same trick as kmeans_fit /
-  salted aggs);
-- weight updates are computed INSIDE the aggregate row (round6
-  half-up canon in-engine, not driver-side Python), collected as one
-  row of scalars per iteration.
+- per-iteration gradient = integer-quantized partials
+  (``sum(floor(g·quant))`` — summation order can never change the
+  result, same trick as kmeans_fit / salted aggs);
+- weight updates use the floor-based round6 half-up canon.
 
 100 TB shape: train on a bounded deterministic sample (first
 ``sample_n`` ids — orderBy+limit compiles to TakeOrderedAndProject,
-never a full sort), score the corpus ONCE with the trained weights
-as literals (map-only, no join, no shuffle).
+never a full sort) collected in ONE Spark job; the gradient-descent
+iterations replay the engine's float-op sequence driver-local over
+those rows (microseconds — a Spark aggregate per iteration cost a job
+each). The corpus is then scored ONCE with the trained weights as
+literals (map-only, no join, no shuffle).
 
 Reference scope: extension beyond the reference engine (brief:
 quality scoring / model-based filtering for training-data pipelines).
@@ -36,12 +36,13 @@ quality scoring / model-based filtering for training-data pipelines).
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rounding import round6
+from .rounding import py_round6, round6
 from .text import alpha_ratio, punct_ratio, upper_ratio
 
 #: feature names in weight order; index 0 is the bias term.
@@ -80,95 +81,64 @@ def _z(weights: list[float], xs: list[Column]) -> Column:
 def quality_classifier_fit(
     df: DataFrame,
     label: Column,
+    sample_n: int,
     text_col: str = "text",
     id_col: str = "doc_id",
     iters: int = 3,
     lr: float = 1.0,
     quant: int = 1 << 20,
-    sample_n: int | None = None,
 ) -> list[float]:
     """Fit the linear quality classifier by full-batch gradient
-    descent on ``label`` (a 0/1 Column over ``df``'s rows); returns
-    the trained weights (``FEATURE_NAMES`` order, round6-canonical).
+    descent on ``label`` (a 0/1 Column over ``df``'s rows), trained on
+    the first ``sample_n`` rows by ``id_col``; returns the trained
+    weights (``FEATURE_NAMES`` order, round6-canonical).
 
-    Each iteration is one distributed aggregate over the (sampled)
-    training frame; the driver collects ONE row of 5 scalars per
-    iteration. See the module docstring for the determinism rules.
+    Spark computes the features and collects the sample in one job;
+    the iterations run driver-local, op for op as the engine would:
+    the left-associated ``w·x`` fold, the fast sigmoid,
+    ``floor(r·x·quant)`` integer sums and a round6 update of
+    ``w − lr·(s/quant/n)``. See the module docstring for the
+    determinism rules.
     """
     n_feat = len(FEATURE_NAMES)
     # explicit null filter: a NULL text does NOT null the features
     # (ratio CASEs fall through to 0.0 and `least` skips nulls, so
     # len_score becomes 1.0) — without the filter such rows would
     # train on fabricated features; NULL labels likewise drop
-    base = df.filter(
-        F.col(text_col).isNotNull() & label.isNotNull()
-    ).select(
-        F.col(id_col),
-        label.cast("double").alias("_y"),
-        *[
-            x.alias(f"_x{j}")
-            for j, x in enumerate(quality_features(text_col))
-        ],
-    )
-    train = base
-    if sample_n is not None:
-        train = (
-            base.orderBy(id_col)
-            .limit(sample_n)
-            .repartition(df.sparkSession.sparkContext.defaultParallelism)
-            .cache()
+    sample = (
+        df.filter(F.col(text_col).isNotNull() & label.isNotNull())
+        .select(
+            F.col(id_col),
+            label.cast("double").alias("_y"),
+            *[
+                x.alias(f"_x{j}")
+                for j, x in enumerate(quality_features(text_col))
+            ],
         )
-    xs = [F.col(f"_x{j}") for j in range(n_feat)]
+        .orderBy(id_col)
+        .limit(sample_n)
+        .collect()
+    )
+    if not sample:
+        raise ValueError(
+            "quality_classifier_fit: no training rows survive the null "
+            "text/label filter (empty input or all nulls) — the "
+            "gradient is undefined"
+        )
+    rows = [([r[f"_x{j}"] for j in range(n_feat)], r["_y"]) for r in sample]
+    n = len(rows)
     w = [0.0] * n_feat
-    try:
-        for _ in range(iters):
-            r = fast_sigmoid(_z(w, xs)) - F.col("_y")
-            # _n counts rows whose gradient is NON-NULL (null text or
-            # null label nulls every per-feature product identically),
-            # so dropped rows leave both the sums AND the divisor —
-            # count(*) here would silently shrink the gradient instead
-            row = (
-                train.agg(
-                    F.count(
-                        F.floor(r * xs[0] * F.lit(float(quant)))
-                    ).alias("_n"),
-                    *[
-                        F.sum(
-                            F.floor(r * xs[j] * F.lit(float(quant))).cast(
-                                "long"
-                            )
-                        ).alias(f"_s{j}")
-                        for j in range(n_feat)
-                    ],
-                )
-                # update computed IN-ENGINE so the round6 half-up canon
-                # is the same double-op sequence as the SQL twin
-                .select(
-                    *[
-                        round6(
-                            F.lit(float(w[j]))
-                            - F.lit(float(lr))
-                            * (
-                                F.col(f"_s{j}").cast("double")
-                                / F.lit(float(quant))
-                                / F.col("_n")
-                            )
-                        ).alias(f"_w{j}")
-                        for j in range(n_feat)
-                    ]
-                )
-                .collect()[0]
-            )
-            if row["_w0"] is None:
-                raise ValueError(
-                    "quality_classifier_fit: no training rows survive "
-                    "the null text/label filter (empty input or all "
-                    "nulls) — the gradient aggregate is undefined"
-                )
-            w = [float(row[f"_w{j}"]) for j in range(n_feat)]
-    finally:
-        if sample_n is not None:
-            train.unpersist()
+    for _ in range(iters):
+        sums = [0] * n_feat
+        for xs, y in rows:
+            z = reduce(lambda a, b: a + b, [wj * xj for wj, xj in zip(w, xs)])
+            res = 0.5 + z / (2.0 * (1.0 + abs(z))) - y
+            for j, x in enumerate(xs):
+                sums[j] += math.floor(res * x * float(quant))
+        w = [
+            py_round6(w[j] - lr * (sums[j] / float(quant) / n))
+            for j in range(n_feat)
+        ]
     return w
 
 

@@ -21,6 +21,8 @@ does the same thing.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -33,3 +35,9 @@ def round6(c: Column | str) -> Column:
 def sql_round6(expr: str) -> str:
     """The DuckDB/ANSI twin of ``round6`` — same op order."""
     return f"floor(({expr}) * 1000000 + 0.5) / 1000000"
+
+
+def py_round6(x: float) -> float:
+    """The plain-Python twin of ``round6`` for driver-local replays —
+    same op order, IEEE binary64 like the JVM."""
+    return math.floor(x * 1000000.0 + 0.5) / 1000000.0

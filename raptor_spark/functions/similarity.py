@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .rounding import round6
+from .rounding import py_round6, round6
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -202,143 +202,63 @@ def embedding_neardup_pairs(
 def kmeans_fit(
     df: DataFrame,
     dim: int,
+    sample_n: int,
     k: int = 8,
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quant: int = 1 << 20,
-    sample_n: int | None = None,
 ) -> list[list[float]]:
-    """Deterministic distributed Lloyd k-means for IVF centroids.
+    """Deterministic Lloyd k-means for IVF centroids, trained on a
+    bounded sample.
 
-    Engine-portable determinism (the whole point — the DuckDB oracle
-    replays the identical iterations):
-    - init: the first ``k`` corpus vectors by id (fixed training
-      sample);
+    The sample is the first ``sample_n`` rows by id — one
+    orderBy+limit (TakeOrderedAndProject, never a full sort) collected
+    in ONE Spark job. Lloyd quality needs a representative sample, not
+    the corpus, so training cost is O(sample); the caller assigns the
+    full corpus ONCE with the returned centroids (the 100 TB shape).
+    The iterations run driver-local (``_lloyd_local``): a Spark job per
+    iteration would pay a fresh codegen compile for each round's
+    changed centroid literals — seconds on 256 rows of work.
+
+    Engine-portable determinism (the ann_ivf_kmeans oracle replays the
+    identical iterations in DuckDB SQL):
+    - init: the first ``k`` sample vectors by id;
     - assignment: argmax cosine with ties to the LOWEST centroid id —
       raw double cosine, same left-to-right fold both engines;
     - update: per-dimension mean via EXACT integer partial sums
-      (components quantized ``floor(v * quant)`` to BIGINT — double
-      summation order can never change the result), divided and
-      ``round(_, 6)`` INSIDE Spark SQL so half-up rounding matches
-      ANSI SQL; empty clusters keep their previous centroid.
-
-    ``sample_n``: train on a DETERMINISTIC bounded sample — the first
-    ``sample_n`` rows by id (one orderBy+limit = TakeOrderedAndProject,
-    never a full sort) — and let the caller assign the full corpus ONCE
-    with the returned centroids. This is the 100 TB shape: Lloyd
-    quality needs a representative sample, not the corpus, so training
-    cost is O(sample), and a BOUNDED sample collects to the driver by
-    definition — the iterations run driver-LOCAL in pure Python over
-    the collected rows (k·dim·sample flops: microseconds). One Spark
-    job total instead of one per iteration; the per-iteration Spark
-    jobs were pure overhead (each iteration's changed centroid
-    literals forced a fresh codegen compile costing seconds on 256
-    rows of work). Every float op replays the engine expr sequence
-    exactly (same left-to-right folds, same quantized-integer sums,
-    same floor-based round6 — IEEE binary64 both sides), so the
-    trained centroids are bit-identical to the distributed path's —
-    pinned by test + the ann_ivf_kmeans oracle row, which replays the
-    iterations in DuckDB SQL.
-
-    ``sample_n=None`` = train on the full frame, distributed (the
-    path for corpus-scale training sets that must not be sampled):
-    the per-iteration driver collect is k rows of k centroids — small
-    by definition; all heavy work (assignment scan + per-dim sums) is
-    distributed and map-side combined.
+      (components quantized ``floor(v * quant)`` — summation order can
+      never change the result), divided and round6-canonicalized;
+      empty clusters keep their previous centroid.
 
     Returns centroids as a list indexed by centroid id.
     """
-    import math
-
-    v = F.col(vec_col)
-    if sample_n is not None:
-        if sample_n < k:
-            raise ValueError(f"sample_n={sample_n} < k={k}")
-        sample = (
-            df.select(F.col(id_col).alias("_id"), v.alias("_v"))
-            .orderBy("_id")
-            .limit(sample_n)
-            .collect()
-        )
-        if len(sample) < k:
-            raise ValueError(f"kmeans_fit: need >= {k} rows, got {len(sample)}")
-        vecs = [list(map(float, r["_v"])) for r in sample]
-        return _lloyd_local(vecs, dim=dim, k=k, iters=iters, quant=quant)
-    train = df
-    init = (
-        train.select(F.col(id_col).alias("_cid"), v.alias("_c"))
-        .orderBy("_cid")
-        .limit(k)
+    if sample_n < k:
+        raise ValueError(f"sample_n={sample_n} < k={k}")
+    sample = (
+        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .orderBy("_id")
+        .limit(sample_n)
         .collect()
     )
-    if len(init) < k:
-        raise ValueError(f"kmeans_fit: need >= {k} rows, got {len(init)}")
-    cents: list[list[float]] = [list(map(float, r["_c"])) for r in init]
-    for _ in range(iters):
-        # stage the row norm ONCE (own select so it is evaluated once,
-        # not re-inlined per centroid) and fold each centroid's norm to
-        # a Python constant — same sqrt(Σx²) sequential sum as the SQL
-        # oracle, so cosine bits are unchanged, but the assignment expr
-        # shrinks ~2x (codegen) and the norm fold runs 1x per row, not k
-        staged = train.select(v.alias("_v"), norm(v).alias("_vn"))
-        sv, svn = F.col("_v"), F.col("_vn")
-
-        def _cos_lit(c: list[float]) -> Column:
-            cn = math.sqrt(sum(x * x for x in c))
-            d = svn * F.lit(cn)
-            num = dot(sv, F.array(*[F.lit(float(x)) for x in c]))
-            return F.when(d > 0, num / d).otherwise(F.lit(0.0))
-
-        structs = [
-            F.struct(_cos_lit(c).alias("d"), F.lit(-ci).alias("nc"))
-            for ci, c in enumerate(cents)
-        ]
-        assigned = staged.select(
-            "_v", (-F.array_max(F.array(*structs))["nc"]).alias("cid")
-        )
-        # per-dim sums via posexplode → ONE narrow (cid, pos) aggregate
-        # instead of `dim` wide aggregate columns: identical integer
-        # math, but the generated plan is tiny (a dim-wide aggregate
-        # pays seconds of codegen PER ITERATION since the centroid
-        # literals change each round)
-        rows = (
-            assigned.select("cid", F.posexplode("_v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.floor(F.col("x").cast("double") * quant)).alias("s"),
-            )
-            .select(
-                "cid",
-                "pos",
-                round6(F.col("s") / F.lit(float(quant)) / F.col("n")).alias(
-                    "c"
-                ),
-            )
-            .collect()
-        )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cid.setdefault(r["cid"], {})[r["pos"]] = r["c"]
-        for cid, comps in by_cid.items():
-            cents[cid] = [comps[j] for j in range(dim)]
-    return cents
+    if len(sample) < k:
+        raise ValueError(f"kmeans_fit: need >= {k} rows, got {len(sample)}")
+    vecs = [list(map(float, r["_v"])) for r in sample]
+    return _lloyd_local(vecs, dim=dim, k=k, iters=iters, quant=quant)
 
 
 def _lloyd_local(
     vecs: list[list[float]], dim: int, k: int, iters: int, quant: int
 ) -> list[list[float]]:
-    """Driver-local Lloyd over a collected bounded sample — the exact
-    float-op sequence of the distributed path (see ``kmeans_fit``),
-    op for op:
+    """Driver-local Lloyd over a collected bounded sample, in the float-op
+    sequence the DuckDB twin (``queries._kmeans_cents_sql``) runs, op
+    for op:
 
     - row norm: ``sqrt(fold acc + x*x)`` left-to-right (``norm``);
-    - cosine: ``num / (vn * cn)`` with the ``> 0`` guard, ``cn``
-      folded in Python exactly as the expr builder did;
-    - argmax with ties to the LOWEST centroid id (the engine's
-      ``array_max`` over ``(d, -cid)`` structs; its NaN-is-greatest
-      ordering is replayed via an inf key);
+    - cosine: ``num / (vn * cn)``, 0.0 when ``vn * cn`` is not ``> 0``
+      (the ``cosine`` guard);
+    - argmax with ties to the LOWEST centroid id (NaN orders greater
+      than any double, as in Spark and DuckDB, via an inf key);
     - update: ``floor(x * quant)`` integer sums (order-free), then
       ``round6((s / quant) / n)`` with the same two divisions.
 
@@ -346,16 +266,21 @@ def _lloyd_local(
     """
     import math
 
+    def _norm(v: list[float]) -> float:
+        # explicit fold: builtin sum() compensates float error on
+        # Python >= 3.12, which would break the op-for-op replay
+        acc = 0.0
+        for x in v:
+            acc += x * x
+        return math.sqrt(acc)
+
     cents = [list(vs) for vs in vecs[:k]]
     for _ in range(iters):
-        cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
+        cnorms = [_norm(c) for c in cents]
         sums: list[list[int]] = [[0] * dim for _ in range(k)]
         counts = [0] * k
         for row in vecs:
-            acc = 0.0
-            for x in row:
-                acc += x * x
-            vn = math.sqrt(acc)
+            vn = _norm(row)
             best_key, best_ci = None, 0
             for ci in range(k):
                 d = vn * cnorms[ci]
@@ -366,8 +291,6 @@ def _lloyd_local(
                     cos = num / d
                 else:
                     cos = 0.0
-                # Spark struct ordering: NaN sorts GREATER than any
-                # double and equal to itself, so ties fall to -cid
                 key = (math.inf if math.isnan(cos) else cos, -ci)
                 if best_key is None or key > best_key:
                     best_key, best_ci = key, ci
@@ -379,11 +302,7 @@ def _lloyd_local(
             if counts[ci] == 0:
                 continue  # empty cluster keeps its previous centroid
             n = counts[ci]
-            cents[ci] = [
-                math.floor((s / float(quant)) / n * 1000000.0 + 0.5)
-                / 1000000.0
-                for s in sums[ci]
-            ]
+            cents[ci] = [py_round6(s / float(quant) / n) for s in sums[ci]]
     return cents
 
 

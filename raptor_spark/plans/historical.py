@@ -458,7 +458,7 @@ def historical_from_store(
             staleness[c] = 0
             cols.append(c)
 
-    out = spine
+    out = _in_range(spine, ts_col, since, until)
     for fam_keys, (frames, cols) in families.items():
         merged = frames[0]
         for f in frames[1:]:
@@ -478,9 +478,24 @@ def historical_from_store(
 
         for spec in derived:
             out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
-    if since is not None:
-        out = out.filter(F.col(ts_col) >= F.lit(since))
     return out
+
+
+def _in_range(
+    spine: DataFrame,
+    ts_col: str,
+    since: Optional[dt.datetime],
+    until: Optional[dt.datetime],
+) -> DataFrame:
+    """Spine rows with ``since <= ts <= until``. Filtered BEFORE the
+    as-of joins: feature sources are cut to that range (less the
+    lookback pad), so a row outside it would silently read truncated
+    history."""
+    if since is not None:
+        spine = spine.filter(F.col(ts_col) >= F.lit(since))
+    if until is not None:
+        spine = spine.filter(F.col(ts_col) <= F.lit(until))
+    return spine
 
 
 def get_historical(
@@ -543,10 +558,6 @@ def get_historical(
         spine = replay_wide(kf_src, key_feature, mode=mode).select(
             *keys, ts_col, *[c for c in key_feature.output_columns() if "_prev" not in c]
         )
-        if since is not None:
-            spine = spine.filter(F.col(ts_col) >= F.lit(since))
-        if until is not None:
-            spine = spine.filter(F.col(ts_col) <= F.lit(until))
         # the spine carries the key feature's base columns; its
         # keep_previous columns are NOT on the spine (they need the
         # lag pass) — leave them to the union-merge below
@@ -555,6 +566,7 @@ def get_historical(
         }
     else:
         joined_from_spine = set()
+    spine = _in_range(spine, ts_col, since, until)
 
     # union-merge all remaining features, ONE as-of pass per KEY FAMILY
     # (features sharing an entity-key tuple ride the same pass). The

@@ -846,14 +846,14 @@ FROM c WHERE cum_tokens - n_tokens < budget
 
 
 def q_quality_classifier(spark, sf_dir):
-    """Trained quality filter: fit a linear classifier by distributed
-    gradient descent (3 iterations, deterministic first-500-ids
-    training sample, quantized order-independent gradient sums,
-    algebraic fast sigmoid — no exp, so every bit is engine-portable)
-    against the weak label n_chars >= 300, then score the FULL corpus
-    map-only with the trained weights as literals. The oracle replays
-    the identical iterations. The model-based filtering stage of a
-    CCNet/GPT-3-style pipeline."""
+    """Trained quality filter: fit a linear classifier by gradient
+    descent against the weak label n_chars >= 300 — the deterministic
+    first-500-ids sample is collected in one Spark job and the 3
+    iterations (quantized order-independent gradient sums, algebraic
+    fast sigmoid — no exp, so every bit is engine-portable) run on the
+    driver — then score the FULL corpus map-only with the trained
+    weights as literals. The oracle replays the identical iterations.
+    The model-based filtering stage of a CCNet/GPT-3-style pipeline."""
     from .functions.classifier import (
         quality_classifier_fit,
         quality_classifier_score,
@@ -2125,31 +2125,23 @@ QUALIFY rank <= 3
 """
 
 
-def _kmeans_cents_sql(k: int = 8, iters: int = 2, dim: int = 64,
-                      quant: int = 1 << 20,
-                      sample_n: int | None = None) -> str:
-    """CTE chain replaying kmeans_fit's deterministic Lloyd iterations:
-    assignment by raw-cosine argmax (ties → lowest cid), per-dim mean
-    via exact BIGINT sums of floor(v*quant), round(_,6), empty cluster
-    keeps its previous centroid. ``sample_n``: iterations scan the
-    bounded first-ids training sample, mirroring
-    kmeans_fit(sample_n=...). Final centroids CTE: cents(cid, cent)."""
-    cos = _COS_SQL.format(a="e.embedding", b="c.cent")
+def _kmeans_cents_sql(k: int, iters: int, dim: int, sample_n: int,
+                      quant: int = 1 << 20) -> str:
+    """CTE chain replaying kmeans_fit's deterministic Lloyd iterations
+    over the bounded first-ids training sample: assignment by
+    raw-cosine argmax (ties → lowest cid; a zero-norm cosine counts as
+    0.0, the engine's ``cosine`` guard — DuckDB's x/0 is NULL), per-dim
+    mean via exact BIGINT sums of floor(v*quant), round6, empty cluster
+    keeps its previous centroid. Final centroids CTE: cents(cid, cent)."""
     raw = _COS_RAW.format(a="e.embedding", b="c.cent")
     # init = the k SMALLEST ids (ORDER BY + LIMIT, matching kmeans_fit
     # exactly — `WHERE vec_id < k` would diverge on non-0-based ids)
-    train = "embeddings"
-    parts = []
-    if sample_n is not None:
-        train = "ktrain"
-        parts.append(
-            f"ktrain AS (\n  SELECT vec_id, embedding FROM embeddings "
-            f"ORDER BY vec_id LIMIT {sample_n})"
-        )
-    parts.append(
+    parts = [
+        f"ktrain AS (\n  SELECT vec_id, embedding FROM embeddings "
+        f"ORDER BY vec_id LIMIT {sample_n})",
         f"c0 AS (\n  SELECT vec_id AS cid, embedding AS cent "
-        f"FROM {train} ORDER BY vec_id LIMIT {k})"
-    )
+        f"FROM ktrain ORDER BY vec_id LIMIT {k})",
+    ]
     for it in range(1, iters + 1):
         prev = f"c{it - 1}"
         sum_cols = ",\n    ".join(
@@ -2165,8 +2157,9 @@ def _kmeans_cents_sql(k: int = 8, iters: int = 2, dim: int = 64,
         parts.append(f"""a{it} AS (
   SELECT vec_id, embedding, cid FROM (
     SELECT e.vec_id, e.embedding, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id ORDER BY {raw} DESC, c.cid) AS r
-    FROM {train} e CROSS JOIN {prev} c) WHERE r = 1),
+      row_number() OVER (PARTITION BY e.vec_id
+        ORDER BY coalesce({raw}, 0.0) DESC, c.cid) AS r
+    FROM ktrain e CROSS JOIN {prev} c) WHERE r = 1),
 m{it} AS (
   SELECT cid, count(*) AS n,
     {sum_cols}
@@ -2240,7 +2233,7 @@ def _quality_classifier_sql(
     """CTE chain replaying quality_classifier_fit's deterministic
     gradient-descent iterations (see functions/classifier.py for the
     determinism rules: round6 features, algebraic fast sigmoid, BIGINT
-    quantized gradient sums, in-engine round6 weight updates), then
+    quantized gradient sums, round6 weight updates), then
     scoring the full corpus with the trained weights."""
     c = _q_components()
     qf = f"{float(quant)!r}"

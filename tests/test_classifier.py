@@ -1,8 +1,9 @@
-"""Trained quality classifier: deterministic distributed gradient
-descent (functions/classifier.py). The DuckDB iteration replay is
-pinned by the quality_classifier oracle row; here we pin the engine-
-independent properties: bit-determinism vs an independent numpy
-replay, learnability, and the bounded-sample path.
+"""Trained quality classifier (functions/classifier.py): gradient
+descent replayed driver-local over a bounded first-ids sample. The
+DuckDB iteration replay is pinned by the quality_classifier oracle row;
+here we pin the engine-independent properties: bit-determinism vs an
+independent numpy replay, learnability, the bounded-sample contract,
+and one Spark job per fit.
 """
 
 from __future__ import annotations
@@ -82,7 +83,7 @@ class TestQualityClassifier:
     def test_weights_match_numpy_replay_bit_for_bit(self, spark):
         df = _docs(spark)
         w_spark = quality_classifier_fit(
-            df, F.col("y").cast("double"), iters=3
+            df, F.col("y").cast("double"), sample_n=120, iters=3
         )
         rows = sorted(
             df.select("doc_id", "text", "y").collect(),
@@ -93,7 +94,9 @@ class TestQualityClassifier:
 
     def test_learns_the_separable_label(self, spark):
         df = _docs(spark)
-        w = quality_classifier_fit(df, F.col("y").cast("double"), iters=3)
+        w = quality_classifier_fit(
+            df, F.col("y").cast("double"), sample_n=120, iters=3
+        )
         scored = df.select(
             "y", (quality_classifier_score(w, "text") >= 0.5).alias("keep")
         ).collect()
@@ -116,21 +119,25 @@ class TestQualityClassifier:
             flipped, F.col("y").cast("double"), sample_n=50
         )
         w_clean = quality_classifier_fit(
-            df.filter(F.col("doc_id") < 50), F.col("y").cast("double")
+            df.filter(F.col("doc_id") < 50),
+            F.col("y").cast("double"),
+            sample_n=100,
         )
         assert w_prefix == w_clean
 
     def test_fit_is_repeatable(self, spark):
         df = _docs(spark).repartition(7)
-        w1 = quality_classifier_fit(df, F.col("y").cast("double"))
+        w1 = quality_classifier_fit(df, F.col("y").cast("double"), sample_n=120)
         w2 = quality_classifier_fit(
-            df.repartition(3), F.col("y").cast("double")
+            df.repartition(3), F.col("y").cast("double"), sample_n=120
         )
         assert w1 == w2  # partitioning-independent (quantized sums)
 
     def test_feature_names_shape(self, spark):
         df = _docs(spark, n=10)
-        w = quality_classifier_fit(df, F.col("y").cast("double"), iters=1)
+        w = quality_classifier_fit(
+            df, F.col("y").cast("double"), sample_n=10, iters=1
+        )
         assert len(w) == len(FEATURE_NAMES)
 
     def test_null_rows_drop_from_gradient_and_divisor(self, spark):
@@ -143,14 +150,20 @@ class TestQualityClassifier:
                 "doc_id long, text string, y int",
             )
         )
-        w_clean = quality_classifier_fit(clean, F.col("y").cast("double"))
-        w_dirty = quality_classifier_fit(dirty, F.col("y").cast("double"))
+        w_clean = quality_classifier_fit(
+            clean, F.col("y").cast("double"), sample_n=100
+        )
+        w_dirty = quality_classifier_fit(
+            dirty, F.col("y").cast("double"), sample_n=100
+        )
         assert w_clean == w_dirty
 
     def test_empty_training_frame_raises_clearly(self, spark):
         df = _docs(spark, n=10).filter(F.col("doc_id") < 0)
         with pytest.raises(ValueError, match="no training rows"):
-            quality_classifier_fit(df, F.col("y").cast("double"), iters=1)
+            quality_classifier_fit(
+                df, F.col("y").cast("double"), sample_n=10, iters=1
+            )
 
     def test_fast_sigmoid_properties(self, spark):
         vals = [-100.0, -1.0, 0.0, 1.0, 100.0]
@@ -164,3 +177,36 @@ class TestQualityClassifier:
         assert out == sorted(out)
         assert all(0.0 < s < 1.0 for s in out)
         assert 0.5 in out  # s(0) == 0.5 exactly
+
+
+def test_each_trainer_fit_runs_one_spark_job(spark):
+    """Both trainers collect their bounded sample in ONE job and iterate
+    on the driver — no Spark job per gradient or Lloyd step."""
+    from raptor_spark.functions.similarity import kmeans_fit
+
+    sc = spark.sparkContext
+    docs = _docs(spark, n=40)
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0, float(i % 3)]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def jobs(group, fit):
+        sc.setJobGroup(group, group)
+        try:
+            fit()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(
+        "fit-classifier",
+        lambda: quality_classifier_fit(
+            docs, F.col("y").cast("double"), sample_n=40
+        ),
+    ) == 1
+    assert jobs(
+        "fit-kmeans", lambda: kmeans_fit(emb, dim=3, sample_n=30, k=2)
+    ) == 1

@@ -44,6 +44,41 @@ def test_store_read_equals_recompute(spark, tmp_path):
     assert "fqn" in plan and "PartitionFilters" in plan
 
 
+def test_explicit_spine_respects_since_until(spark, tmp_path):
+    """An explicit spine is cut to since <= ts <= until on both the
+    recompute and the store path. Feature sources are cut to that
+    range (less the lookback pad), so a spine row outside it used to
+    come back with truncated history: NULL or partial features before
+    `since`, features missing updates after `until`."""
+    src = transcripts(spark, 10).cache()
+    turn_len = feature(
+        "turn_len", "conv_id", "cast(length(text) as double)", staleness="30m"
+    )
+    chars_1h = feature(
+        "chars_1h", "conv_id", "cast(length(text) as double)",
+        aggr=["sum", "avg"], over="1h",
+    )
+    fs = FeatureSetSpec(features=[turn_len, chars_1h], key_feature="turn_len")
+
+    cat = Catalog(spark, root=str(tmp_path))
+    for spec in fs.features:
+        cat.write_feature_values(replay(src, spec), "features")
+
+    spine = src.filter(F.col("role") == "user").select("conv_id", "turn_idx", "ts")
+    lo, hi = spine.agg(F.min("ts"), F.max("ts")).first()
+    since, until = lo + (hi - lo) / 2, lo + (hi - lo) * 3 / 4
+    in_range = (F.col("ts") >= F.lit(since)) & (F.col("ts") <= F.lit(until))
+    want = _rows(get_historical(src, fs, spine=spine).filter(in_range))
+    assert 0 < len(want) < spine.count()
+
+    recomputed = get_historical(src, fs, spine=spine, since=since, until=until)
+    from_store = historical_from_store(
+        cat, "features", fs, spine, since=since, until=until
+    )
+    assert _rows(recomputed) == want
+    assert _rows(from_store) == want
+
+
 def test_store_read_keep_previous_equals_recompute(spark, tmp_path):
     """keep_previous from the store: version columns are lagged over
     the materialized per-fqn update stream — equal to the

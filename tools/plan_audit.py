@@ -78,10 +78,10 @@ NOTES = {
         "window over the (unbounded) vocabulary."
     ),
     "ann_ivf_kmeans": (
-        "Lloyd iterations: assignment is a map-only scan against "
-        "centroid literals (no shuffle), per-dim means via posexplode "
-        "+ one narrow aggregate; per-iteration driver collect is k "
-        "rows. Probe/scan is the same broadcast equi-join as ann_ivf."
+        "Lloyd training runs BEFORE the audited plan: one job collects "
+        "the bounded first-ids sample and the iterations run on the "
+        "driver; the trained centroids are a broadcast literal frame. "
+        "Probe/scan is the same broadcast equi-join as ann_ivf."
     ),
     "kp_filtered": (
         "Filtered keep_previous FUSED: lag IGNORE NULLS walks update "
@@ -265,9 +265,9 @@ NOTES = {
     ),
     "quality_classifier": (
         "Model-based quality filter: gradient-descent training runs "
-        "BEFORE the audited plan (one aggregate per iteration over "
-        "the bounded first-ids sample, integer-quantized partials, "
-        "map-side combined; driver collects 5 scalars/iter); the "
+        "BEFORE the audited plan (one job collects the features of "
+        "the bounded first-ids sample; the iterations, with "
+        "integer-quantized gradient sums, run on the driver); the "
         "audited scoring plan is MAP-ONLY — trained weights are "
         "literals, features are JVM regex/arithmetic, no join, no "
         "shuffle. The algebraic fast sigmoid (no exp) keeps every bit "
