@@ -204,10 +204,10 @@ class Feature:
     def fqn(self) -> str:
         return self.spec.fqn
 
-    def replay(self, df: DataFrame, mode: str = "exact") -> DataFrame:
+    def replay(self, df: DataFrame) -> DataFrame:
         """Local batch replay over training data → the canonical long
         feature-values frame (labsdk replay.py:78-152)."""
-        return _replay_long(df, self.spec, mode=mode)
+        return _replay_long(df, self.spec)
 
     def manifest(self, to_file: bool = False) -> str:
         """Deployment manifest in the reference's CRD layout
@@ -369,7 +369,6 @@ class Model:
         sources: Optional[dict[str, DataFrame]] = None,
         since: Optional[dt.datetime] = None,
         until: Optional[dt.datetime] = None,
-        mode: str = "exact",
     ) -> DataFrame:
         """Wide PIT training frame. ``sources`` maps data-source name →
         DataFrame; a feature bound to a ``DataSource`` OBJECT falls
@@ -398,7 +397,7 @@ class Model:
             raise ValueError("model has no sourced features")
         out = get_historical(
             default_src, self.fs, since=since, until=until,
-            sources=by_feature, mode=mode,
+            sources=by_feature,
         )
         if self.selected_columns is not None:
             keys = list(self.fs.resolve_key_feature().keys)

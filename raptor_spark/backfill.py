@@ -161,7 +161,6 @@ def backfill(
     shard_col: Optional[str] = None,
     resume: bool = True,
     source_id: str = "source",
-    mode: str = "exact",
     fail_after_shard: Optional[int] = None,
     incremental: bool = False,
 ) -> BackfillResult:
@@ -301,7 +300,7 @@ def backfill(
         part = source.filter(shard_expr.isin(wave)).observe(
             obs_in, *[F.count_if(shard_expr == k).alias(str(k)) for k in wave]
         )
-        out = get_historical(part, fs, mode=mode).withColumn(
+        out = get_historical(part, fs).withColumn(
             "shard", F.format_string("%05d", key_hash)
         )
         out.observe(
@@ -423,7 +422,6 @@ def main(argv: Optional[Sequence[str]] = None) -> None:
     p.add_argument("--n-convs", type=int, default=2000)
     p.add_argument("--shards", type=int, default=16)
     p.add_argument("--master", default=None)
-    p.add_argument("--mode", choices=["exact", "bucketed"], default="exact")
     p.add_argument("--skew", action="store_true")
     p.add_argument("--catalog-root", default=None,
                    help="lay the transcript table out through the "
@@ -467,7 +465,6 @@ def main(argv: Optional[Sequence[str]] = None) -> None:
                 else f"transcripts:{args.n_convs}:{args.skew}"
             ),
             incremental=args.incremental,
-            mode=args.mode,
         )
         print(json.dumps({
             "out": res.out_dir,

@@ -24,11 +24,13 @@ features' rows.
 Skew: conversations are Zipf-hot; salting a hot key's *feature* rows
 is impossible for as-of (needs full per-key order), so the skew lever
 here is AQE + hashing on the key only; within a single key the sort is
-O(n log n) in one task. For pathological single-key volumes, shrink the
-history BEFORE the merge: windowed features go through
-``operators.window_agg.sliding_agg_bucketed`` (a hot conversation
-collapses to |buckets| rows), detected upstream via
-``operators.skew.detect_hot_keys``.
+O(n log n) in one task. Batch historical cannot shrink a hot key's
+history first: its windows are exact per event and the spine carries
+every row anyway. On a Zipf input with a 50k-turn conversation the
+exact plans beat a bucketed pre-aggregation (BENCH/BASELINE.md, "Zipf
+backfill: exact vs bucketed"); bucket partials
+(``window_agg.sliding_agg_bucketed``) serve the streaming and online
+paths, whose windows end on bucket boundaries.
 """
 
 from __future__ import annotations

@@ -18,9 +18,10 @@ rule requires explicit handling for Zipf-hot conversations. Two levers:
    row-count threshold (drives a broadcast list for plan-time routing).
 
 Window-based ops (as-of, sliding window) need full per-key order and
-cannot be salted; their skew mitigation is the bucketed pre-aggregation
-(shrinks a hot conversation to |buckets| rows before the sort) — see
-``window_agg.sliding_agg_bucketed``.
+cannot be salted: in batch historical a hot conversation's rows stay in
+one task and sort once, since exact per-event windows and the spine
+need every row. Bucket partials (``window_agg.sliding_agg_bucketed``)
+bound per-key state on the streaming and online paths.
 """
 
 from __future__ import annotations

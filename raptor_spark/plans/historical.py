@@ -27,7 +27,7 @@ replay.py:246-261) and the lagged columns ride the same union-merge.
 from __future__ import annotations
 
 import datetime as dt
-from typing import Literal, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F, Window as W
@@ -504,9 +504,7 @@ def get_historical(
     spine: Optional[DataFrame] = None,
     since: Optional[dt.datetime] = None,
     until: Optional[dt.datetime] = None,
-    mode: Literal["exact", "bucketed"] = "exact",
     sources: Optional[dict[str, DataFrame]] = None,
-    fuse: bool = True,
 ) -> DataFrame:
     """Wide PIT training set: one row per spine (keys, ts), one column
     per feature output. ``sources`` may map feature name → its own
@@ -514,6 +512,12 @@ def get_historical(
 
     Spine default: the key feature's value rows (fs.go:35-49) — here,
     its (keys, ts) projection.
+
+    The plan follows from the inputs alone: the single-pass fused plan
+    when there is no explicit spine, every feature reads ``source``, the
+    key feature is not windowed and every feature is ``_fusible``; the
+    union-merge as-of plan otherwise.
+    Both compute exact per-event windows (LabSDK replay semantics).
 
     Derived (sourceless) features — ``derived_inputs`` set — are
     applied over the wide frame after the base pass, in dependency
@@ -526,7 +530,7 @@ def get_historical(
         )
         out = get_historical(
             source, base_fs, spine=spine, since=since, until=until,
-            mode=mode, sources=sources, fuse=fuse,
+            sources=sources,
         )
         from .replay import _eval_expr
 
@@ -534,28 +538,40 @@ def get_historical(
             out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
         return out
 
-    key_feature = fs.resolve_key_feature()
-    keys = key_feature.keys
-    ts_col = "ts"
-
     if sources is not None and all(s is source for s in sources.values()):
         # every feature reads the same frame → eligible for the fused
         # single-pass plan (the decorator API always passes `sources`)
         sources = None
 
+    key_feature = fs.resolve_key_feature()
     if (
-        fuse
-        and spine is None
+        spine is None
         and sources is None
-        and mode == "exact"
         and key_feature.aggr is None
-        and all(_fusible(f, keys, ts_col) for f in fs.features)
+        and all(_fusible(f, key_feature.keys, "ts") for f in fs.features)
     ):
         return get_historical_fused(source, fs, since=since, until=until)
+    return _historical_union_merge(source, fs, spine, since, until, sources)
+
+
+def _historical_union_merge(
+    source: DataFrame,
+    fs: FeatureSetSpec,
+    spine: Optional[DataFrame] = None,
+    since: Optional[dt.datetime] = None,
+    until: Optional[dt.datetime] = None,
+    sources: Optional[dict[str, DataFrame]] = None,
+) -> DataFrame:
+    """The general plan behind ``get_historical`` for a feature set
+    without derived features: each feature replayed on its own, then
+    union-merged onto the spine by backward as-of joins."""
+    key_feature = fs.resolve_key_feature()
+    keys = key_feature.keys
+    ts_col = "ts"
 
     if spine is None:
         kf_src = (sources or {}).get(key_feature.name, source)
-        spine = replay_wide(kf_src, key_feature, mode=mode).select(
+        spine = replay_wide(kf_src, key_feature).select(
             *keys, ts_col, *[c for c in key_feature.output_columns() if "_prev" not in c]
         )
         # the spine carries the key feature's base columns; its
@@ -599,7 +615,7 @@ def get_historical(
                 f_src = f_src.filter(F.col(spec.timestamp_col) >= F.lit(lo))
             if until is not None:
                 f_src = f_src.filter(F.col(spec.timestamp_col) <= F.lit(until))
-            fv = replay_wide(f_src, spec, mode=mode)
+            fv = replay_wide(f_src, spec)
             base_cols = [c for c in fv.columns if c not in (*fam_keys, ts_col)]
             fv, all_cols = _lag_feature_values(fv, spec, base_cols)
             fv = fv.select(

@@ -9,9 +9,8 @@ Stages (reference recipe → Spark):
 - None-return filter (replay.py:110-111)      → value.isNotNull()
 - key encoding ';'.join (replay.py:114)       → concat_ws(';')
 - long format (replay.py:117-127)             → select(lit(fqn), ...)
-- windowed: rolling per key (replay.py:129-146) → sliding_agg_exact /
-  sliding_agg_bucketed (scale path), melt to fqn=name+fn rows
-  (replay.py:148-149) → unpivot/stack
+- windowed: rolling per key (replay.py:129-146) → sliding_agg_exact,
+  melt to fqn=name+fn rows (replay.py:148-149) → stack
 
 Output layout (the canonical feature-values relation,
 ``parquet/schema.go:25-51``): ``fqn:string, keys:string,
@@ -20,13 +19,11 @@ ts:timestamp, value:double|string``.
 
 from __future__ import annotations
 
-from typing import Literal
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..specs import FeatureSpec
-from ..operators.window_agg import sliding_agg_bucketed, sliding_agg_exact
+from ..operators.window_agg import sliding_agg_exact
 
 
 def _eval_expr(df: DataFrame, expr) -> Column:
@@ -83,68 +80,40 @@ def project_feature(source: DataFrame, spec: FeatureSpec) -> DataFrame:
     return out.filter(F.col("value").isNotNull())
 
 
-def replay(
-    source: DataFrame,
-    spec: FeatureSpec,
-    mode: Literal["exact", "bucketed"] = "exact",
-) -> DataFrame:
-    """FeatureSpec → long feature-values DataFrame
-    (fqn, keys, ts, value:double for windowed / native type otherwise).
-
-    mode='exact'  : per-event sliding window (LabSDK replay parity).
-    mode='bucketed': two-phase partials (production/scale semantics —
-    values are per (keys, bucket-end), api/windows.go:96-125).
-    """
-    proj = project_feature(source, spec)
-    keys_enc = encode_keys(proj, spec.keys)
-
+def replay(source: DataFrame, spec: FeatureSpec) -> DataFrame:
+    """FeatureSpec → long feature-values DataFrame (fqn, keys, ts,
+    value): the melt of ``replay_wide`` with the keys ';'-encoded. A
+    plain feature gives one row per value (fqn = the feature's, value
+    of the expr's native type); a windowed one gives one row per
+    aggregate fn (fqn ``name+fn``, value double, replay.py:148-149)."""
+    wide = replay_wide(source, spec)
+    keys = encode_keys(wide, spec.keys).alias("keys")
     if spec.aggr is None:
-        return proj.select(
-            F.lit(spec.fqn).alias("fqn"),
-            keys_enc.alias("keys"),
-            F.col("ts"),
-            F.col("value"),
+        return wide.select(
+            F.lit(spec.fqn).alias("fqn"), keys, "ts",
+            F.col(spec.name).alias("value"),
         )
-
-    a = spec.aggr
-    if mode == "exact":
-        agged = sliding_agg_exact(
-            proj, spec.keys, "ts", F.col("value"), a.over_us, a.fns
-        )
-    else:
-        agged = sliding_agg_bucketed(
-            proj, spec.keys, "ts", F.col("value"), a.over_us, a.granularity_us, a.fns
-        )
-    # melt wide fn columns → long fqn=name+fn rows (replay.py:148-149)
-    stack_args = ", ".join(f"'{spec.fqn}+{fn}', `{fn}`" for fn in a.fns)
-    keys_enc2 = encode_keys(agged, spec.keys)
-    return agged.select(
-        keys_enc2.alias("keys"), F.col("ts"), F.expr(f"stack({len(a.fns)}, {stack_args}) as (fqn, value)")
+    fns = spec.aggr.fns
+    stack_args = ", ".join(f"'{spec.fqn}+{fn}', `{spec.name}_{fn}`" for fn in fns)
+    return wide.select(
+        keys, "ts", F.expr(f"stack({len(fns)}, {stack_args}) as (fqn, value)")
     ).select("fqn", "keys", "ts", "value")
 
 
-def replay_wide(
-    source: DataFrame,
-    spec: FeatureSpec,
-    mode: Literal["exact", "bucketed"] = "exact",
-) -> DataFrame:
-    """Like replay() but keeps native key columns and one column per
-    output (no melt) — the layout get_historical consumes: keys + ts +
-    {name or name_fn ...}."""
+def replay_wide(source: DataFrame, spec: FeatureSpec) -> DataFrame:
+    """FeatureSpec → wide feature-values DataFrame: native key columns,
+    ts and one column per output — ``name`` for a plain feature,
+    ``name_fn`` per aggregate for a windowed one, each the exact
+    per-event sliding window ending at that row (LabSDK replay parity,
+    replay.py:129-146). The layout get_historical consumes."""
     proj = project_feature(source, spec)
     if spec.aggr is None:
         return proj.withColumnRenamed("value", spec.name)
     a = spec.aggr
-    if mode == "exact":
-        agged = sliding_agg_exact(
-            proj, spec.keys, "ts", F.col("value"), a.over_us, a.fns,
-            prefix=f"{spec.name}_",
-        )
-    else:
-        agged = sliding_agg_bucketed(
-            proj, spec.keys, "ts", F.col("value"), a.over_us, a.granularity_us,
-            a.fns, prefix=f"{spec.name}_",
-        )
+    agged = sliding_agg_exact(
+        proj, spec.keys, "ts", F.col("value"), a.over_us, a.fns,
+        prefix=f"{spec.name}_",
+    )
     return agged.select(
         *[F.col(k) for k in spec.keys],
         "ts",

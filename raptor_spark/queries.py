@@ -2088,32 +2088,33 @@ QUALIFY rank <= 3
 """
 
 
-def _ann_ivf_sql() -> str:
-    cos_cent = _COS_SQL.format(a="e.embedding", b="c.cent")
-    cos_q = _COS_SQL.format(a="q.embedding", b="c.cent")
-    cos_pair = _COS_SQL.format(a="p.qv", b="l.cv")
-    # centroid argmin uses the UNROUNDED cosine in both engines (same
-    # left-to-right double ops); only the output cos_sim is rounded
+def _ivf_topk_sql(cents: str) -> str:
+    """ivf_topk's twin over a ``cents(cid, cent)`` CTE: nearest-list
+    assignment, the 2 probed lists of query vectors 100 <= vec_id < 105
+    and their top-3. Centroids rank by the UNROUNDED cosine in both
+    engines (same left-to-right double ops); only the output cos_sim is
+    rounded. A zero-norm cosine counts as 0.0, the engine's ``cosine``
+    guard — DuckDB's x/0 is NULL, which would sort last."""
     raw_cent = _COS_RAW.format(a="e.embedding", b="c.cent")
     raw_q = _COS_RAW.format(a="q.embedding", b="c.cent")
+    cos_pair = _COS_SQL.format(a="p.qv", b="l.cv")
     return f"""
-WITH cents AS (
-  SELECT vec_id AS cid, embedding AS cent FROM embeddings WHERE vec_id < 16),
+WITH {cents},
 lists AS (
   SELECT neighbor_id, cv, cid FROM (
     SELECT e.vec_id AS neighbor_id, e.embedding AS cv, c.cid,
       row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {raw_cent} DESC, c.cid) AS r
+        ORDER BY coalesce({raw_cent}, 0.0) DESC, c.cid) AS r
     FROM embeddings e CROSS JOIN cents c) WHERE r = 1),
 probes AS (
   SELECT query_id, qv, cid FROM (
     SELECT q.vec_id AS query_id, q.embedding AS qv, c.cid,
       row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY {raw_q} DESC, c.cid) AS r
+        ORDER BY coalesce({raw_q}, 0.0) DESC, c.cid) AS r
     FROM embeddings q CROSS JOIN cents c
     WHERE q.vec_id >= 100 AND q.vec_id < 105) WHERE r <= 2),
 scored AS (
-  SELECT p.query_id, l.neighbor_id, max({cos_pair}) AS cos_sim
+  SELECT p.query_id, l.neighbor_id, max(coalesce({cos_pair}, 0.0)) AS cos_sim
   FROM lists l JOIN probes p ON l.cid = p.cid
   WHERE l.neighbor_id != p.query_id
   GROUP BY 1, 2)
@@ -2123,6 +2124,13 @@ SELECT query_id, neighbor_id, cos_sim,
 FROM scored
 QUALIFY rank <= 3
 """
+
+
+def _ann_ivf_sql() -> str:
+    return _ivf_topk_sql(
+        "cents AS (\n  SELECT vec_id AS cid, embedding AS cent FROM embeddings "
+        "WHERE vec_id < 16)"
+    )
 
 
 def _kmeans_cents_sql(k: int, iters: int, dim: int, sample_n: int,
@@ -2173,37 +2181,7 @@ c{it} AS (
 
 
 def _ann_ivf_kmeans_sql() -> str:
-    cos_cent = _COS_SQL.format(a="e.embedding", b="c.cent")
-    cos_q = _COS_SQL.format(a="q.embedding", b="c.cent")
-    cos_pair = _COS_SQL.format(a="p.qv", b="l.cv")
-    raw_cent = _COS_RAW.format(a="e.embedding", b="c.cent")
-    raw_q = _COS_RAW.format(a="q.embedding", b="c.cent")
-    return f"""
-WITH {_kmeans_cents_sql(8, 2, 64, sample_n=256)},
-lists AS (
-  SELECT neighbor_id, cv, cid FROM (
-    SELECT e.vec_id AS neighbor_id, e.embedding AS cv, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {raw_cent} DESC, c.cid) AS r
-    FROM embeddings e CROSS JOIN cents c) WHERE r = 1),
-probes AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.vec_id AS query_id, q.embedding AS qv, c.cid,
-      row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY {raw_q} DESC, c.cid) AS r
-    FROM embeddings q CROSS JOIN cents c
-    WHERE q.vec_id >= 100 AND q.vec_id < 105) WHERE r <= 2),
-scored AS (
-  SELECT p.query_id, l.neighbor_id, max({cos_pair}) AS cos_sim
-  FROM lists l JOIN probes p ON l.cid = p.cid
-  WHERE l.neighbor_id != p.query_id
-  GROUP BY 1, 2)
-SELECT query_id, neighbor_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 3
-"""
+    return _ivf_topk_sql(_kmeans_cents_sql(8, 2, 64, sample_n=256))
 
 
 def _q_components() -> dict[str, str]:

@@ -68,18 +68,29 @@ def test_backfill_resume_after_failure(spark, src, tmp_path_factory):
     assert got == want
 
 
-def test_backfill_bucketed_mode(spark, src, tmp_path_factory):
-    """The 10^12-scale path: bucketed two-phase windows through the
-    sharded driver, equal to the one-shot bucketed plan."""
-    out = str(tmp_path_factory.mktemp("bf_bkt"))
-    fs = transcript_feature_set()
-    res = backfill(spark, src, fs, out, n_shards=3, source_id="t",
-                   mode="bucketed")
+def test_backfill_union_merge_plan(spark, src, tmp_path_factory):
+    """A feature set the fused plan refuses (keep_previous on an
+    aggregated feature) backfills through the union-merge plan, which
+    reads the source in several branches: the observed input count
+    still equals the source rows, and the output equals the one-shot
+    plan."""
+    from raptor_spark.specs import FeatureSetSpec, feature
+
+    fs = FeatureSetSpec(
+        features=[
+            feature("turn_len", "conv_id", "cast(length(text) as double)",
+                    staleness="1h"),
+            feature("chars_1h", "conv_id", "cast(length(text) as double)",
+                    aggr=["sum"], over="1h", keep_previous=(1, "0")),
+        ],
+        key_feature="turn_len",
+    )
+    oneshot = get_historical(src, fs)
+    assert "Union" in oneshot._jdf.queryExecution().executedPlan().toString()
+    out = str(tmp_path_factory.mktemp("bf_union"))
+    res = backfill(spark, src, fs, out, n_shards=3, source_id="t")
     assert res.shards_run == 3
-    got = _collect_sorted(read_backfill(spark, out))
-    want = _collect_sorted(get_historical(src, fs, mode="bucketed"))
-    assert got == want
-    # the observed input count holds under the multi-branch replay plan
+    assert _collect_sorted(read_backfill(spark, out)) == _collect_sorted(oneshot)
     assert sum(r["input_rows"] for r in _lineage_records(out)) == src.count()
 
 

@@ -5,7 +5,11 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from raptor_spark.backfill import transcript_feature_set
-from raptor_spark.plans.historical import get_historical, get_historical_fused
+from raptor_spark.plans.historical import (
+    _historical_union_merge,
+    get_historical,
+    get_historical_fused,
+)
 from raptor_spark.sources.transcripts import transcripts
 
 
@@ -17,8 +21,8 @@ def _rows(df):
 def test_fused_equals_general(spark):
     src = transcripts(spark, n_convs=30).cache()
     fs = transcript_feature_set()
-    fused = get_historical(src, fs)                # auto-fuses
-    general = get_historical(src, fs, fuse=False)  # union-merge as-of
+    fused = get_historical(src, fs)  # auto-fuses
+    general = _historical_union_merge(src, fs)
     assert sorted(fused.columns) == sorted(general.columns)
     assert _rows(fused) == _rows(general)
 
@@ -38,7 +42,7 @@ def test_fused_since_until(spark):
     since = dt.datetime(2023, 11, 15, 2, 0, 0)
     until = dt.datetime(2023, 11, 15, 8, 0, 0)
     fused = get_historical(src, fs, since=since, until=until)
-    general = get_historical(src, fs, since=since, until=until, fuse=False)
+    general = _historical_union_merge(src, fs, since=since, until=until)
     assert _rows(fused) == _rows(general)
     ts = [r["ts"] for r in fused.select("ts").collect()]
     assert ts and all(since <= t <= until for t in ts)
@@ -67,7 +71,7 @@ def test_filtered_keep_previous_fuses_and_matches_general(spark):
     fused = get_historical(src, fs)
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan and plan.count("Exchange") == 1
-    general = get_historical(src, fs, fuse=False)
+    general = _historical_union_merge(src, fs)
     assert sorted(fused.columns) == sorted(general.columns)
     assert _rows(fused) == _rows(general)
 

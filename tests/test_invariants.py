@@ -11,7 +11,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from raptor_spark.plans.historical import get_historical
+from raptor_spark.plans.historical import _historical_union_merge, get_historical
 from raptor_spark.sources.transcripts import transcripts, transcripts_pandas
 from raptor_spark.specs import FeatureSetSpec, feature
 
@@ -76,13 +76,13 @@ def test_fused_equals_general_filtered_key(spark):
     )
     cols_sorted = None
     frames = {}
-    for fuse in (True, False):
-        df = get_historical(src, fs, fuse=fuse)
+    for plan in (get_historical, _historical_union_merge):
+        df = plan(src, fs)
         cols_sorted = sorted(df.columns)
-        frames[fuse] = (
+        frames[plan] = (
             df.select(*cols_sorted).orderBy(*cols_sorted).toPandas()
         )
-    a, b = frames[True], frames[False]
+    a, b = frames[get_historical], frames[_historical_union_merge]
     assert len(a) == len(b) and len(a) > 0
     for c in cols_sorted:
         av, bv = a[c].to_numpy(), b[c].to_numpy()

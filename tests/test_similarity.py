@@ -217,3 +217,43 @@ def test_kmeans_edge_cases_match_duckdb_twin(spark):
         "SELECT cent FROM cents ORDER BY cid"
     ).fetchall()
     assert local == [list(c) for (c,) in twin]
+
+
+@pytest.mark.parametrize("name", ["ann_ivf", "ann_ivf_kmeans"])
+def test_ivf_oracle_zero_vector_centroid(spark, tmp_path, name):
+    """vec_id 0 is the zero vector: one of ann_ivf's 16 centroids and
+    a neighbor candidate. Its cosine is 0.0 in the engine (the
+    ``cosine`` guard) and must rank there in the DuckDB twin too, above
+    negative cosines — NULL sorted last built different inverted lists
+    and probes, and dropped it from the top-3 of queries 101 and 103."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from raptor_spark.queries import ORACLE_SQL, QUERIES
+    from tools.check_oracles import compare
+
+    rng = np.random.default_rng(7)
+    vecs = [np.zeros(DIM)]
+    for i in range(1, 110):
+        # queries 101 and 103 point into the negative orthant, every
+        # other vector into the positive one: the zero centroid is
+        # their nearest list and the zero vector their second neighbor
+        sign = -1.0 if i in (101, 103) else 1.0
+        vecs.append(sign * rng.uniform(0.1, 1.0, DIM))
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(110), pa.int64()),
+            "embedding": pa.array([v.tolist() for v in vecs],
+                                  pa.list_(pa.float32())),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    got = QUERIES[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
+            f"'{tmp_path}/embeddings.parquet'")
+    want = con.sql(ORACLE_SQL[name]).df()
+    assert len(got) == 15
+    assert compare(name, got, want, exact=True) == []

@@ -78,7 +78,10 @@ class TestSkewedHistorical:
         """End-to-end PIT plan over the Zipf fixture (one 50k-turn
         conversation): completes, row-complete, fused == general."""
         from raptor_spark.backfill import transcript_feature_set
-        from raptor_spark.plans.historical import get_historical
+        from raptor_spark.plans.historical import (
+            _historical_union_merge,
+            get_historical,
+        )
 
         fs = transcript_feature_set()
         fused = get_historical(skewed, fs)
@@ -86,7 +89,7 @@ class TestSkewedHistorical:
         hot = fused.filter(F.col("conv_id") == "conv_00000000")
         assert hot.count() == 50_000
         # spot-check the hot conversation against the general path
-        gen_hot = get_historical(skewed, fs, fuse=False).filter(
+        gen_hot = _historical_union_merge(skewed, fs).filter(
             F.col("conv_id") == "conv_00000000"
         )
         cols = sorted(fused.columns)

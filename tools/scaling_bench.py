@@ -63,9 +63,7 @@ def _stage_totals(spark, group: str) -> dict:
     return tot
 
 
-def child(
-    master: str, input_dir: str, mode: str, shuffle_partitions: int | None
-) -> None:
+def child(master: str, input_dir: str, shuffle_partitions: int | None) -> None:
     from bench import _force
     from raptor_spark.session import get_spark
     from raptor_spark.plans.historical import get_historical
@@ -81,11 +79,11 @@ def child(
     try:
         src = spark.read.parquet(input_dir)
         # warmup: JVM + codegen on a slice, excluded from timing
-        _force(get_historical(src.limit(10_000), transcript_feature_set(), mode=mode))
+        _force(get_historical(src.limit(10_000), transcript_feature_set()))
         n_in = src.count()
         spark.sparkContext.setJobGroup("scaling_bench timed", "timed run")
         t0 = time.perf_counter()
-        _force(get_historical(src, transcript_feature_set(), mode=mode))
+        _force(get_historical(src, transcript_feature_set()))
         wall = time.perf_counter() - t0
         tot = _stage_totals(spark, "scaling_bench timed")
         print(json.dumps({
@@ -98,16 +96,14 @@ def child(
         spark.stop()
 
 
-def measure(
-    cores: int, input_dir: str, mode: str, shuffle_partitions: int | None
-) -> dict:
+def measure(cores: int, input_dir: str, shuffle_partitions: int | None) -> dict:
     env = dict(os.environ)
     # 16g: headroom above the narrow-row window buffers without the
     # multi-second ParallelGC old-gen pauses a 48g heap produces (the
     # 480M-turn runs use 8g: see BENCH/BASELINE.md)
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     cmd = [sys.executable, os.path.abspath(__file__), "--run",
-           f"local[{cores}]", "--input", input_dir, "--mode", mode]
+           f"local[{cores}]", "--input", input_dir]
     if shuffle_partitions:
         cmd += ["--shuffle-partitions", str(shuffle_partitions)]
     out = subprocess.run(
@@ -128,7 +124,6 @@ def main() -> None:
                    help="repeat each level, keep best (VM noise)")
     p.add_argument("--input-dir", default=None,
                    help="reuse an existing transcripts parquet dir")
-    p.add_argument("--mode", choices=["exact", "bucketed"], default="exact")
     p.add_argument("--shuffle-partitions", type=int, default=None,
                    help="spark.sql.shuffle.partitions for every level "
                    "(default: 4 x that level's cores)")
@@ -139,7 +134,7 @@ def main() -> None:
     args = p.parse_args()
 
     if args.run:
-        child(args.run, args.input, args.mode, args.shuffle_partitions)
+        child(args.run, args.input, args.shuffle_partitions)
         return
 
     if args.input_dir:
@@ -162,10 +157,8 @@ def main() -> None:
     lo_runs: list = []
     hi_runs: list = []
     for _ in range(args.reps):
-        lo_runs.append(
-            measure(args.low, input_dir, args.mode, args.shuffle_partitions))
-        hi_runs.append(
-            measure(args.high, input_dir, args.mode, args.shuffle_partitions))
+        lo_runs.append(measure(args.low, input_dir, args.shuffle_partitions))
+        hi_runs.append(measure(args.high, input_dir, args.shuffle_partitions))
 
     def best(runs: list) -> dict:
         b = min(runs, key=lambda r: r["wall_s"])
@@ -179,7 +172,6 @@ def main() -> None:
         "metric": "backfill scaling efficiency (localN as executor stand-in)",
         "input": args.input_dir or f"generated n_convs={args.n_convs}",
         "input_rows": lo["input_rows"],
-        "mode": args.mode,
         "shuffle_partitions": args.shuffle_partitions or "4 x cores",
         "low": lo, "high": hi,
         "efficiency": round(eff, 3),
@@ -191,7 +183,7 @@ def main() -> None:
 
 North rule: throughput scaling efficiency >= 0.8 from N to 4N
 executors. Sandbox stand-in: same historical-backfill job
-(`transcript_feature_set`, mode={args.mode}) on the same
+(`transcript_feature_set`) on the same
 {lo['input_rows']:,}-turn parquet input, two fresh JVMs.
 
 | parallelism | wall (s) | throughput (turns/s) |
