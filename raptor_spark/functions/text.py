@@ -103,14 +103,6 @@ def repetition_stats_from_tokens(
     return n_grams, ratio
 
 
-def repetition_stats(text: Column | str, n: int = 3) -> tuple[Column, Column]:
-    """As :func:`repetition_stats_from_tokens` from raw text. For hot
-    paths stage ``split(norm, ' ')`` in its own select and use the
-    from_tokens variant."""
-    t = F.col(text) if isinstance(text, str) else text
-    return repetition_stats_from_tokens(F.split(norm_ws(t), " "), n)
-
-
 def quality_score(text: Column | str) -> Column:
     """Heuristic document quality in [0,1]: rewards alphabetic content
     and reasonable length, penalizes shouting and punctuation walls.

@@ -50,7 +50,6 @@ def asof_join(
     ts_col: str = "ts",
     value_cols: Optional[Sequence[str]] = None,
     staleness_us: Optional[dict[str, int] | int] = None,
-    tiebreak_col: Optional[str] = None,
     feature_order_col: Optional[str] = None,
 ) -> DataFrame:
     """As-of join ``feature_values``'s value columns onto ``spine``.
@@ -59,9 +58,6 @@ def asof_join(
     staleness_us: per-value-column dict (or one int for all); a joined
     value is nulled when its source ts < spine ts − staleness. 0/None ⇒
     no cutoff (staleness check W4, replay.py:263-264).
-    tiebreak_col: optional spine column making in-key ordering total
-    (e.g. event id / turn_idx) — affects only ordering among same-ts
-    spine rows, never which feature values are visible.
     feature_order_col: optional FEATURE-side column ordering same-ts
     feature rows (e.g. an event/sequence id) — ``last()`` then
     deterministically resolves duplicate (keys, ts) feature rows to
@@ -113,8 +109,6 @@ def asof_join(
         # value; nulls (spine rows) sort last within their _is_spine
         # group, which is irrelevant since spine rows carry no values.
         order.append(F.col("_ford").asc_nulls_last())
-    if tiebreak_col:
-        order.append(F.col(tiebreak_col).asc_nulls_first())
     w = (
         W.partitionBy(*keys)
         .orderBy(*order)

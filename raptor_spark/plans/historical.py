@@ -6,12 +6,20 @@ per-feature CTEs + chained backward as-of LEFT JOINs, lines 104-122) and
 the LabSDK's ``new_historical_get``
 (``/root/reference/labsdk/raptor/replay.py:303-366``).
 
-Physical design: ALL features that share the entity key are merged in
-ONE union-merge pass (see ``operators/asof.py``) — a single hash
-shuffle on the key + one in-partition sort carries every feature
-column, vs. the reference SQL's N chained range joins. Features are
-replayed independently (each an embarrassingly parallel scan +
-window), then unioned by name.
+Two physical plans, chosen from the inputs:
+
+- ``get_historical_fused`` — every feature is a window expression over
+  ONE scan of the shared source (one hash shuffle + one in-partition
+  sort); the spine is the key feature's source rows.
+- ``_assemble`` — the as-of plan. Each feature's value frame is read
+  on its own (``replay_wide`` over its source, or a partition-pruned
+  scan of the materialized store), the frames of one key family are
+  unioned by name, and each family is ONE ``asof_join`` on that
+  family's keys (see ``operators/asof.py``): of the whole spine for the
+  key feature's family, of the distinct (keys, ts) spine rows, joined
+  back, for a foreign family. It serves an explicit spine, per-feature
+  ``sources``, a windowed key feature, features that cannot fuse, and
+  every store read.
 
 Time-range handling (M2/M7): when (since, until) are given, feature
 inputs are padded back by each feature's staleness
@@ -19,31 +27,36 @@ inputs are padded back by each feature's staleness
 complete; padding rows are dropped after the merge (``data`` vs
 ``base`` CTE, featureset.tmpl.sql:51).
 
-keep_previous (W2): realized plan-side — the feature-values stream is
-pre-lagged per key (lag N of value & ts + age guard,
-replay.py:246-261) and the lagged columns ride the same union-merge.
+keep_previous (W2): the fused plan lags inside its window pass; the
+as-of plan packs each value column's versions into a struct on the
+value frame (``_kp_pack``, lag N of value & ts + age guard,
+replay.py:246-261) that rides the as-of join.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from typing import Optional, Sequence
+import functools
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F, Window as W
 
 from ..operators.tsutil import micros
 
 from ..specs import FeatureSetSpec, FeatureSpec
-from .replay import replay_wide
+from .replay import _eval_expr, encode_keys, replay_wide
 
 
-def _lag_feature_values(
-    fv: DataFrame, spec: FeatureSpec, value_cols: Sequence[str]
-) -> tuple[DataFrame, list[str]]:
-    """Materialize keep_previous versions on the feature-values stream
-    (lag over the value history per key) — PACKED into ONE struct
-    column ``_kp_<name>`` per feature rather than separate columns.
+def _kp_pack(fv: DataFrame, keys, cols, kp) -> DataFrame:
+    """keep_previous versions of each value column ``c`` in ``cols``,
+    PACKED into one struct column ``_kp_<c>`` with fields
+    ``<c>_prev1..N``. Version n is the n-th previous non-null ``c`` per
+    ``keys`` (IGNORE NULLS: the frames of a store read interleave the
+    rows of a feature's sibling fqns; on a replayed frame every row is
+    an update and this is a plain lag), same-ts ties ordered
+    updates-first like the fused plan, and nulled when older than
+    n × ``over`` (the reference's age guard, replay.py:256-259).
 
     The pack is what keeps versions PIT-consistent through the as-of
     merge: ``asof_join`` forward-fills each column independently with
@@ -52,34 +65,29 @@ def _lag_feature_values(
     would resurrect an older update's (younger-at-the-time) version,
     e.g. prev1 = the value from TWO updates back, disagreeing with the
     fused plan and the reference's latest-update-anchored versioning
-    (caught by review r3, runtime-confirmed). A struct is non-null at
-    every update row even when its FIELDS are guard-nulled, so the
-    fill always lands on the same winning row as the base value.
-    Unpacked after the join by ``_unpack_kp``."""
-    kp = spec.keep_previous
-    if kp is None:
-        return fv, list(value_cols)
-    w = W.partitionBy(*spec.keys).orderBy(F.col("ts").asc())
-    fields = []
-    for n in range(1, kp.versions + 1):
-        lag_ts = F.lag(micros("ts"), n).over(w)
-        guard = (
-            lag_ts >= micros("ts") - F.lit(n * kp.over_us)
-            if kp.over_us > 0
-            else F.lit(True)
-        )
-        for c in value_cols:
-            fields.append(
-                F.when(guard, F.lag(F.col(c), n).over(w)).alias(f"{c}_prev{n}")
-            )
-    pack = f"_kp_{spec.name}"
-    out = fv.select("*", F.struct(*fields).alias(pack))
-    return out, list(value_cols) + [pack]
+    (caught by review r3, runtime-confirmed). The struct is non-null
+    at exactly the column's update rows even when its FIELDS are
+    guard-nulled, so the fill always lands on the same winning row as
+    the base value. Unpacked after the join by ``_unpack_kp``."""
+    tsu = micros("ts")
+    packs = []
+    for c in cols:
+        w = W.partitionBy(*keys).orderBy(tsu, F.col(c).isNull())
+        c_ts = f"CASE WHEN `{c}` IS NOT NULL THEN unix_micros(cast(ts as timestamp)) END"
+        fields = []
+        for n in range(1, kp.versions + 1):
+            lagged = F.expr(f"lag(`{c}`, {n}) ignore nulls").over(w)
+            if kp.over_us > 0:
+                lag_ts = F.expr(f"lag({c_ts}, {n}) ignore nulls").over(w)
+                lagged = F.when(lag_ts >= tsu - F.lit(n * kp.over_us), lagged)
+            fields.append(lagged.alias(f"{c}_prev{n}"))
+        packs.append(F.when(F.col(c).isNotNull(), F.struct(*fields)).alias(f"_kp_{c}"))
+    return fv.select("*", *packs)
 
 
 def _unpack_kp(df: DataFrame) -> DataFrame:
-    """Expand ``_kp_*`` struct columns (see ``_lag_feature_values``)
-    into their prev-version fields, in place."""
+    """Expand ``_kp_*`` struct columns (see ``_kp_pack``) into their
+    prev-version fields, in place."""
     if not any(c.startswith("_kp_") for c in df.columns):
         return df
     cols = []
@@ -341,6 +349,106 @@ def get_historical_fused(
     return out
 
 
+def _assemble(
+    spine: DataFrame,
+    fs: FeatureSetSpec,
+    read: Callable[[FeatureSpec, Optional[dt.datetime], Optional[dt.datetime]], DataFrame],
+    keyed_by: Callable[[tuple[str, ...]], dict[str, Column]],
+    since: Optional[dt.datetime],
+    until: Optional[dt.datetime],
+) -> DataFrame:
+    """The as-of plan: each base feature's value frame, joined backward
+    on its keys onto the spine (featureset.tmpl.sql:104-122), then the
+    derived features.
+
+    read(spec, lo, hi): the feature's value frame — its key columns,
+    ``ts`` and one column per base output (``name`` or ``name_fn``),
+    cut to ``lo <= ts <= hi`` (None = open) where its source can prune.
+    ``lo`` is ``since`` less the staleness and the keep_previous
+    lookback, so windows and version chains at the range start are
+    complete.
+
+    keyed_by(family_keys): the columns the frames of that key family
+    are keyed by, each as a Column over the spine; those the spine
+    lacks are added for the join and dropped after it.
+
+    Features sharing a key tuple form a family: their frames are
+    unioned by name and ride ONE ``asof_join``. The key feature's
+    family joins the whole spine; a foreign family (keyed by another
+    entity) joins the distinct (keys, ts) rows of the spine and
+    equi-joins back, legal as long as the spine row carries its key
+    columns. Outputs already on the spine are not joined again.
+    """
+    from ..operators.asof import asof_join
+
+    on_spine = set(spine.columns)
+    families: dict[tuple[str, ...], tuple[list[DataFrame], dict[str, int]]] = {}
+    for spec in fs.base_features():
+        if set(spec.output_columns()) <= on_spine:
+            continue
+        missing = [k for k in spec.keys if k not in on_spine]
+        if missing:
+            raise ValueError(
+                f"feature '{spec.name}' is keyed by {list(spec.keys)} but the "
+                f"spine lacks column(s) {missing}; the spine row must carry "
+                "every entity key its features join on (featureset.tmpl.sql "
+                "joins f.KEYS = key.KEYS)"
+            )
+        lo = None
+        if since is not None:
+            pad_us = spec.effective_staleness_us + _kp_pad_us(spec)
+            lo = since - dt.timedelta(microseconds=pad_us)
+        on = list(keyed_by(tuple(spec.keys)))
+        fv = read(spec, lo, until)
+        base = [c for c in fv.columns if c not in (*on, "ts")]
+        # the staleness cutoff applies to the base value (W4); prev
+        # versions carry their own age guard inside the pack
+        staleness = {
+            c: spec.effective_staleness_us for c in base if c not in on_spine
+        }
+        if spec.keep_previous is not None:
+            fv = _kp_pack(fv, on, base, spec.keep_previous)
+            staleness.update({f"_kp_{c}": 0 for c in base})
+        frames, fam_staleness = families.setdefault(tuple(spec.keys), ([], {}))
+        frames.append(fv.select(*on, "ts", *staleness))
+        fam_staleness.update(staleness)
+
+    primary = tuple(fs.resolve_key_feature().keys)
+    out = _in_range(spine, "ts", since, until)
+    for fam_keys, (frames, staleness) in families.items():
+        on = keyed_by(fam_keys)
+        tags = {c: e for c, e in on.items() if c not in out.columns}
+        tagged = out.withColumns(tags)
+        # a foreign family joins the DISTINCT (keys, ts) rows of the
+        # spine and equi-joins back: that pass reads only the spine's
+        # key and ts columns, so it runs beside the primary pass instead
+        # of after it (hetero_keys at 10x: BENCH/BASELINE.md, "Foreign
+        # key family: whole spine vs distinct sub-spine")
+        foreign = fam_keys != primary
+        target = tagged.select(*on, "ts").distinct() if foreign else tagged
+        merged = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
+        joined = _unpack_kp(
+            asof_join(
+                target, merged, keys=list(on), ts_col="ts",
+                value_cols=list(staleness), staleness_us=staleness,
+            )
+        )
+        if foreign:
+            joined = tagged.join(joined, on=[*on, "ts"], how="left")
+        out = joined.drop(*tags)
+    return _derive(out, fs)
+
+
+def _derive(out: DataFrame, fs: FeatureSetSpec) -> DataFrame:
+    """Derived (sourceless) features — ``derived_inputs`` set — applied
+    over the wide frame in dependency order (J4)."""
+    for spec in fs.derived_topo():
+        out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
+    return out
+
+
 def historical_from_store(
     catalog,
     table: str,
@@ -356,146 +464,54 @@ def historical_from_store(
     the features table, joined on encoded KEYS onto the key feature).
 
     Each feature's rows come from a partition-pruned scan of its fqn
-    dirs (Catalog.read_feature_values); all features union-merge into
-    ONE as-of pass on the ENCODED key string (f.KEYS = key.KEYS —
-    heterogeneous entities welcome, the encoding carries them). The
+    dirs (Catalog.read_feature_values); each key family joins in ONE
+    as-of pass on the ENCODED key string (f.KEYS = key.KEYS). The
     spine must contain every feature's raw key columns; its keys are
     encoded with the same ';'.join.
 
     value_types: per-feature stored value type (default 'double' — the
     type of every windowed value and the common primitive case).
     """
-    from ..operators.asof import asof_join
-    from .replay import encode_keys
 
-    ts_col = "ts"
-    staleness: dict[str, int] = {}
-    # family (key tuple) → (frames, value cols): features sharing an
-    # entity share one union-merge pass on the encoded key string
-    families: dict[tuple[str, ...], tuple[list[DataFrame], list[str]]] = {}
-    for spec in fs.features:
-        if spec.derived_inputs is not None:
-            continue
-        vt = (value_types or {}).get(spec.name, "double")
+    def read(spec, lo, hi):
         if spec.aggr is not None:
             fqn_cols = [
                 (f"{spec.fqn}+{fn}", f"{spec.name}_{fn}") for fn in spec.aggr.fns
             ]
         else:
             fqn_cols = [(spec.fqn, spec.name)]
+        vt = (value_types or {}).get(spec.name, "double")
         df = catalog.read_feature_values(table, [f for f, _ in fqn_cols], vt)
-        if since is not None:
-            pad_us = spec.effective_staleness_us + _kp_pad_us(spec)
-            lo = since - dt.timedelta(microseconds=pad_us)
-            df = df.filter(F.col(ts_col) >= F.lit(lo))
-        if until is not None:
-            df = df.filter(F.col(ts_col) <= F.lit(until))
-        fv = df.select(
+        return _in_range(df, "ts", lo, hi).select(
             F.col("keys").alias("_keys"),
-            F.col(ts_col),
+            "ts",
             *[
                 F.when(F.col("fqn") == f, F.col("value")).alias(c)
                 for f, c in fqn_cols
             ],
         )
-        pack_cols: list[str] = []
-        if spec.keep_previous is not None:
-            # keep_previous from the STORE: the per-fqn rows ARE the
-            # update stream, so version n = n-th previous non-null of
-            # the column (rows for sibling fqns of one feature
-            # interleave → IGNORE NULLS; ties sort updates-first like
-            # the fused plan). Versions are PACKED into a struct per
-            # column, non-null exactly at the column's own update rows,
-            # so the as-of forward-fill carries (value, prev*) as ONE
-            # consistent PIT version — a guard-expired prev stays
-            # expired instead of being filled past from an older update
-            # (see _lag_feature_values).
-            kp = spec.keep_previous
-            tsu_c = micros(ts_col)
-            pack_exprs = []
-            for _, c in fqn_cols:
-                tie_w = W.partitionBy("_keys").orderBy(
-                    tsu_c, F.col(c).isNull()
-                )
-                c_ts_sql = (
-                    f"CASE WHEN `{c}` IS NOT NULL THEN "
-                    f"unix_micros(cast({ts_col} as timestamp)) END"
-                )
-                fields = []
-                for n in range(1, kp.versions + 1):
-                    lagged = F.expr(f"lag(`{c}`, {n}) ignore nulls").over(
-                        tie_w
-                    )
-                    if kp.over_us > 0:
-                        lag_ts = F.expr(
-                            f"lag({c_ts_sql}, {n}) ignore nulls"
-                        ).over(tie_w)
-                        lagged = F.when(
-                            lag_ts >= tsu_c - F.lit(n * kp.over_us), lagged
-                        )
-                    fields.append(lagged.alias(f"{c}_prev{n}"))
-                pack_exprs.append(
-                    F.when(F.col(c).isNotNull(), F.struct(*fields)).alias(
-                        f"_kp_{c}"
-                    )
-                )
-                pack_cols.append(f"_kp_{c}")
-            fv = fv.select("*", *pack_exprs)
-        missing = [k for k in spec.keys if k not in spine.columns]
-        if missing:
-            raise ValueError(
-                f"spine lacks key column(s) {missing} for feature "
-                f"'{spec.name}'"
-            )
-        frames, cols = families.setdefault(tuple(spec.keys), ([], []))
-        frames.append(fv)
-        st = spec.effective_staleness_us
-        for _, c in fqn_cols:
-            staleness[c] = st
-            cols.append(c)
-        for c in pack_cols:
-            # prev versions carry their own age guard (no W4 cutoff)
-            staleness[c] = 0
-            cols.append(c)
 
-    out = _in_range(spine, ts_col, since, until)
-    for fam_keys, (frames, cols) in families.items():
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f, allowMissingColumns=True)
-        tagged = out.withColumn("_keys", encode_keys(out, fam_keys))
-        out = _unpack_kp(
-            asof_join(
-                tagged, merged, keys=["_keys"], ts_col=ts_col,
-                value_cols=cols,
-                staleness_us={c: staleness[c] for c in cols},
-            ).drop("_keys")
-        )
-
-    derived = fs.derived_topo()
-    if derived:
-        from .replay import _eval_expr
-
-        for spec in derived:
-            out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
-    return out
+    return _assemble(
+        spine, fs, read, lambda keys: {"_keys": encode_keys(spine, keys)},
+        since, until,
+    )
 
 
 def _in_range(
-    spine: DataFrame,
+    df: DataFrame,
     ts_col: str,
-    since: Optional[dt.datetime],
-    until: Optional[dt.datetime],
+    lo: Optional[dt.datetime],
+    hi: Optional[dt.datetime],
 ) -> DataFrame:
-    """Spine rows with ``since <= ts <= until``. Filtered BEFORE the
-    as-of joins: feature sources are cut to that range (less the
-    lookback pad), so a row outside it would silently read truncated
-    history."""
-    if since is not None:
-        spine = spine.filter(F.col(ts_col) >= F.lit(since))
-    if until is not None:
-        spine = spine.filter(F.col(ts_col) <= F.lit(until))
-    return spine
+    """Rows of ``df`` with ``lo <= ts <= hi`` (None = open). The spine
+    is cut BEFORE the as-of joins: feature sources are cut to that
+    range (less the lookback pad), so a row outside it would silently
+    read truncated history."""
+    if lo is not None:
+        df = df.filter(F.col(ts_col) >= F.lit(lo))
+    if hi is not None:
+        df = df.filter(F.col(ts_col) <= F.lit(hi))
+    return df
 
 
 def get_historical(
@@ -516,41 +532,28 @@ def get_historical(
     The plan follows from the inputs alone: the single-pass fused plan
     when there is no explicit spine, every feature reads ``source``, the
     key feature is not windowed and every feature is ``_fusible``; the
-    union-merge as-of plan otherwise.
+    as-of plan otherwise.
     Both compute exact per-event windows (LabSDK replay semantics).
 
     Derived (sourceless) features — ``derived_inputs`` set — are
     applied over the wide frame after the base pass, in dependency
     order (J4).
     """
-    derived = fs.derived_topo()
-    if derived:
-        base_fs = FeatureSetSpec(
-            features=fs.base_features(), key_feature=fs.key_feature
-        )
-        out = get_historical(
-            source, base_fs, spine=spine, since=since, until=until,
-            sources=sources,
-        )
-        from .replay import _eval_expr
-
-        for spec in derived:
-            out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
-        return out
-
     if sources is not None and all(s is source for s in sources.values()):
         # every feature reads the same frame → eligible for the fused
         # single-pass plan (the decorator API always passes `sources`)
         sources = None
 
     key_feature = fs.resolve_key_feature()
+    base = fs.base_features()
     if (
         spine is None
         and sources is None
         and key_feature.aggr is None
-        and all(_fusible(f, key_feature.keys, "ts") for f in fs.features)
+        and all(_fusible(f, key_feature.keys, "ts") for f in base)
     ):
-        return get_historical_fused(source, fs, since=since, until=until)
+        base_fs = FeatureSetSpec(features=base, key_feature=fs.key_feature)
+        return _derive(get_historical_fused(source, base_fs, since, until), fs)
     return _historical_union_merge(source, fs, spine, since, until, sources)
 
 
@@ -562,120 +565,19 @@ def _historical_union_merge(
     until: Optional[dt.datetime] = None,
     sources: Optional[dict[str, DataFrame]] = None,
 ) -> DataFrame:
-    """The general plan behind ``get_historical`` for a feature set
-    without derived features: each feature replayed on its own, then
-    union-merged onto the spine by backward as-of joins."""
-    key_feature = fs.resolve_key_feature()
-    keys = key_feature.keys
-    ts_col = "ts"
+    """The as-of plan over recomputed values: each feature replayed on
+    its own source (``replay_wide``, native key columns) and joined
+    onto the spine — by default the key feature's value rows, which
+    already carry its base columns. Keys stay native: ';'-encoding
+    drops NULLs, so it could merge distinct key tuples."""
+
+    def read(spec, lo, hi):
+        f_src = (sources or {}).get(spec.name, source)
+        return replay_wide(_in_range(f_src, spec.timestamp_col, lo, hi), spec)
 
     if spine is None:
-        kf_src = (sources or {}).get(key_feature.name, source)
-        spine = replay_wide(kf_src, key_feature).select(
-            *keys, ts_col, *[c for c in key_feature.output_columns() if "_prev" not in c]
-        )
-        # the spine carries the key feature's base columns; its
-        # keep_previous columns are NOT on the spine (they need the
-        # lag pass) — leave them to the union-merge below
-        joined_from_spine = {
-            c for c in key_feature.output_columns() if "_prev" not in c
-        }
-    else:
-        joined_from_spine = set()
-    spine = _in_range(spine, ts_col, since, until)
-
-    # union-merge all remaining features, ONE as-of pass per KEY FAMILY
-    # (features sharing an entity-key tuple ride the same pass). The
-    # reference's template joins every feature CTE on its encoded KEYS
-    # (featureset.tmpl.sql:104-122) — heterogeneous entities are legal
-    # as long as the spine row carries the foreign key columns.
-    from ..operators.asof import asof_join
-
-    families: dict[tuple[str, ...], list[tuple[FeatureSpec, list[str]]]] = {}
-    for spec in fs.features:
-        cols = [c for c in spec.output_columns() if c not in joined_from_spine]
-        if not cols:
-            continue
-        families.setdefault(tuple(spec.keys), []).append((spec, cols))
-
-    if not families:
-        return spine
-
-    def _family_feature_values(
-        members: list[tuple[FeatureSpec, list[str]]], fam_keys: tuple[str, ...]
-    ) -> tuple[DataFrame, list[str], dict[str, int]]:
-        fv_frames: list[DataFrame] = []
-        staleness: dict[str, int] = {}
-        value_cols: list[str] = []
-        for spec, cols in members:
-            f_src = (sources or {}).get(spec.name, source)
-            if since is not None:
-                pad_us = spec.effective_staleness_us + _kp_pad_us(spec)
-                lo = since - dt.timedelta(microseconds=pad_us)
-                f_src = f_src.filter(F.col(spec.timestamp_col) >= F.lit(lo))
-            if until is not None:
-                f_src = f_src.filter(F.col(spec.timestamp_col) <= F.lit(until))
-            fv = replay_wide(f_src, spec)
-            base_cols = [c for c in fv.columns if c not in (*fam_keys, ts_col)]
-            fv, all_cols = _lag_feature_values(fv, spec, base_cols)
-            fv = fv.select(
-                *fam_keys,
-                ts_col,
-                *[c for c in all_cols if c in cols or c.startswith("_kp_")],
-            )
-            fv_frames.append(fv)
-            st = spec.effective_staleness_us
-            for c in cols:
-                # prev versions ride the _kp_ struct (their own age
-                # guard, evaluated at the update row); the staleness
-                # cutoff applies to the base value (W4).
-                if "_prev" in c:
-                    continue
-                staleness[c] = st
-                if c in fv.columns:
-                    value_cols.append(c)
-            pack = f"_kp_{spec.name}"
-            if pack in fv.columns:
-                staleness[pack] = 0
-                value_cols.append(pack)
-        merged = fv_frames[0]
-        for f in fv_frames[1:]:
-            merged = merged.unionByName(f, allowMissingColumns=True)
-        return merged, value_cols, staleness
-
-    # primary family (spine's own keys) merges directly onto the spine
-    out = spine
-    primary = families.pop(tuple(keys), None)
-    if primary is not None:
-        merged, value_cols, staleness = _family_feature_values(primary, tuple(keys))
-        out = _unpack_kp(
-            asof_join(
-                out, merged, keys=keys, ts_col=ts_col,
-                value_cols=value_cols, staleness_us=staleness,
-            )
-        )
-
-    # each foreign family: as-of against the DISTINCT (family-keys, ts)
-    # sub-spine — far smaller than the spine when the foreign entity is
-    # coarser — then an equi-join back on (family-keys, ts). Two
-    # shuffles per family instead of per feature.
-    for fam_keys, members in families.items():
-        missing = [k for k in fam_keys if k not in spine.columns]
-        if missing:
-            raise ValueError(
-                f"feature(s) {[s.name for s, _ in members]} are keyed by "
-                f"{fam_keys} but the spine lacks column(s) {missing}; the "
-                "spine row must carry every foreign entity key it joins on "
-                "(featureset.tmpl.sql joins f.KEYS = key.KEYS)"
-            )
-        sub_spine = out.select(*fam_keys, ts_col).distinct()
-        merged, value_cols, staleness = _family_feature_values(members, fam_keys)
-        fam_out = _unpack_kp(
-            asof_join(
-                sub_spine, merged, keys=list(fam_keys), ts_col=ts_col,
-                value_cols=value_cols, staleness_us=staleness,
-            )
-        )
-        out = out.join(fam_out, on=[*fam_keys, ts_col], how="left")
-
-    return out
+        key_feature = fs.resolve_key_feature()
+        spine = replay_wide((sources or {}).get(key_feature.name, source), key_feature)
+    return _assemble(
+        spine, fs, read, lambda keys: {k: F.col(k) for k in keys}, since, until
+    )

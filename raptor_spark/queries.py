@@ -478,8 +478,10 @@ def q_hetero_keys(spark, sf_dir):
     (featureset.tmpl.sql:104-122 joins every feature on its own encoded
     KEYS). Spine = every event (carrying both entity keys); features:
     per-USER trailing 1h count, per-EVENT-TYPE trailing 6h avg. The
-    foreign family runs against the distinct (event_type, ts) sub-spine
-    and equi-joins back."""
+    key feature's (user) family joins the whole spine; the foreign
+    family runs against the distinct (event_type, ts) sub-spine and
+    equi-joins back — the one foreign-family strategy of both the
+    recompute and the store-read path."""
     from .plans.historical import get_historical
     from .specs import FeatureSetSpec, feature
 

@@ -264,6 +264,12 @@ def rest_enrich(
     ``{keys}`` in the URL is ';'-joined,
     not the reference's ``url.Values`` encoding (see ``url_expr``).
 
+    A malformed payload (not parseable as JSON) yields all-NULL
+    fields plus its ``rest_status``, just as a sparse payload that lacks
+    every field does. This softening is on purpose: one bad response
+    must not fail the whole enrichment, and nothing in the output tells
+    the two apart.
+
     Raises ``ValueError`` at build time when a spine column other than
     ``key_cols`` shares its name with ``rest_status`` or a field of
     ``schema`` (the joined frame would carry it twice).

@@ -137,8 +137,16 @@ def test_heterogeneous_key_families(spark, transcripts_pair):
     assert np.allclose(a[~np.isnan(a)], b[~np.isnan(b)])
 
 
-def test_heterogeneous_key_missing_spine_column_raises(spark, transcripts_pair):
+def test_heterogeneous_key_missing_spine_column_raises(
+    spark, transcripts_pair, tmp_path
+):
+    """Recompute and store read raise the same error when the spine
+    lacks a foreign family's key column."""
     import pytest
+
+    from raptor_spark.plans.historical import historical_from_store
+    from raptor_spark.plans.replay import replay
+    from raptor_spark.sources.catalog import Catalog
 
     sdf, _ = transcripts_pair
     role_len = feature(
@@ -148,6 +156,12 @@ def test_heterogeneous_key_missing_spine_column_raises(spark, transcripts_pair):
     spine = sdf.select("conv_id", "ts")  # lacks 'role'
     with pytest.raises(ValueError, match="spine lacks column"):
         get_historical(sdf, fs, spine=spine)
+
+    cat = Catalog(spark, root=str(tmp_path))
+    for spec in fs.features:
+        cat.write_feature_values(replay(sdf, spec), "features")
+    with pytest.raises(ValueError, match="spine lacks column"):
+        historical_from_store(cat, "features", fs, spine)
 
 
 def test_keep_previous_in_historical(spark, transcripts_pair):

@@ -3,6 +3,7 @@ training set read from the MATERIALIZED feature-values table
 (partition-pruned per-fqn scans, joined on encoded KEYS), equal to the
 recompute-from-source path."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from raptor_spark.plans.historical import get_historical, historical_from_store
@@ -100,6 +101,50 @@ def test_store_read_keep_previous_equals_recompute(spark, tmp_path):
     assert "turn_len_prev2" in from_store.columns
     assert sorted(from_store.columns) == sorted(recomputed.columns)
     assert _rows(from_store) == _rows(recomputed)
+
+
+@pytest.mark.parametrize(
+    "case", ["kp_aggregated", "kp_foreign_family", "since_until", "duplicate_spine"]
+)
+def test_store_read_equals_recompute_cases(spark, tmp_path, case):
+    """Store read ≡ recompute on what both paths share: keep_previous
+    on an aggregated feature and on a feature of a foreign key family
+    (keyed by role, not by the spine's conv_id), a since/until range
+    (padded by the staleness and the version lookback), and a spine
+    that holds every row twice."""
+    src = transcripts(spark, 10).cache()
+    turn_len = feature(
+        "turn_len", "conv_id", "cast(length(text) as double)", staleness="30m"
+    )
+    chars_1h = feature(
+        "chars_1h", "conv_id", "cast(length(text) as double)",
+        aggr=["sum", "avg"], over="1h", keep_previous=(2, "1h"),
+    )
+    role_len = feature(
+        "role_len", "role", "cast(length(text) as double)",
+        staleness="30m", keep_previous=(2, "1h"),
+    )
+    other = role_len if case == "kp_foreign_family" else chars_1h
+    fs = FeatureSetSpec(features=[turn_len, other], key_feature="turn_len")
+
+    cat = Catalog(spark, root=str(tmp_path))
+    for spec in fs.features:
+        cat.write_feature_values(replay(src, spec), "features")
+
+    spine = src.select("conv_id", "role", "ts")
+    if case == "duplicate_spine":
+        spine = spine.unionAll(spine)
+    rng = {}
+    if case == "since_until":
+        lo, hi = spine.agg(F.min("ts"), F.max("ts")).first()
+        rng = {"since": lo + (hi - lo) / 2, "until": lo + (hi - lo) * 3 / 4}
+
+    from_store = historical_from_store(cat, "features", fs, spine, **rng)
+    recomputed = get_historical(src, fs, spine=spine, **rng)
+    assert sorted(from_store.columns) == sorted(recomputed.columns)
+    want = _rows(recomputed)
+    assert 0 < len(want)
+    assert _rows(from_store) == want
 
 
 def test_kp_guard_expiry_not_resurrected(spark, tmp_path):

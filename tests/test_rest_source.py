@@ -141,6 +141,23 @@ def test_rest_enrich_malformed_payload_yields_null_fields(spark, tmp_path):
     assert row["rest_status"] == 200
     assert row["plan"] is None and row["score"] is None
 
+    # on purpose, a malformed payload reads exactly like a sparse one
+    def fake_fetch(url, cfg):
+        return 200, "{not json" if url.endswith("/1") else "{}"
+
+    spine = spark.createDataFrame([(1,), (2,)], "user_id int")
+    rows = rest_enrich(
+        spine,
+        RestSourceConfig(url="http://h/users/{key:user_id}"),
+        "plan string, score int",
+        ["user_id"],
+        fetcher=fake_fetch,
+    ).orderBy("user_id").collect()
+    assert [r.asDict() for r in rows] == [
+        {"user_id": 1, "rest_status": 200, "plan": None, "score": None},
+        {"user_id": 2, "rest_status": 200, "plan": None, "score": None},
+    ]
+
 
 def test_rest_enrich_plan_broadcasts_enrichment(spark, tmp_path):
     """The final (post-AQE) plan broadcasts the enrichment frame."""

@@ -47,11 +47,17 @@ NOTES = {
         "the publish/forward-fill path; plan shape is unchanged."
     ),
     "hetero_keys": (
-        "Two key families = two as-of passes. The foreign family runs "
+        "Two key families = two as-of passes. The per-user family "
+        "joins the whole spine; the per-event-type family runs "
         "against the DISTINCT (event_type, ts) sub-spine and joins "
-        "back; AQE broadcasts the (small) family result. Each family "
-        "adds one hash-shuffle chain keyed by ITS entity, so skew in "
-        "one family never blocks the other."
+        "back (AQE broadcasts the family result here; at 10x it is "
+        "past the threshold and the join back is sort-merge). The "
+        "sub-spine pass reads only the spine scan's two columns, so "
+        "it runs beside the per-user pass: at 10x the whole-spine "
+        "form, which chains the event-type pass after the per-user "
+        "one and sorts full spine rows into 5 event-type partitions, "
+        "lost 9 of 10 pairs (BENCH/BASELINE.md). Each family adds one "
+        "hash-shuffle chain keyed by ITS entity."
     ),
     "two_phase_1h_10m": (
         "Scale path for windows: map-side combined partials per "
