@@ -384,6 +384,19 @@ def dedup_against_corpus(
     )
 
 
+def _edge_list(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """The distinct both-direction edges (src, dst) of ``pairs``, in one
+    pass over them: each pair row emits its two directions."""
+    return pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+                F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
+            )
+        )
+    ).distinct()
+
+
 def connected_components(
     pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
 ) -> DataFrame:
@@ -391,9 +404,13 @@ def connected_components(
     as (id, cluster_rep = min id in the component) for every id that
     appears in a pair.
 
-    The pairs become a deduplicated both-direction edge list (src, dst),
-    materialized ONCE by ``localCheckpoint`` with its row count observed
-    on that same pass. The count picks the path:
+    The pairs become a deduplicated both-direction edge list (src, dst)
+    in ONE pass over them: each pair row emits both of its directions
+    (``inline`` of a two-struct array), where a union of the two
+    projections would run the whole upstream pair plan (scan, blocking,
+    join, scoring) once per direction. The edge list is materialized
+    ONCE by ``localCheckpoint`` with its row count observed on that same
+    pass. The count picks the path:
 
     - **driver**, when ``rows × 16 B`` (two 8-byte ids) ≤ the session's
       ``spark.sql.autoBroadcastJoinThreshold``: one collect, then a
@@ -416,11 +433,7 @@ def connected_components(
     # drop it along with an empty subtree.
     sized = Observation()
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .distinct()
+        _edge_list(pairs, a_col, b_col)
         .observe(sized, F.count(F.lit(1)).alias("rows"))
         .localCheckpoint(eager=True)
     )

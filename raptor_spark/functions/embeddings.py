@@ -11,10 +11,11 @@
   md5-derived in Python and embedded as literals, so any engine (and
   the DuckDB oracle) reproduces it bit-for-bit from the same salt.
 
-Everything is Catalyst expressions (F.transform / F.aggregate /
-F.zip_with) over ``array<float>`` — JVM-side, map-only, ZERO shuffle
-at any scale; the quantized output is ~4x smaller on the wire before
-any downstream exchange. No reference analog (raptor has no embedding
+Everything is Catalyst expressions (transform / aggregate / zip_with;
+the projection's dot products are ``similarity.dot``) over
+``array<float>`` — JVM-side, map-only, ZERO shuffle at any scale; the
+quantized output is ~4x smaller on the wire before any downstream
+exchange. No reference analog (raptor has no embedding
 ops) — training-pipeline extensions per the brief.
 
 Expression staging note (see CLAUDE.md): ``maxabs`` is referenced by
@@ -33,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .rounding import round6
+from .similarity import dot
 
 
 def _as_double(vec: Column) -> Column:
@@ -142,14 +144,9 @@ def project_signed(
     """
     inv = F.lit(math.sqrt(float(out_dim)))
     planes = signed_planes(dim, out_dim, salt)
-    v = df.select(F.col(id_col), _as_double(vec_col).alias("_v"))
+    v = df.select(F.col(id_col), F.col(vec_col).alias("_v"))
     cols = []
     for j, row in enumerate(planes):
-        s = F.array(*[F.lit(c) for c in row])
-        d = F.aggregate(
-            F.zip_with("_v", s, lambda x, c: x * c),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        cols.append(round6(d / inv).alias(f"p{j}"))
+        s = ", ".join(f"{c!r}D" for c in row)
+        cols.append(round6(dot("_v", f"array({s})") / inv).alias(f"p{j}"))
     return v.select(id_col, *cols)

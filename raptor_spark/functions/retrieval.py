@@ -224,7 +224,7 @@ def hybrid_topk(
     # localCheckpoint materializes the k_lex rows once so the bm25
     # subtree executes exactly once
     cand = cand.localCheckpoint()
-    from .similarity import dot, norm as vnorm
+    from .similarity import cosine, norm
 
     # Point-lookup the query vector ONCE (pushed-down id filter) and
     # fail fast if absent — the broadcast cross join against an empty
@@ -245,20 +245,20 @@ def hybrid_topk(
         )
     qv = embs.sparkSession.createDataFrame(
         qrows, schema=f"_qv {embs.schema[vec_col].dataType.simpleString()}"
-    )
-    e = F.col(vec_col)
-    den = vnorm(e) * vnorm(F.col("_qv"))
-    cos6 = round6(
-        F.when(den > 0, dot(e, F.col("_qv")) / den).otherwise(F.lit(0.0))
-    )
+    ).withColumn("_qv_n", norm("_qv"))
+    cos6 = round6(cosine("_ev", "_qv", "_ev_n", "_qv_n"))
     # ONE corpus scan: broadcast-semi restricts embeddings to the
     # candidate ids, then the LEFT join keeps candidates WITHOUT an
-    # embedding row (their den is NULL, so the cosine guard scores
+    # embedding row (their norm is NULL, so the cosine guard scores
     # them 0.0 — the top lexical hit never silently vanishes)
-    emb_c = embs.join(
-        F.broadcast(cand.select(id_col)),
-        F.col(vec_id_col) == F.col(id_col),
-        "left_semi",
+    emb_c = (
+        embs.join(
+            F.broadcast(cand.select(id_col)),
+            F.col(vec_id_col) == F.col(id_col),
+            "left_semi",
+        )
+        .select(vec_id_col, F.col(vec_col).alias("_ev"))
+        .withColumn("_ev_n", norm("_ev"))
     )
     joined = (
         cand.join(

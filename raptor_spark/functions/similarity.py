@@ -1,7 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine``: native dot/norm via F.zip_with + F.aggregate (JVM, no
-  Python) — the baseline brute-force scorer.
+- ``dot`` / ``norm`` / ``cosine``: native left-fold dot products
+  (``zip_with`` + ``aggregate``, JVM, no Python). Each column is
+  rendered as ONE Spark SQL string and parsed by a single ``F.expr``:
+  built from ``Column`` objects, every ``F.lit`` and every
+  higher-order-function lambda was its own py4j round trip (~10 ms per
+  lambda), and one 8-plane ``lsh_signature`` made 3,144 of them — the
+  vector-math operators spent more time building their plans than
+  running them. The helpers therefore take SQL expressions (column
+  names such as ``a._v``), not ``Column``s.
+- ``cosine`` reads per-vector norms the caller projected once per
+  vector (``norm``), so a scored pair costs one dot product, not three.
 - ``brute_force_topk``: exact top-k neighbors for a (small) query set:
   broadcast the queries, score every corpus row, row_number per query.
   Scales linearly in corpus size — right answer for recall evaluation
@@ -12,6 +21,10 @@
   deterministic coefficients) bucket the corpus; queries probe only
   their own bucket (plus multi-probe neighbors by flipping one bit).
   Approximate; recall controlled by n_planes/n_probes.
+
+The folds are never unrolled into ``get(v, i)`` arithmetic: that is
+bit-identical too, but 512 terms per signature overflow the 64 KB
+generated-method limit and fall back to interpreted evaluation.
 """
 
 from __future__ import annotations
@@ -22,21 +35,42 @@ from pyspark.sql import functions as F
 from .rounding import py_round6, round6
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _dot_sql(a: str, b: str) -> str:
+    """Left-fold ``Σ double(a_i) · double(b_i)`` from 0.0, as SQL text.
+    Unequal lengths pad with NULL (``zip_with``), so a NULL element,
+    a NULL array or a length mismatch gives NULL."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, t) -> acc + t)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
+def norm(a: str) -> Column:
+    return F.expr(f"sqrt({_dot_sql(a, a)})")
+
+
+def cosine(a: str, b: str, a_norm: str, b_norm: str) -> Column:
+    """``dot(a, b) / (|a|·|b|)``, 0.0 when the norm product is not
+    ``> 0`` (zero or NULL vectors). ``a_norm``/``b_norm`` name the
+    vectors' ``norm`` columns, projected once per vector."""
+    d = f"{a_norm} * {b_norm}"
+    return F.expr(
+        f"CASE WHEN {d} > 0 THEN {_dot_sql(a, b)} / ({d}) ELSE 0D END"
+    )
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str, ids: str, v: str) -> DataFrame:
+    """``(ids, v, v_n)``: the id and vector columns renamed, plus the
+    vector's ``norm`` — computed once per vector, read by every pair
+    the vector is scored in."""
+    return df.select(F.col(id_col).alias(ids), F.col(vec_col).alias(v)).withColumn(
+        f"{v}_n", norm(v)
+    )
 
 
 def brute_force_topk(
@@ -48,19 +82,15 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, cos_sim, rank).
     Self-matches (same id) are excluded. Ties break by neighbor id."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-        )
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
+    q = F.broadcast(_normed(queries, id_col, vec_col, "query_id", "_qv"))
+    c = _normed(corpus, id_col, vec_col, "neighbor_id", "_cv")
     scored = (
         c.crossJoin(q)
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",
-            round6(cosine(F.col("_qv"), F.col("_cv"))).alias("cos_sim"),
+            round6(cosine("_qv", "_cv", "_qv_n", "_cv_n")).alias("cos_sim"),
         )
     )
     w = W.partitionBy("query_id").orderBy(
@@ -88,23 +118,17 @@ def _plane_coeff(plane: int, dim: int, plane_set: int = 0) -> list[float]:
 
 
 def lsh_signature(
-    vec: Column, dim: int, n_planes: int = 8, plane_set: int = 0
+    vec: str, dim: int, n_planes: int = 8, plane_set: int = 0
 ) -> Column:
-    """Random-hyperplane signature as an int (bit i = sign of v·plane_i)."""
-    sig = F.lit(0)
+    """Random-hyperplane signature as an int (bit i = sign of v·plane_i).
+    ``vec`` is a SQL expression (a column name). A projection that is
+    NULL (NULL vector, NULL element, wrong length) leaves its bit 0."""
+    terms = ["0"]
     for p in range(n_planes):
-        coeff = _plane_coeff(p, dim, plane_set)
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(c) for c in coeff]),
-                lambda x, c: x.cast("double") * c,
-            ),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-        sig = sig + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return sig
+        coeff = ", ".join(f"{c!r}D" for c in _plane_coeff(p, dim, plane_set))
+        proj = _dot_sql(vec, f"array({coeff})")
+        terms.append(f"CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END")
+    return F.expr(" + ".join(terms))
 
 
 def auto_n_planes(
@@ -158,18 +182,15 @@ def embedding_neardup_pairs(
     """
     if n_planes is None:
         n_planes = auto_n_planes(df, id_col, target_bucket)
-    parts = []
-    for s in range(n_plane_sets):
-        parts.append(
-            df.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                lsh_signature(F.col(vec_col), dim, n_planes, plane_set=s).alias(
-                    "bucket"
-                ),
-                F.lit(s).alias("_pset"),
-            )
+    vecs = _normed(df, id_col, vec_col, "_id", "_v")
+    parts = [
+        vecs.select(
+            "*",
+            lsh_signature("_v", dim, n_planes, plane_set=s).alias("bucket"),
+            F.lit(s).alias("_pset"),
         )
+        for s in range(n_plane_sets)
+    ]
     sig = parts[0]
     for p in parts[1:]:
         sig = sig.unionByName(p)
@@ -189,7 +210,7 @@ def embedding_neardup_pairs(
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
-            round6(cosine(F.col("a._v"), F.col("b._v"))).alias("cos_sim"),
+            round6(cosine("a._v", "b._v", "a._v_n", "b._v_n")).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -342,14 +363,15 @@ def ivf_topk(
             .orderBy("_cid")
             .limit(n_centroids)
         )
-    cents = F.broadcast(cents_src)
+    cents = F.broadcast(cents_src.withColumn("_cent_n", norm("_cent")))
 
     def nearest_lists(df, idc, vecc, n):
         scored = df.crossJoin(cents).select(
             F.col(idc),
             F.col(vecc),
+            F.col(f"{vecc}_n"),
             "_cid",
-            cosine(F.col(vecc), F.col("_cent")).alias("_sim"),
+            cosine(vecc, "_cent", f"{vecc}_n", "_cent_n").alias("_sim"),
         )
         w = W.partitionBy(idc).orderBy(F.col("_sim").desc(), F.col("_cid").asc())
         return (
@@ -359,12 +381,10 @@ def ivf_topk(
         )
 
     lists = nearest_lists(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")),
-        "neighbor_id", "_cv", 1,
+        _normed(corpus, id_col, vec_col, "neighbor_id", "_cv"), "neighbor_id", "_cv", 1
     )
     probes = nearest_lists(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        "query_id", "_qv", n_probe,
+        _normed(queries, id_col, vec_col, "query_id", "_qv"), "query_id", "_qv", n_probe
     )
     scored = (
         lists.join(F.broadcast(probes), "_cid")
@@ -372,7 +392,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            round6(cosine(F.col("_qv"), F.col("_cv"))).alias("cos_sim"),
+            round6(cosine("_qv", "_cv", "_qv_n", "_cv_n")).alias("cos_sim"),
         )
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cos_sim").alias("cos_sim"))
@@ -397,21 +417,17 @@ def lsh_bucket_topk(
     bucket or a 1-bit-flip neighbor bucket (multi-probe). The corpus
     is bucketed ONCE (one narrow scan); the join is an equi-join on the
     bucket id — broadcastable for small query sets."""
-    csig = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        lsh_signature(F.col(vec_col), dim, n_planes).alias("bucket"),
+    csig = _normed(corpus, id_col, vec_col, "neighbor_id", "_cv").withColumn(
+        "bucket", lsh_signature("_cv", dim, n_planes)
     )
-    qsig = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        lsh_signature(F.col(vec_col), dim, n_planes).alias("_qsig"),
+    qsig = _normed(queries, id_col, vec_col, "query_id", "_qv").withColumn(
+        "_qsig", lsh_signature("_qv", dim, n_planes)
     )
     probes = [F.col("_qsig")] + [
         F.col("_qsig").bitwiseXOR(F.lit(1 << p)) for p in range(min(n_probes, n_planes))
     ]
     q_probed = qsig.select(
-        "query_id", "_qv", F.explode(F.array(*probes)).alias("bucket")
+        "query_id", "_qv", "_qv_n", F.explode(F.array(*probes)).alias("bucket")
     )
     scored = (
         csig.join(F.broadcast(q_probed), "bucket")
@@ -419,7 +435,7 @@ def lsh_bucket_topk(
         .select(
             "query_id",
             "neighbor_id",
-            round6(cosine(F.col("_qv"), F.col("_cv"))).alias("cos_sim"),
+            round6(cosine("_qv", "_cv", "_qv_n", "_cv_n")).alias("cos_sim"),
         )
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cos_sim").alias("cos_sim"))

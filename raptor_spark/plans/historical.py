@@ -194,8 +194,12 @@ def get_historical_fused(
     # so the Exchange carries (keys, ts, small typed values) — never the
     # raw payload columns (text is 100-1000 B/row; the windows only
     # need the derived doubles). Catalyst cannot prune this itself
-    # because the exprs sit inside window functions.
-    proj = [F.col(k) for k in keys] + [F.col(ts_col)]
+    # because the exprs sit inside window functions. The ordering key
+    # ``_tsu`` is projected here once: a window nested in another (the
+    # fill over a filtered aggregate) that computed its own
+    # ``unix_micros(ts)`` would order by a second alias of it and plan
+    # a second in-partition sort.
+    proj = [F.col(k) for k in keys] + [F.col(ts_col), micros(ts_col).alias("_tsu")]
     vname: dict[str, str] = {}
     for i, spec in enumerate(fs.features):
         v = _eval_expr(df, spec.expr)
@@ -205,7 +209,7 @@ def get_historical_fused(
         proj.append(v.alias(f"_v_{i}"))
     df = df.select(*proj)
 
-    tsu = micros(ts_col)
+    tsu = F.col("_tsu")
     # RANGE fill frame, not ROWS: a spine row must see a same-ts update
     # regardless of physical tie order (the union-merge path gets this
     # from its (ts, _is_spine) sort; here spine and update are source
@@ -286,10 +290,7 @@ def get_historical_fused(
                 vn = vname[spec.name]
                 # update-row ts, null on non-update rows (same null mask
                 # as the value itself) — lets IGNORE NULLS walk updates
-                vts_sql = (
-                    f"CASE WHEN {vn} IS NOT NULL THEN "
-                    f"unix_micros(cast({ts_col} as timestamp)) END"
-                )
+                vts_sql = f"CASE WHEN {vn} IS NOT NULL THEN _tsu END"
                 # filtered kp: the IGNORE-NULLS lag walk must count a
                 # same-ts update (the RANGE fill above sees it, so the
                 # version chain must too) — order ties UPDATES-FIRST

@@ -206,6 +206,29 @@ class TestConnectedComponents:
             assert out.collect() == []
             assert out.schema.simpleString() == "struct<id:bigint,cluster_rep:bigint>"
 
+    def test_edge_list_is_one_pass_over_the_pairs(self, spark):
+        """Both directions of every pair come from one pass over the
+        pairs: the edge list's executed plan runs the upstream join once
+        and has no Union, and it holds each undirected edge both ways,
+        once."""
+        from raptor_spark.functions.dedup import _edge_list
+
+        left = spark.range(6).select(
+            F.col("id").alias("k"), F.col("id").alias("id_a")
+        )
+        right = spark.range(6).select(
+            F.col("id").alias("k"), ((F.col("id") + 1) % 3).alias("id_b")
+        )
+        pairs = left.join(right, "k")  # (0,1) (1,2) (2,0) (3,1) (4,2) (5,0)
+        edges = _edge_list(pairs, "id_a", "id_b")
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+        assert "Union" not in plan
+        assert plan.count("Join") == 1
+        want = {(0, 1), (1, 2), (2, 0), (3, 1), (4, 2), (5, 0)}
+        want |= {(b, a) for a, b in want}
+        got = [tuple(r) for r in edges.collect()]
+        assert sorted(got) == sorted(want)
+
     def test_job_counts_per_path(self, spark):
         """On a small graph the driver path runs the edge checkpoint
         (its distinct's shuffle-map job and the checkpoint job) and one

@@ -29,11 +29,15 @@ def test_fused_equals_general(spark):
 
 def test_fused_is_selected(spark):
     """The transcript feature set must hit the fused plan: no Union in
-    the optimized plan, exactly one Exchange (one shuffle)."""
+    the optimized plan, exactly one Exchange (one shuffle) and one
+    in-partition Sort above it serving every window — the fill over the
+    filtered ``tool_calls_1h`` aggregate included. (The transcript
+    generator below the Exchange sorts for its own window.)"""
     src = transcripts(spark, n_convs=5)
     plan = get_historical(src, transcript_feature_set())._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
     assert plan.count("Exchange") == 1
+    assert plan[: plan.index("Exchange")].count("Sort [") == 1
 
 
 def test_fused_since_until(spark):

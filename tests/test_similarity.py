@@ -1,14 +1,20 @@
 """Similarity-search operators: signature stability (oracle compat),
 multi-plane-set recall, bucket cap, ANN vs brute-force recall."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from raptor_spark.functions.similarity import (
     _plane_coeff,
     brute_force_topk,
+    cosine,
+    dot,
     embedding_neardup_pairs,
     lsh_bucket_topk,
+    lsh_signature,
+    norm,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -30,6 +36,101 @@ def test_plane_set_zero_unchanged():
     assert _plane_coeff(3, DIM)[7] == want
     # other sets derive differently
     assert _plane_coeff(3, DIM, plane_set=1)[7] != want
+
+
+def _fold(prods):
+    """Left fold from 0.0 along the last axis, float64, in order
+    (``np.cumsum`` adds sequentially; ``np.sum`` would pair-wise sum)."""
+    import numpy as np
+
+    zero = np.zeros(prods.shape[:-1] + (1,))
+    return np.cumsum(np.concatenate([zero, prods], axis=-1), axis=-1)[..., -1]
+
+
+def _bits(xs):
+    import numpy as np
+
+    return np.asarray(xs, dtype=np.float64).view(np.int64).tolist()
+
+
+def test_vector_math_matches_numpy_left_fold(spark):
+    """The SQL-text ``dot``/``norm``/``cosine``/``lsh_signature`` equal a
+    float64 numpy replay of the same left fold bit for bit, over
+    float32 vectors spanning 30 decades (where a different summation
+    order or a rounded plane literal would show), plus a zero vector."""
+    import numpy as np
+
+    dim, n_planes = 16, 6
+    rng = np.random.default_rng(11)
+    a = (rng.normal(size=(400, dim)) * 10.0 ** rng.uniform(-15, 15, (400, 1)))
+    b = rng.normal(size=(400, dim)) * 10.0 ** rng.uniform(-15, 15, (400, 1))
+    a, b = a.astype(np.float32), b.astype(np.float32)
+    a[0] = 0.0
+    df = spark.createDataFrame(
+        [(i, a[i].tolist(), b[i].tolist()) for i in range(len(a))],
+        "i int, a array<float>, b array<float>",
+    )
+    got = (
+        df.withColumn("na", norm("a"))
+        .withColumn("nb", norm("b"))
+        .select(
+            "i", "na", "nb",
+            dot("a", "b").alias("dot"),
+            cosine("a", "b", "na", "nb").alias("cos"),
+            lsh_signature("a", dim, n_planes, plane_set=2).alias("sig"),
+        )
+        .orderBy("i")
+        .toPandas()
+    )
+    a64, b64 = a.astype(np.float64), b.astype(np.float64)
+    na, nb = np.sqrt(_fold(a64 * a64)), np.sqrt(_fold(b64 * b64))
+    d = _fold(a64 * b64)
+    den = na * nb
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where(den > 0, d / den, 0.0)
+    planes = np.array([_plane_coeff(p, dim, 2) for p in range(n_planes)])
+    proj = _fold(a64[:, None, :] * planes[None, :, :])
+    sig = ((proj > 0) * (1 << np.arange(n_planes))).sum(axis=1)
+    assert _bits(got["na"]) == _bits(na)
+    assert _bits(got["nb"]) == _bits(nb)
+    assert _bits(got["dot"]) == _bits(d)
+    assert _bits(got["cos"]) == _bits(cos)
+    assert got["sig"].tolist() == sig.tolist()
+    # the zero vector: norm 0.0, cosine 0.0 (the guard), no plane bits
+    assert (got["na"][0], got["cos"][0], got["sig"][0]) == (0.0, 0.0, 0)
+
+
+def test_vector_math_null_and_length_mismatch(spark):
+    """``zip_with`` pads the shorter array with NULL: a NULL element, a
+    NULL array or a wrong-length array makes ``dot`` NULL (and ``norm``
+    of a NULL-bearing vector). ``cosine`` scores a NULL norm 0.0 (the
+    guard) and a NULL dot over positive norms NULL; a NULL projection
+    leaves its signature bit 0."""
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, None, 3.0], [1.0, 2.0, 3.0]),
+            (2, None, [1.0, 2.0, 3.0]),
+            (3, [1.0, 2.0], [1.0, 2.0, 3.0]),
+        ],
+        "i int, a array<float>, b array<float>",
+    )
+    got = (
+        df.withColumn("na", norm("a"))
+        .withColumn("nb", norm("b"))
+        .select(
+            "i", "na",
+            dot("a", "b").alias("dot"),
+            cosine("a", "b", "na", "nb").alias("cos"),
+            lsh_signature("a", 3, 4).alias("sig"),
+        )
+        .orderBy("i")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == [
+        (1, None, None, 0.0, 0),
+        (2, None, None, 0.0, 0),
+        (3, math.sqrt(5.0), None, None, 0),
+    ]
 
 
 def test_multi_plane_sets_superset_recall(spark, emb):
@@ -142,7 +243,7 @@ def test_auto_n_planes_sizing(spark):
     pseudo-random corpus at target_bucket=64 derives ~log2(20000/64)≈9
     planes, and the resulting bucket-size distribution is bounded (no
     degenerate mega-bucket)."""
-    from raptor_spark.functions.similarity import auto_n_planes, lsh_signature
+    from raptor_spark.functions.similarity import auto_n_planes
 
     n_rows, dim = 20_000, 8
     corpus = spark.range(n_rows).select(
@@ -162,7 +263,7 @@ def test_auto_n_planes_sizing(spark):
     assert 8 <= n <= 10  # approx_count_distinct tolerance around 9
     sizes = (
         corpus.select(
-            lsh_signature(F.col("embedding"), dim, n).alias("bucket")
+            lsh_signature("embedding", dim, n).alias("bucket")
         )
         .groupBy("bucket")
         .count()
