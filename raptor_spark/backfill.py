@@ -382,14 +382,11 @@ def backfill(
     return res
 
 
-def read_backfill(
-    spark: SparkSession, out_dir: str, with_shard: bool = False
-) -> DataFrame:
-    """Read the committed backfill output. ``shard`` is a hive partition
-    column of the layout (usable for pruning); hidden by default so the
-    schema matches the logical plan's."""
-    df = spark.read.parquet(os.path.join(out_dir, "data"))
-    return df if with_shard else df.drop("shard")
+def read_backfill(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Read the committed backfill output. ``shard``, the hive partition
+    column of the layout, is dropped so the schema matches the logical
+    plan's."""
+    return spark.read.parquet(os.path.join(out_dir, "data")).drop("shard")
 
 
 # ----------------------------------------- flagship transcript features

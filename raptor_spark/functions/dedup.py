@@ -189,7 +189,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     max_bucket: int = 10_000,
     observation=None,
-    two_pass: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -206,15 +205,6 @@ def minhash_lsh_pairs(
     as ``observation`` to read the dropped-bucket count + dropped-doc
     total after the action (metrics ``dropped_buckets``,
     ``dropped_docs``) — no extra job, collected during the same pass.
-
-    ``two_pass=True`` — the 100 TB shape: the single-pass cap still
-    BUILDS every bucket's id array before filtering (collect_list has
-    no cap), so a bucket with ~10⁶+ members can exhaust one task's
-    memory before the filter runs. The two-pass variant first counts
-    bucket sizes (count-only aggregate, map-side combined, no arrays),
-    LEFT ANTI joins the over-cap (band, bsig) keys out of the banded
-    rows, and only then collects — no oversized array ever
-    materializes. Costs one extra shuffle of (band, bsig, count) rows.
     """
     if observation is not None and max_bucket <= 0:
         raise ValueError(
@@ -222,21 +212,6 @@ def minhash_lsh_pairs(
             "attaches the metrics and Observation.get would block forever"
         )
     banded = band_rows(df, id_col, text_col, shingle_n, k, bands)
-    if two_pass and max_bucket > 0:
-        sizes = banded.groupBy("band", "bsig").agg(F.count(F.lit(1)).alias("_n"))
-        hot = sizes.filter(F.col("_n") > max_bucket).select("band", "bsig")
-        if observation is not None:
-            hot_obs = sizes.observe(
-                observation,
-                F.coalesce(
-                    F.sum((F.col("_n") > max_bucket).cast("long")), F.lit(0)
-                ).alias("dropped_buckets"),
-                F.coalesce(
-                    F.sum(F.when(F.col("_n") > max_bucket, F.col("_n"))), F.lit(0)
-                ).alias("dropped_docs"),
-            )
-            hot = hot_obs.filter(F.col("_n") > max_bucket).select("band", "bsig")
-        banded = banded.join(hot, ["band", "bsig"], "left_anti")
     # bucket-collect instead of a self-join: ONE shuffle on the band
     # signature, signatures computed once, pairs emitted locally per
     # bucket (each doc appears at most once per bucket). Size the
@@ -251,12 +226,10 @@ def minhash_lsh_pairs(
             F.array_sort(F.collect_list("_id")).alias("ids"),
         )
     )
-    if max_bucket > 0 and not two_pass:
+    if max_bucket > 0:
         # Spark lacks a capped collect_list, so the array is still built
         # per bucket; the filter drops giant arrays before the explode
-        # stage where the quadratic pair blow-up would happen. If even
-        # building the array is too much (>~1e6 ids in one bucket), use
-        # two_pass=True (anti-join the hot keys out before collecting).
+        # stage where the quadratic pair blow-up would happen.
         if observation is not None:
             buckets = buckets.observe(
                 observation,
@@ -323,7 +296,6 @@ def dedup_against_corpus(
     shingle_n: int = 3,
     k: int = 16,
     bands: int = 4,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Incremental dedup: flag each NEW-batch document against an
     existing corpus via its signature stores (see
@@ -342,29 +314,25 @@ def dedup_against_corpus(
       bands (how COMMON its closest corpus neighborhood is; a huge
       value signals boilerplate-like content).
 
-    Plan shape: the new batch is the small side — with
-    ``broadcast_new`` (default) its fingerprints and band rows
-    broadcast to map-side probes of the stores, so neither store
-    shuffles; per-doc flags come back through one aggregation of the
-    (new-batch-sized) hit rows. For increments too large to broadcast,
-    pass ``broadcast_new=False`` and bucket the persisted stores by
-    their key — the equi-joins then co-locate without an exchange.
+    Plan shape: the new batch is the small side — its fingerprints and
+    band rows broadcast to map-side probes of the stores, so neither
+    store shuffles; per-doc flags come back through one aggregation of
+    the (new-batch-sized) hit rows.
 
     Returns one row per new document:
     ``(id_col, exact_dup boolean, n_bands_hit, max_band_freq)``
     (zero-hit docs: ``(false, 0, 0)``).
     """
-    hint = F.broadcast if broadcast_new else (lambda d: d)
     new_fp = new_df.select(
         F.col(id_col), fingerprint(F.col(text_col)).alias("fp")
     )
     exact = (
-        fp_store.join(hint(new_fp), "fp")
+        fp_store.join(F.broadcast(new_fp), "fp")
         .select(F.col(id_col), F.lit(True).alias("exact_dup"))
     )
     new_bands = band_rows(new_df, id_col, text_col, shingle_n, k, bands)
     near = (
-        band_store.join(hint(new_bands), ["band", "bsig"])
+        band_store.join(F.broadcast(new_bands), ["band", "bsig"])
         .groupBy(F.col("_id").alias(id_col))
         .agg(
             F.count(F.lit(1)).alias("n_bands_hit"),
@@ -373,8 +341,8 @@ def dedup_against_corpus(
     )
     return (
         new_df.select(id_col)
-        .join(hint(exact), id_col, "left")
-        .join(hint(near), id_col, "left")
+        .join(F.broadcast(exact), id_col, "left")
+        .join(F.broadcast(near), id_col, "left")
         .select(
             id_col,
             F.coalesce("exact_dup", F.lit(False)).alias("exact_dup"),

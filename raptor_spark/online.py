@@ -42,13 +42,11 @@ class OnlineStore:
         self.path = path
 
     # -- write ---------------------------------------------------------
-    def materialize(
-        self, fv: DataFrame, mode: str = "overwrite", gen: int = 0
-    ) -> None:
-        """Collapse to latest per (fqn, keys) and write, partitioned by
-        fqn. fv: the canonical long relation (fqn, keys, ts, value).
-        ``gen``: write generation (see ``upsert``)."""
-        self._latest(self._with_gen(fv, gen)).write.mode(mode).partitionBy(
+    def materialize(self, fv: DataFrame, gen: int = 0) -> None:
+        """Collapse to latest per (fqn, keys) and overwrite the store,
+        partitioned by fqn. fv: the canonical long relation (fqn, keys,
+        ts, value). ``gen``: write generation (see ``upsert``)."""
+        self._latest(self._with_gen(fv, gen)).write.mode("overwrite").partitionBy(
             "fqn"
         ).parquet(self.path)
 

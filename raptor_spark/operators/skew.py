@@ -6,8 +6,9 @@ rule requires explicit handling for Zipf-hot conversations. Two levers:
 1. **salted_agg**: for per-key *aggregations*, add salt =
    pmod(xxhash64(ts-derived), n) so one hot key's rows spread over n
    reducers; phase-1 partials per (key, salt); phase-2 merge per key.
-   Only mergeable partials (count/sum/min/max + HLL) flow through —
-   identical decomposition to the bucketed window path.
+   The partials and their merge are the bucketed window path's own
+   (``window_agg._partial_aggs`` / ``window_agg._merged``), merged as
+   a plain aggregate instead of over the bucket window.
    NOTE: Spark's hash aggregate already does map-side partials, so
    salting only pays off when a single *reduce* group is hotter than a
    task (≫ tens of millions of rows per key) — exactly the 50k-turn
@@ -30,6 +31,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .window_agg import _merged, _partial_aggs
 
 
 def detect_hot_keys(
@@ -56,8 +59,8 @@ def salted_agg(
     salt_source: str | None = None,
 ) -> DataFrame:
     """Two-level aggregate of ``value`` per key: salt → partials →
-    final merge. ``fns`` ⊆ {count,sum,min,max,avg,approx_distinct_count}
-    (exact distinct is not salt-mergeable without sets; use HLL).
+    final merge. ``fns`` ⊆ {count,sum,min,max,avg,distinct_count,
+    approx_distinct_count}; each lands in a double column named after it.
     ``salt_source``: a column to derive the salt from; defaults to a
     hash of ALL input columns. Either way the salt is a pure function
     of row DATA, never of physical placement (spark_partition_id /
@@ -77,40 +80,9 @@ def salted_agg(
         else F.xxhash64(*[F.col(c) for c in df.columns])
     )
     salt = F.pmod(salt_of, F.lit(n_salts))
-    need_hll = "approx_distinct_count" in fns
-    partial_aggs = [
-        F.count(v).alias("_p_count"),
-        F.sum(v).alias("_p_sum"),
-        F.min(v).alias("_p_min"),
-        F.max(v).alias("_p_max"),
-    ]
-    if need_hll:
-        partial_aggs.append(F.hll_sketch_agg(v.cast("string")).alias("_p_hll"))
-    partials = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*partial_aggs)
-
-    final_aggs = []
-    for fn in fns:
-        if fn == "count":
-            final_aggs.append(F.sum("_p_count").cast("double").alias("count"))
-        elif fn == "sum":
-            final_aggs.append(F.sum("_p_sum").cast("double").alias("sum"))
-        elif fn == "min":
-            final_aggs.append(F.min("_p_min").cast("double").alias("min"))
-        elif fn == "max":
-            final_aggs.append(F.max("_p_max").cast("double").alias("max"))
-        elif fn == "avg":
-            # cast the exact sum to double BEFORE dividing so the result
-            # matches ANSI-SQL `CAST(sum(x) AS DOUBLE) / count(x)` bit-for-bit
-            # (decimal division would round differently pre-cast).
-            final_aggs.append(
-                (F.sum("_p_sum").cast("double") / F.sum("_p_count")).alias("avg")
-            )
-        elif fn == "approx_distinct_count":
-            final_aggs.append(
-                F.hll_sketch_estimate(F.hll_union_agg("_p_hll"))
-                .cast("double")
-                .alias("approx_distinct_count")
-            )
-        else:
-            raise ValueError(f"fn {fn} is not salt-mergeable")
-    return partials.groupBy(*keys).agg(*final_aggs)
+    partials = (
+        df.withColumn("_salt", salt)
+        .groupBy(*keys, "_salt")
+        .agg(*_partial_aggs(df, v, fns))
+    )
+    return partials.groupBy(*keys).agg(*[_merged(fn).alias(fn) for fn in fns])

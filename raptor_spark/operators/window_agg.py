@@ -22,6 +22,14 @@ over the trailing ``over`` time span per key, evaluated at each event":
    map-side combine collapses the data to ~|keys|×|buckets| rows before
    the only shuffle; the merge window runs on the collapsed table.
 
+The mergeable partials have ONE implementation here: ``_partial_aggs``
+builds the ``_p_*`` partial set and ``_merged`` turns it into each fn's
+double value. ``bucket_partials``, ``skew.salted_agg`` and
+``streaming.windows.stream_bucket_partials`` all produce partials
+through the first; ``merge_buckets`` (``.over`` the bucket window) and
+``salted_agg`` (plain groupBy aggregate) both merge through the second,
+so the online and offline paths merge identically.
+
 Both return one row per input row (exact) or per (keys, bucket)
 (bucketed), with a column per aggregation fn.
 
@@ -44,8 +52,6 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from .tsutil import micros
-
-_MERGEABLE = {"count", "sum", "min", "max"}  # avg derived; distinct special
 
 # per-event exact distinct beyond this window span gets a warning
 # steering to the bucketed HLL path (24h)
@@ -123,6 +129,68 @@ def sliding_agg_exact(
     return out
 
 
+def _partial_aggs(df: DataFrame, v: Column, fns: Sequence[str]) -> list[Column]:
+    """The mergeable partial set of ``v`` — {count,sum,min,max} (the
+    reference's WindowResultMap, api/state.go:32-33) plus an HLL sketch
+    for approx-distinct and the exact value set for distinct — as
+    ``_p_*`` aggregate columns. Every producer of partials (batch
+    buckets, salted groups, streaming buckets) builds them here.
+
+    Partial sums stay in the INPUT type: DECIMAL stays exact and
+    therefore addition-order-independent (the bit-exact oracle
+    contract); the single cast to double happens in ``_merged``.
+    Non-numeric values (distinct over strings) get cast→null partials.
+    """
+    from pyspark.sql.types import NumericType
+
+    numeric = isinstance(df.select(v.alias("_v")).schema[0].dataType, NumericType)
+    pv = v if numeric else v.cast("double")
+    aggs = [
+        F.count(v).alias("_p_count"),
+        F.sum(pv).alias("_p_sum"),
+        F.min(pv).alias("_p_min"),
+        F.max(pv).alias("_p_max"),
+    ]
+    if "approx_distinct_count" in fns:
+        aggs.append(F.hll_sketch_agg(v.cast("string")).alias("_p_hll"))
+    if "distinct_count" in fns:
+        aggs.append(F.collect_set(v).alias("_p_set"))
+    return aggs
+
+
+def _merged(fn: str, w=None) -> Column:
+    """Merge of ``_partial_aggs`` columns into the double value of
+    ``fn`` — a window aggregate ``.over(w)`` for the sliding bucket
+    merge, a plain aggregate for a groupBy (``w=None``). avg is always
+    sum/count, never avg-of-avgs (redis/windows.go:208-215), both sides
+    cast to double BEFORE the division so the result is one
+    deterministic double op matching ``CAST(sum(x) AS DOUBLE) /
+    count(x)``."""
+
+    def agg(c: Column) -> Column:
+        return c if w is None else c.over(w)
+
+    if fn == "count":
+        return agg(F.sum("_p_count")).cast("double")
+    if fn == "sum":
+        return agg(F.sum("_p_sum")).cast("double")
+    if fn == "min":
+        return agg(F.min("_p_min")).cast("double")
+    if fn == "max":
+        return agg(F.max("_p_max")).cast("double")
+    if fn == "avg":
+        return agg(F.sum("_p_sum")).cast("double") / agg(
+            F.sum("_p_count")
+        ).cast("double")
+    if fn == "distinct_count":
+        return F.size(
+            F.array_distinct(F.flatten(agg(F.collect_list("_p_set"))))
+        ).cast("double")
+    if fn == "approx_distinct_count":
+        return F.hll_sketch_estimate(agg(F.hll_union_agg("_p_hll"))).cast("double")
+    raise ValueError(f"unknown aggregation fn {fn}")
+
+
 def bucket_partials(
     df: DataFrame,
     keys: Sequence[str],
@@ -135,38 +203,17 @@ def bucket_partials(
 
     Bucket = floor(unix_micros(ts)/granularity) — the reference's
     bucket index (api/windows.go:96-108; we keep the numeric index,
-    not base-34 names). Emits the mergeable partial set
-    {count,sum,min,max} (the reference's WindowResultMap,
-    api/state.go:32-33) plus an HLL sketch / exact value set when a
-    distinct fn was requested. This is a map-side-combinable groupBy →
-    the ONLY shuffle moves pre-aggregated rows.
+    not base-34 names). Emits the ``_partial_aggs`` set for ``fns``.
+    This is a map-side-combinable groupBy → the ONLY shuffle moves
+    pre-aggregated rows.
     """
-    from pyspark.sql.types import NumericType
-
     v = F.col(value) if isinstance(value, str) else value
-    need_distinct = any(f in ("distinct_count", "approx_distinct_count") for f in fns)
-    # partial sums stay in the INPUT type (DECIMAL stays exact and
-    # therefore addition-order-independent — the bit-exact oracle
-    # contract; same rule as skew.salted_agg); the single cast to
-    # double happens in merge_buckets' final window. Non-numeric
-    # values (distinct over strings) keep the old cast→null partials.
-    numeric = isinstance(df.select(v.alias("_v")).schema[0].dataType, NumericType)
-    pv = v if numeric else v.cast("double")
-    aggs = [
-        F.count(v).alias("_p_count"),
-        F.sum(pv).alias("_p_sum"),
-        F.min(pv).alias("_p_min"),
-        F.max(pv).alias("_p_max"),
-    ]
-    if need_distinct:
-        if "approx_distinct_count" in fns:
-            aggs.append(F.hll_sketch_agg(v.cast("string")).alias("_p_hll"))
-        if "distinct_count" in fns:
-            aggs.append(F.collect_set(v).alias("_p_set"))
     bucket = F.floor(micros(ts_col) / F.lit(granularity_us)).alias(
         "bucket"
     )
-    return df.groupBy(*[F.col(k) for k in keys], bucket).agg(*aggs)
+    return df.groupBy(*[F.col(k) for k in keys], bucket).agg(
+        *_partial_aggs(df, v, fns)
+    )
 
 
 def merge_buckets(
@@ -176,15 +223,15 @@ def merge_buckets(
     granularity_us: int,
     fns: Sequence[str],
     prefix: str = "",
-    ts_at: str = "end",
 ) -> DataFrame:
     """Phase 2: sliding merge of the trailing ``n_buckets`` partials.
 
     Range window over the bucket index — covers buckets
     [b − n_buckets + 1, b], the reference's alive-bucket set
-    (api/windows.go:116-125). Emits one row per (keys, bucket) with a
-    ``ts`` column at the bucket end (``ts_at='end'``) or start — bucket
-    end is what the windowed value is *valid at* (windowed.tmpl.sql:72-81
+    (api/windows.go:116-125). Reads the layout of ``bucket_partials``
+    and ``streaming.windows.stream_bucket_partials`` alike. Emits one
+    row per (keys, bucket) with a ``ts`` column at the bucket end —
+    what the windowed value is *valid at* (windowed.tmpl.sql:72-81
     uses WIN_END for VALID_TILL chaining).
     """
     n_buckets = -(-over_us // granularity_us)
@@ -194,28 +241,9 @@ def merge_buckets(
         .rangeBetween(-(n_buckets - 1), 0)
     )
     out = partials
-    cnt = F.sum("_p_count").over(w)
     for fn in fns:
-        if fn == "count":
-            c = cnt.cast("double")
-        elif fn == "sum":
-            c = F.sum("_p_sum").over(w).cast("double")
-        elif fn == "min":
-            c = F.min("_p_min").over(w).cast("double")
-        elif fn == "max":
-            c = F.max("_p_max").over(w).cast("double")
-        elif fn == "avg":
-            c = F.sum("_p_sum").over(w).cast("double") / cnt.cast("double")
-        elif fn == "distinct_count":
-            c = F.size(
-                F.array_distinct(F.flatten(F.collect_list("_p_set").over(w)))
-            ).cast("double")
-        elif fn == "approx_distinct_count":
-            c = F.hll_sketch_estimate(F.hll_union_agg("_p_hll").over(w)).cast("double")
-        else:
-            raise ValueError(fn)
-        out = out.withColumn(prefix + fn, c)
-    edge = (F.col("bucket") + (1 if ts_at == "end" else 0)) * F.lit(granularity_us)
+        out = out.withColumn(prefix + fn, _merged(fn, w))
+    edge = (F.col("bucket") + 1) * F.lit(granularity_us)
     out = out.withColumn("ts", F.timestamp_micros(edge.cast("long")))
     return out.drop("_p_count", "_p_sum", "_p_min", "_p_max", "_p_set", "_p_hll")
 

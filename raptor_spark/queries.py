@@ -395,26 +395,28 @@ def q_kp_filtered(spark, sf_dir):
     )
 
 
-# per-process feature-store directories (see q_store_read_pit),
-# (pid, sf_dir) → root, and the roots this process has written
-_STORE_ROOTS: dict[tuple[int, str], str] = {}
-_STORE_BUILT: set[str] = set()
+# per-process scratch roots of the queries that write files,
+# (pid, sf_dir) → root, and the directories this process has built
+_SCRATCH_ROOTS: dict[tuple[int, str], str] = {}
+_BUILT: set[str] = set()
 
 
-def _store_root(sf_dir: str) -> str:
-    """This process's own store directory for ``sf_dir``, made on first
-    use and removed at exit. One root per ``sf_dir`` shared by
-    processes let one process wipe the store another was reading."""
+def _scratch_root(sf_dir: str) -> str:
+    """This process's own scratch directory for ``sf_dir``, made on
+    first use and removed at exit. Every query that writes files
+    (feature store, online store, stream source dir, REST fixture)
+    writes under it: one path per ``sf_dir`` shared by processes let
+    one process wipe the files another was reading."""
     key = (os.getpid(), sf_dir)
-    if key not in _STORE_ROOTS:
-        _STORE_ROOTS[key] = tempfile.mkdtemp(prefix="raptor_store_")
-    return _STORE_ROOTS[key]
+    if key not in _SCRATCH_ROOTS:
+        _SCRATCH_ROOTS[key] = tempfile.mkdtemp(prefix="raptor_scratch_")
+    return _SCRATCH_ROOTS[key]
 
 
 @atexit.register
-def _remove_store_roots() -> None:
-    for (pid, _), root in _STORE_ROOTS.items():
-        if pid == os.getpid():  # a forked child leaves its parent's stores
+def _remove_scratch_roots() -> None:
+    for (pid, _), root in _SCRATCH_ROOTS.items():
+        if pid == os.getpid():  # a forked child leaves its parent's roots
             shutil.rmtree(root, ignore_errors=True)
 
 
@@ -443,19 +445,19 @@ def q_store_read_pit(spark, sf_dir):
         features=[last_click, spend, cnt], key_feature="last_click"
     )
 
-    root = _store_root(sf_dir)
+    root = os.path.join(_scratch_root(sf_dir), "store")
     cat = Catalog(spark, root=root)
     # materialize the store ONCE per process per sf_dir: benchmark reps
     # of this query were otherwise re-paying a full sink write each
     # call, so the measured number was sink I/O, not the read path.
     # The root is fresh per process, so a store written by older code
     # never leaks in; overwrite makes a retry after a failed write clean.
-    if root not in _STORE_BUILT:
+    if root not in _BUILT:
         fv = replay(ev, last_click)
         for spec in (spend, cnt):
             fv = fv.unionByName(replay(ev, spec))
         cat.write_feature_values(fv, "features", mode="overwrite")
-        _STORE_BUILT.add(root)
+        _BUILT.add(root)
 
     spine = ev.filter("event_type = 'purchase'").select(
         "event_id", "user_id", "ts"
@@ -480,9 +482,6 @@ def q_online_serve(spark, sf_dir):
     1h staleness cutoff against the corpus max ts (event-time now) —
     the Redis get + freshness path (redis/primitives.go) as a batch
     relation."""
-    import hashlib
-    import shutil
-
     from .online import OnlineStore
     from .operators.tsutil import micros
 
@@ -494,10 +493,8 @@ def q_online_serve(spark, sf_dir):
         F.col("value"),
         F.col("event_id"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/raptor_online_{tag}"
-    shutil.rmtree(path, ignore_errors=True)
-    store = OnlineStore(spark, path)
+    # rewritten on every call (materialize overwrites, upsert appends)
+    store = OnlineStore(spark, os.path.join(_scratch_root(sf_dir), "online"))
     store.materialize(
         fv.filter(F.col("event_id") % 2 == 0).drop("event_id"), gen=0
     )
@@ -714,33 +711,14 @@ def q_stream_dedup(spark, sf_dir):
 
     batch = _t(spark, sf_dir, "documents")
     # the file stream source requires a DIRECTORY; the testdata table
-    # is a single parquet file — stage a symlink dir (data untouched).
-    # Dir name = md5 of the source path (process-stable, collision-free
-    # across sf dirs — Python hash() is salted per process); a stale or
-    # wrong-target link is replaced, never silently reused.
-    import hashlib
-    import os
-
+    # is a single parquet file — stage a symlink dir (data untouched)
     src = os.path.join(sf_dir, "documents.parquet")
     if os.path.isfile(src):
-        src = os.path.abspath(src)
-        d = f"/tmp/stream_docs_{hashlib.md5(src.encode()).hexdigest()[:12]}"
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "part-0.parquet")
-        # lexists covers non-symlink squatters (a regular file at the
-        # link path would make os.symlink raise); remove anything that
-        # isn't already the correct link
-        if os.path.lexists(link) and not (
-            os.path.islink(link) and os.readlink(link) == src
-        ):
-            os.remove(link)
-        if not os.path.islink(link):
-            try:
-                os.symlink(src, link)
-            except FileExistsError:
-                # concurrent creator won the race; both targets are
-                # deterministic functions of src, so theirs is ours
-                pass
+        d = os.path.join(_scratch_root(sf_dir), "stream_docs")
+        if d not in _BUILT:
+            os.makedirs(d, exist_ok=True)
+            os.symlink(os.path.abspath(src), os.path.join(d, "part-0.parquet"))
+            _BUILT.add(d)
         src = d
     stream = spark.readStream.schema(batch.schema).parquet(src)
     # documents carry no event time; synthesize one deterministically
@@ -1700,47 +1678,31 @@ def q_bucket_merge_dedup(spark, sf_dir):
 # family fill the rest of the window, (3) long-stable rows (driver-green
 # in r2 AND r3, pinned by tools/check_oracles.py exact mode + pytest)
 # rotate to the tail. New queries go in group (1).
-# per-process registry of materialized file:// REST fixtures: reps
-# reuse, fresh processes rebuild (content is fixed per sf_dir and
-# written atomically, so processes may share it)
-_REST_FIXTURE_BUILT: set[str] = set()
 
 
 def q_rest_enrich(spark, sf_dir):
     """S5 REST enrichment source, exercised for REAL over file:// URLs
     (reference: internal/plugins/builders/rest/rest.go:41-66 — per-key
     templated fetch through a retrying cached client; no aggregation).
-    A JSON document per nation key is served from a /tmp fixture whose
-    content derives from the nation table, so the DuckDB oracle can
-    recompute the enrichment relationally — the fetch+parse+broadcast
-    path is the thing under test. Plan shape: ONE distinct over the 25
-    keys bounds the fetch; the 15k-row customer spine is never
-    shuffled (broadcast join back)."""
-    import hashlib
-    import json as _json
-    import os as _os
+    A JSON document per nation key is served from a fixture directory
+    (written once per process) whose content derives from the nation
+    table, so the DuckDB oracle can recompute the enrichment
+    relationally — the fetch+parse+broadcast path is the thing under
+    test. Plan shape: ONE distinct over the 25 keys bounds the fetch;
+    the 15k-row customer spine is never shuffled (broadcast join back)."""
+    import json
 
     from .sources.rest import RestSourceConfig, rest_enrich
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/rest_fixture_{tag}"
-    if root not in _REST_FIXTURE_BUILT:
-        _os.makedirs(root, exist_ok=True)
+    root = os.path.join(_scratch_root(sf_dir), "rest")
+    if root not in _BUILT:
+        os.makedirs(root, exist_ok=True)
         for r in _t(spark, sf_dir, "nation").collect():  # 25 rows
-            # content is deterministic per sf_dir, so an existing file
-            # is already correct; writes go tmp+rename (atomic) so a
-            # CONCURRENT process (bench while check_oracles runs) never
-            # reads a truncated document mid-rewrite
-            path = f"{root}/{r['n_nationkey']}.json"
-            if _os.path.exists(path):
-                continue
-            tmp = f"{path}.tmp.{_os.getpid()}"
-            with open(tmp, "w") as f:
-                _json.dump(
+            with open(f"{root}/{r['n_nationkey']}.json", "w") as f:
+                json.dump(
                     {"nation_name": r["n_name"],
                      "region_key": int(r["n_regionkey"])}, f)
-            _os.replace(tmp, path)
-        _REST_FIXTURE_BUILT.add(root)
+        _BUILT.add(root)
 
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     out = rest_enrich(

@@ -16,6 +16,7 @@ from raptor_spark.backfill import (
 )
 from raptor_spark.plans.historical import get_historical
 from raptor_spark.sources.transcripts import transcripts
+from tests.conftest import jobs_in_group
 
 N_CONVS = 40
 N_SHARDS = 6
@@ -310,21 +311,14 @@ def test_backfill_shard_jobs_carry_caller_job_group(spark, src, tmp_path_factory
     group-scoped counters rely on it). The count is pinned: 2 jobs per
     wave of up to defaultParallelism shards (its one partitioned write,
     with no stats pass and no re-read of the output to count rows)."""
-    sc = spark.sparkContext
     src.count()  # cache materialised outside the group
-    group = "bf-job-group-test"
     out = str(tmp_path_factory.mktemp("bf_group"))
-    sc.setJobGroup(group, "backfill job-group propagation")
-    try:
-        backfill(spark, src, transcript_feature_set(), out, n_shards=N_SHARDS,
-                 source_id="t")
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store fed async
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 2 * math.ceil(N_SHARDS / sc.defaultParallelism)
+    _, n_jobs = jobs_in_group(
+        spark, "bf-job-group-test",
+        lambda: backfill(spark, src, transcript_feature_set(), out,
+                         n_shards=N_SHARDS, source_id="t"),
+    )
+    assert n_jobs == 2 * math.ceil(N_SHARDS / spark.sparkContext.defaultParallelism)
 
 
 def test_backfill_empty_shards_and_stale_dirs(spark, tmp_path_factory):

@@ -20,6 +20,7 @@ from raptor_spark.functions.classifier import (
     quality_classifier_fit,
     quality_classifier_score,
 )
+from tests.conftest import jobs_in_group
 
 QUANT = 1 << 20
 
@@ -184,7 +185,6 @@ def test_each_trainer_fit_runs_one_spark_job(spark):
     on the driver — no Spark job per gradient or Lloyd step."""
     from raptor_spark.functions.similarity import kmeans_fit
 
-    sc = spark.sparkContext
     docs = _docs(spark, n=40)
     emb = spark.createDataFrame(
         [(i, [float(i % 5), 1.0, float(i % 3)]) for i in range(30)],
@@ -192,14 +192,7 @@ def test_each_trainer_fit_runs_one_spark_job(spark):
     )
 
     def jobs(group, fit):
-        sc.setJobGroup(group, group)
-        try:
-            fit()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return jobs_in_group(spark, group, fit)[1]
 
     assert jobs(
         "fit-classifier",

@@ -19,6 +19,7 @@ from raptor_spark.functions.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
 )
+from tests.conftest import jobs_in_group
 
 
 @pytest.fixture(scope="module")
@@ -64,26 +65,6 @@ class TestLshBucketCap:
         reps = exact_dedup(giant_cluster, "doc_id").collect()
         giant = [r for r in reps if r["n_dups"] == 10_000]
         assert len(giant) == 1 and giant[0]["rep_id"] == 0
-
-    def test_two_pass_matches_single_pass(self, spark, giant_cluster):
-        """two_pass anti-join pruning yields the same pairs and the
-        same dropped metrics as the single-pass cap, with no
-        collect_list of the hot bucket anywhere in the plan path."""
-        obs = Observation("lsh2p")
-        pairs = minhash_lsh_pairs(
-            giant_cluster, "doc_id", max_bucket=100, observation=obs,
-            two_pass=True,
-        )
-        got = {(r["id_a"], r["id_b"], r["n_shared_bands"]) for r in pairs.collect()}
-        want = {
-            (r["id_a"], r["id_b"], r["n_shared_bands"])
-            for r in minhash_lsh_pairs(
-                giant_cluster, "doc_id", max_bucket=100
-            ).collect()
-        }
-        assert got == want
-        m = obs.get
-        assert m["dropped_buckets"] > 0 and m["dropped_docs"] >= 10_000
 
     def test_uncapped_keeps_everything(self, spark):
         df = spark.createDataFrame(
@@ -235,20 +216,12 @@ class TestConnectedComponents:
         collect. With broadcasts off the same checkpoint is followed by
         two star rounds of 8 jobs each (the second observes the first's
         checksum unchanged); the count repeats exactly from run to run."""
-        sc = spark.sparkContext
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
         )
 
         def jobs(group):
-            sc.setJobGroup(group, group)
-            try:
-                connected_components(pairs)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            return len(sc.statusTracker().getJobIdsForGroup(group))
+            return jobs_in_group(spark, group, lambda: connected_components(pairs))[1]
 
         assert jobs("cc-driver-path") == 3
         with _distributed(spark):

@@ -99,3 +99,19 @@ def test_bench_contended_flag_two_sided():
     for drift, want in ((2.0, True), (0.5, True), (1.0, False), (None, False)):
         line = bench.build_line(dict(times), 1.0, "0.1", 1000.0, 32, drift)
         assert json.loads(line)["contended"] is want, drift
+
+
+def test_derived_query_lists_name_catalog_queries():
+    """The lists that pick queries out of the catalog (the headline
+    exclusions, the plan-audit notes and its bounded-window set) name
+    only QUERIES keys, so none of them can drift from the catalog."""
+    import bench
+    from tools import plan_audit
+
+    for name, listed in (
+        ("bench.NOT_HEADLINE", bench.NOT_HEADLINE),
+        ("plan_audit.NOTES", plan_audit.NOTES),
+        ("plan_audit.BOUNDED_WINDOW", plan_audit.BOUNDED_WINDOW),
+    ):
+        stale = set(listed) - set(QUERIES)
+        assert not stale, f"{name} names no catalog query: {sorted(stale)}"

@@ -17,7 +17,6 @@ from raptor_spark.sources.catalog import Catalog
 from raptor_spark.sources.transcripts import transcripts
 from raptor_spark.specs import FeatureSetSpec, feature
 from raptor_spark.streaming.windows import (
-    partials_to_bucket_layout,
     run_stream_to_memory,
     stream_bucket_partials,
 )
@@ -56,7 +55,7 @@ def test_stream_to_store_to_training_and_serving(spark, tmp_path):
     # 2) phase-2 merge over stream-produced buckets; drop the sentinel
     #    bucket (count 0 — its only row had a null value)
     merged = merge_buckets(
-        partials_to_bucket_layout(streamed, "10m"),
+        streamed,
         ["conv_id"], over_us=3_600_000_000, granularity_us=600_000_000,
         fns=["sum", "avg"],
     ).filter(F.col("ts") <= F.lit(max_ts + dt.timedelta(minutes=10)))

@@ -72,6 +72,30 @@ class TestSkew:
         h3 = run(df.repartition(64, "ts").sortWithinPartitions(F.desc("ts")))
         assert h1 == h2 == h3
 
+    def test_salted_agg_equals_bucketed_merge_on_decimal(self, spark, skewed):
+        """salted_agg and sliding_agg_bucketed share one partial list and
+        one merge: on the same DECIMAL input, the bucketed window whose
+        span covers every row of a key (its last bucket) gives the
+        salted per-key sum and avg bit for bit."""
+        from raptor_spark.operators.window_agg import sliding_agg_bucketed
+
+        df = skewed.select(
+            "conv_id", "ts", (F.length("text") / 7).cast("decimal(18,6)").alias("v")
+        )
+        lo, hi = df.agg(F.min("ts"), F.max("ts")).first()
+        hour_us = 3_600_000_000
+        span_us = int((hi - lo).total_seconds() * 1_000_000) + 2 * hour_us
+        salted = salted_agg(df, ["conv_id"], "v", ["sum", "avg"], salt_source="ts")
+        bucketed = sliding_agg_bucketed(
+            df, ["conv_id"], "ts", "v", span_us, hour_us, ["sum", "avg"]
+        )
+        last = bucketed.groupBy("conv_id").agg(
+            F.max_by(F.struct("sum", "avg"), "ts").alias("m")
+        ).select("conv_id", "m.sum", "m.avg")
+        want = {tuple(r) for r in salted.collect()}
+        assert {tuple(r) for r in last.collect()} == want
+        assert len(want) == 40
+
 
 class TestSkewedHistorical:
     def test_fused_backfill_on_zipf_data(self, spark, skewed):

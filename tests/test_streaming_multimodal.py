@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from raptor_spark.operators.window_agg import merge_buckets, sliding_agg_bucketed
 from raptor_spark.sources.transcripts import transcripts
 from raptor_spark.streaming.windows import (
-    partials_to_bucket_layout,
     run_stream_to_memory,
     stream_bucket_partials,
 )
@@ -105,7 +104,7 @@ class TestStreaming:
         streamed = spark.table("t_buckets")
 
         merged = merge_buckets(
-            partials_to_bucket_layout(streamed, "10m"),
+            streamed,
             ["conv_id"], over_us=3_600_000_000, granularity_us=600_000_000,
             fns=["count", "sum", "avg"],
         ).select("conv_id", "ts", "count", "sum", "avg")
@@ -156,7 +155,7 @@ class TestStreaming:
         # that MUST hold either way: nothing later than the data's max
         # ts is invented, totals are bounded by batch
         batch_total = 5 + 1
-        got_total = streamed.agg(F.sum("count")).collect()[0][0]
+        got_total = streamed.agg(F.sum("_p_count")).collect()[0][0]
         assert got_total <= batch_total
 
     def test_batch_df_through_stream_plan(self, spark):
