@@ -5,12 +5,12 @@ runs the full historical feature plan (``plans.historical.get_historical``)
 over WAVES of pending shards. A wave holds up to ``defaultParallelism``
 shards (derived from the cluster, not a knob) and is ONE Spark write:
 the source filtered to the wave's shards, through the plan, written
-``partitionBy("shard")`` into a staging dir. Each of the wave's shard
-dirs is then moved into ``data/shard=k`` and its lineage record
-committed. A killed run loses only its in-flight wave and resumes by
-skipping committed shards — output is byte-stable because sharding is
-deterministic on the key and every feature window is contained within
-one key (a conversation never spans shards).
+``partitionBy("shard")`` on the int shard into a staging dir. Each of
+the wave's shard dirs is then moved into ``data/shard=%05d`` and its
+lineage record committed. A killed run loses only its in-flight wave
+and resumes by skipping committed shards — output is byte-stable
+because sharding is deterministic on the key and every feature window
+is contained within one key (a conversation never spans shards).
 
 Reference parity: the reference's historian commits per-bucket parquet
 files and dedupes re-handled buckets via a TTL cache
@@ -297,16 +297,20 @@ def backfill(
         wave = pending[i:i + width]
         t0 = time.perf_counter()
         obs_in, obs_out = Observation(), Observation()
-        part = source.filter(shard_expr.isin(wave)).observe(
-            obs_in, *[F.count_if(shard_expr == k).alias(str(k)) for k in wave]
+        # each side projects the shard once, as an int, and its counts
+        # (and the partitioned write) read that column; the wave filter,
+        # pushed below the input's projection, evaluates it once more
+        part = (
+            source.withColumn("_shard", shard_expr)
+            .filter(F.col("_shard").isin(wave))
+            .observe(
+                obs_in,
+                *[F.count_if(F.col("_shard") == k).alias(str(k)) for k in wave],
+            )
         )
-        out = get_historical(part, fs).withColumn(
-            "shard", F.format_string("%05d", key_hash)
-        )
+        out = get_historical(part, fs).withColumn("shard", key_hash)
         out.observe(
-            obs_out,
-            *[F.count_if(F.col("shard") == f"{k:05d}").alias(str(k))
-              for k in wave],
+            obs_out, *[F.count_if(F.col("shard") == k).alias(str(k)) for k in wave]
         ).write.partitionBy("shard").mode("overwrite").parquet(staging)
         wall_s = round(time.perf_counter() - t0, 3)
         n_out = obs_out.get
@@ -325,7 +329,8 @@ def backfill(
             )
         for k in wave:
             data_path = os.path.join(data_root, f"shard={k:05d}")
-            staged = os.path.join(staging, f"shard={k:05d}")
+            # staged as shard=k, committed as shard=%05d
+            staged = os.path.join(staging, f"shard={k}")
             record = _shard_record_path(out_dir, k)
             # uncommit k before touching its data, and drop the old dir
             # even when k's new output is empty

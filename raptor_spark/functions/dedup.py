@@ -18,9 +18,9 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .rounding import round6
 from .text import fingerprint
@@ -352,39 +352,31 @@ def dedup_against_corpus(
     )
 
 
-def _edge_list(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    """The distinct both-direction edges (src, dst) of ``pairs``, in one
-    pass over them: each pair row emits its two directions."""
-    return pairs.select(
-        F.inline(
-            F.array(
-                F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
-                F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
-            )
-        )
-    ).distinct()
-
-
 def connected_components(
     pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: connected components,
     as (id, cluster_rep = min id in the component) for every id that
-    appears in a pair.
+    appears in a pair. Duplicate, reversed and self pairs are allowed.
+    See ``_components`` for the plan."""
+    return _components(pairs, a_col, b_col).select("id", "cluster_rep")
 
-    The pairs become a deduplicated both-direction edge list (src, dst)
-    in ONE pass over them: each pair row emits both of its directions
-    (``inline`` of a two-struct array), where a union of the two
-    projections would run the whole upstream pair plan (scan, blocking,
-    join, scoring) once per direction. The edge list is materialized
-    ONCE by ``localCheckpoint`` with its row count observed on that same
-    pass. The count picks the path:
+
+def _components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """``connected_components`` plus ``cluster_size``, the number of
+    ids in the component: (id, cluster_rep, cluster_size).
+
+    The raw pairs, as (src, dst), are materialized ONCE by
+    ``localCheckpoint`` with their row count observed on that same
+    pass. Neither path needs them deduplicated or in both directions,
+    so no shuffle runs before the checkpoint beyond the pair plan's
+    own. The count picks the path:
 
     - **driver**, when ``rows × 16 B`` (two 8-byte ids) ≤ the session's
       ``spark.sql.autoBroadcastJoinThreshold``: one collect, then a
       vectorized numpy solve (``_local_components``), returned as a
       local DataFrame. The broadcast threshold is the bound because it
-      is Spark's own "fits on the driver" rule — an edge list under it
+      is Spark's own "fits on the driver" rule — a pair set under it
       is one Spark would already ship whole to every executor for a
       join. A threshold ≤ 0 (broadcasts off) disables this path.
     - **distributed**, for anything larger: alternating large/small
@@ -394,14 +386,14 @@ def connected_components(
     Both paths return the same rows; an empty pair set gives an empty
     frame on either.
     """
-    # materialize the edge list ONCE — every star round starts from it,
+    # materialize the pairs ONCE — every star round starts from them,
     # and without the checkpoint each would recompute the entire
     # upstream pipeline (e.g. the MinHash candidate pass).
     # The observation is the checkpointed plan's root, so AQE cannot
     # drop it along with an empty subtree.
     sized = Observation()
     edges = (
-        _edge_list(pairs, a_col, b_col)
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .observe(sized, F.count(F.lit(1)).alias("rows"))
         .localCheckpoint(eager=True)
     )
@@ -411,7 +403,11 @@ def connected_components(
     if sized.get["rows"] * 16 <= conf.autoBroadcastJoinThreshold():
         id_type = edges.schema["src"].dataType
         schema = StructType(
-            [StructField("id", id_type), StructField("cluster_rep", id_type)]
+            [
+                StructField("id", id_type),
+                StructField("cluster_rep", id_type),
+                StructField("cluster_size", LongType()),
+            ]
         )
         # an Arrow table becomes a LocalRelation whose size Spark knows,
         # so joins against the result plan as broadcasts without a hint
@@ -420,23 +416,24 @@ def connected_components(
 
 
 def _local_components(edges: pa.Table) -> pa.Table:
-    """Connected components of a collected both-direction edge list
-    (src, dst) → (id, cluster_rep = min id in the component).
+    """Connected components of collected pairs (src, dst) → (id,
+    cluster_rep = min id in the component, cluster_size).
 
     Ids map to dense indices in id order (``np.unique``), so the min
-    index of a component is its min id. Each pass hooks every node onto
-    the smallest label among its neighbors (``np.minimum.at``), then
-    jumps pointers (``lab = lab[lab]``) until every label is a root;
-    passes repeat until one changes nothing. A label only ever moves to
-    a smaller index in the same component, and at the fixpoint both
-    ends of every edge share a label, so each component is labelled by
-    its minimum."""
+    index of a component is its min id. Each pass hooks both ends of
+    every pair onto the smaller of their labels (``np.minimum.at``),
+    then jumps pointers (``lab = lab[lab]``) until every label is a
+    root; passes repeat until one changes nothing. A label only ever
+    moves to a smaller index in the same component, and at the fixpoint
+    both ends of every pair share a label, so each component is
+    labelled by its minimum. Duplicate and self pairs change nothing."""
     src = edges.column("src").to_numpy()
     ids, idx = np.unique(
         np.concatenate([src, edges.column("dst").to_numpy()]),
         return_inverse=True,
     )
     s, d = idx[: len(src)], idx[len(src):]
+    s, d = np.concatenate([s, d]), np.concatenate([d, s])
     lab = np.arange(len(ids))
     while True:
         prev = lab.copy()
@@ -445,7 +442,13 @@ def _local_components(edges: pa.Table) -> pa.Table:
             lab = jumped
         if np.array_equal(lab, prev):
             break
-    return pa.table({"id": ids, "cluster_rep": ids[lab]})
+    return pa.table(
+        {
+            "id": ids,
+            "cluster_rep": ids[lab],
+            "cluster_size": np.bincount(lab, minlength=len(ids))[lab],
+        }
+    )
 
 
 # Safety cap, not a knob: alternating star needs O(log² n) rounds, and
@@ -455,19 +458,22 @@ _STAR_MAX_ROUNDS = 50
 
 def _star_components(edges: DataFrame) -> DataFrame:
     """Alternating large-star / small-star connected components
-    (Kiveris et al., SoCC 2014) over a checkpointed, distinct,
-    BOTH-DIRECTIONS edge list (src, dst): per round every node hooks
-    its larger neighbors (large-star), then its smaller neighbors and
-    itself (small-star), onto the minimum of its closed neighborhood.
-    The fixpoint is a forest of stars whose centers are the component
-    minima. Each round's canonical edge set is checkpointed with its
-    checksum (count + xor of row hashes, order-independent) observed on
-    that same pass; two consecutive equal checksums end the loop."""
-    # canonical (hi, lo), hi > lo: the list is distinct and symmetric,
-    # so one direction of each non-self edge is already a set
-    e = edges.where(F.col("src") > F.col("dst")).select(
-        F.col("src").alias("hi"), F.col("dst").alias("lo")
-    )
+    (Kiveris et al., SoCC 2014) over checkpointed pairs (src, dst) in
+    any direction, duplicates and self pairs included: per round every
+    node hooks its larger neighbors (large-star), then its smaller
+    neighbors and itself (small-star), onto the minimum of its closed
+    neighborhood. The fixpoint is a forest of stars whose centers are
+    the component minima. Each round's canonical edge set is
+    checkpointed with its checksum (count + xor of row hashes,
+    order-independent) observed on that same pass; two consecutive
+    equal checksums end the loop. Returns (id, cluster_rep,
+    cluster_size)."""
+    # canonical (hi, lo), hi > lo, self pairs dropped; the first round
+    # plans this projection, and its large-star's distinct absorbs
+    # duplicate and reversed pairs
+    e = edges.select(
+        F.greatest("src", "dst").alias("hi"), F.least("src", "dst").alias("lo")
+    ).where(F.col("hi") != F.col("lo"))
 
     def _large_star(cur: DataFrame) -> DataFrame:
         b = cur.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
@@ -523,10 +529,13 @@ def _star_components(edges: DataFrame) -> DataFrame:
         )
     # fixpoint edges are (member, center): label = center, centers and
     # isolated-in-final nodes label themselves
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    return nodes.join(
+    nodes = edges.select(F.explode(F.array("src", "dst")).alias("id")).distinct()
+    labels = nodes.join(
         e.select(F.col("hi").alias("id"), F.col("lo").alias("rep")), "id", "left"
     ).select("id", F.coalesce(F.col("rep"), F.col("id")).alias("cluster_rep"))
+    return labels.withColumn(
+        "cluster_size", F.count(F.lit(1)).over(W.partitionBy("cluster_rep"))
+    )
 
 
 def window_fingerprints(
@@ -834,35 +843,29 @@ def keep_cluster_representatives(
     representative (min id) per cluster plus every unclustered row.
 
     Plan shape (100 TB): the CC stages touch only the candidate
-    subgraph (a small fraction of the corpus). While its edge list is
+    subgraph (a small fraction of the corpus). While the pairs are
     under the broadcast threshold that subgraph is solved on the driver
-    in one collect; past it, alternating star runs distributed (see
-    ``connected_components``). The corpus-side filter is a LEFT ANTI
-    join against the non-representative ids and a left join against
-    per-rep cluster sizes, with no hints: the driver path returns a
-    local relation whose size Spark knows, so both joins plan as
-    broadcasts — the full corpus is ONE scan with map-side probes — and
-    the distributed path's frames, about as large as the candidate
-    node set, are left to Spark's join planning instead of being forced
-    into a broadcast. The CC result is a local relation (driver path)
-    or a left join of checkpointed frames (distributed path), so its
-    double use (losers + sizes) recomputes no CC round.
+    in one collect, cluster sizes included; past it, alternating star
+    runs distributed and counts its cluster sizes in one aggregate over
+    its result (see ``_components``). The corpus-side filter is ONE
+    left join against (id, cluster_rep, cluster_size), keeping rows
+    with no cluster or that are their cluster's rep, with no hint: the
+    driver path returns a local relation whose size Spark knows, so the
+    join plans as a broadcast — the full corpus is ONE scan with a
+    map-side probe — and the distributed path's frame, about as large
+    as the candidate node set, is left to Spark's join planning instead
+    of being forced into a broadcast.
 
     Returns one row per SURVIVING input row: ``(id_col,
     cluster_size)`` — cluster_size = number of input rows this
     survivor stands for (1 when it had no duplicate).
     """
-    cc = connected_components(pairs)
-    losers = cc.filter(F.col("id") != F.col("cluster_rep")).select(
-        F.col("id").alias(id_col)
-    )
-    sizes = cc.groupBy("cluster_rep").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
+    cc = _components(pairs, "id_a", "id_b").withColumnRenamed("id", id_col)
+    rep = F.col("cluster_rep")
     return (
         df.select(id_col)
-        .join(losers, id_col, "left_anti")
-        .join(sizes.withColumnRenamed("cluster_rep", id_col), id_col, "left")
+        .join(cc, id_col, "left")
+        .where(rep.isNull() | (rep == F.col(id_col)))
         .select(
             id_col,
             F.coalesce(F.col("cluster_size"), F.lit(1))

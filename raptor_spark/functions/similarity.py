@@ -21,6 +21,12 @@
   deterministic coefficients) bucket the corpus; queries probe only
   their own bucket (plus multi-probe neighbors by flipping one bit).
   Approximate; recall controlled by n_planes/n_probes.
+- ``embedding_neardup_pairs``: the same signatures block a self-join.
+  Both sides read ONE hash exchange of the signature frame (the second
+  is a ``ReusedExchange``), so every signature is computed once; a
+  broadcast side would be computed again by the streamed side.
+- ``semantic_dedup_corpus``: those pairs through
+  ``dedup.keep_cluster_representatives``.
 
 The folds are never unrolled into ``get(v, i)`` arithmetic: that is
 bit-identical too, but 512 terms per signature overflow the 64 KB
@@ -203,7 +209,11 @@ def embedding_neardup_pairs(
             .filter(F.col("_bn") <= max_bucket)
             .drop("_bn")
         )
-    a, b = sig.alias("a"), sig.alias("b")
+    # shuffle both sides: a small signature frame would otherwise be
+    # broadcast AND streamed, computing every signature twice; two
+    # shuffles of one plan are one exchange (the other side reads it as
+    # a ReusedExchange)
+    a, b = sig.alias("a"), sig.alias("b").hint("shuffle_hash")
     pairs = (
         a.join(b, ["_pset", "bucket"])
         .filter(F.col("a._id") < F.col("b._id"))

@@ -910,8 +910,8 @@ def q_fuzzy_dedup(spark, sf_dir):
     """End-to-end fuzzy dedup — MinHash-LSH pairs → connected
     components → one surviving representative per near-dup cluster
     (plus all unclustered docs), annotated with the cluster size it
-    stands for. The corpus-side filter is a broadcast LEFT ANTI join
-    against the (small) duplicate-id set."""
+    stands for. The corpus-side filter is one broadcast left join
+    against the (small) CC result with its cluster sizes."""
     from .functions.dedup import fuzzy_dedup_corpus
 
     docs = _t(spark, sf_dir, "documents")

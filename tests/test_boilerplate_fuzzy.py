@@ -142,7 +142,7 @@ class TestFuzzyDedup:
         }
         assert out == {1: 3, 10: 1, 11: 1}
 
-    def test_anti_join_is_broadcast(self, spark):
+    def test_corpus_join_is_broadcast(self, spark):
         import re
 
         def plan(rows):
@@ -152,13 +152,15 @@ class TestFuzzyDedup:
 
         rows = [(i, f"doc number {i} content words") for i in range(6)]
         dup = "the quick brown fox jumps over the lazy dog again today"
-        # the corpus-side filter must be a BROADCAST anti join, never a
-        # corpus shuffle: the driver-path CC result is a local relation
+        # the corpus-side filter must be ONE BROADCAST left join, never
+        # a corpus shuffle: the driver-path CC result is a local relation
         # whose size Spark knows, so it is broadcast without a hint
         with_dups = rows + [(6, dup), (7, dup)]
-        assert re.search(r"BroadcastHashJoin .*LeftAnti", plan(with_dups))
+        final = plan(with_dups).split("== Initial Plan ==")[0]
+        assert re.search(r"BroadcastHashJoin .*LeftOuter", final)
+        assert final.count("Join ") == 1
         # no duplicates: the CC result is an empty local relation and
-        # the optimizer drops the filter joins, so nothing is exchanged
+        # the optimizer drops the filter join, so nothing is exchanged
         assert "Exchange" not in plan(rows)
 
     def test_no_forced_broadcast_when_broadcasts_off(self, spark):

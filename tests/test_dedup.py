@@ -7,6 +7,7 @@ an LLM-data-pipeline extension required by the brief); semantics are
 pinned by the DuckDB oracles in raptor_spark/queries.py.
 """
 
+from collections import Counter
 from contextlib import contextmanager, nullcontext
 
 import pytest
@@ -14,6 +15,7 @@ from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from raptor_spark.functions import dedup
 from raptor_spark.functions.dedup import (
     connected_components,
     exact_dedup,
@@ -94,6 +96,11 @@ def _components(pairs):
     }
 
 
+def _sized(pairs):
+    """The private three-column result, as a set of rows."""
+    return {tuple(r) for r in dedup._components(pairs, "id_a", "id_b").collect()}
+
+
 def _union_find(edges):
     """Pure-Python reference: {(id, min id of its component)}."""
     parent = {}
@@ -110,6 +117,13 @@ def _union_find(edges):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {(x, find(x)) for x in list(parent)}
+
+
+def _union_find_sized(edges):
+    """{(id, min id of its component, ids in the component)}."""
+    labels = _union_find(edges)
+    size = Counter(rep for _, rep in labels)
+    return {(x, rep, size[rep]) for x, rep in labels}
 
 
 # fixed graphs for the union-find comparison, beside the random ones
@@ -163,12 +177,26 @@ class TestConnectedComponents:
         disconnected pieces, the empty graph — plus a mixed graph
         (clique, chain, edge, triangle, self-pairs) and a self-pairs-only
         graph: the driver path, the distributed path and a union-find
-        reference agree."""
+        reference agree on every label and cluster size."""
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        local = _components(pairs)
+        local = _sized(pairs)
         with _distributed(spark):
-            dist = _components(pairs)
-        assert local == dist == _union_find(edges)
+            dist = _sized(pairs)
+        assert local == dist == _union_find_sized(edges)
+
+    @pytest.mark.parametrize("distributed", [False, True])
+    def test_duplicate_reversed_and_self_pairs(self, spark, distributed):
+        """Pairs repeated, reversed and self-paired reach both paths raw;
+        each returns the union-find labels and cluster sizes, and the
+        public result is their two-column projection."""
+        edges = [(2, 1), (1, 2), (1, 2), (3, 2), (2, 3), (3, 3), (9, 9),
+                 (6, 5), (5, 6), (5, 5)]
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        want = _union_find_sized(edges)
+        with _distributed(spark) if distributed else nullcontext():
+            assert _sized(pairs) == want
+            assert _components(pairs) == {(x, rep) for x, rep, _ in want}
+        assert (1, 1, 3) in want and (9, 9, 1) in want and (6, 5, 2) in want
 
     @pytest.mark.parametrize("distributed", [False, True])
     def test_empty_pairs(self, spark, distributed):
@@ -187,35 +215,36 @@ class TestConnectedComponents:
             assert out.collect() == []
             assert out.schema.simpleString() == "struct<id:bigint,cluster_rep:bigint>"
 
-    def test_edge_list_is_one_pass_over_the_pairs(self, spark):
-        """Both directions of every pair come from one pass over the
-        pairs: the edge list's executed plan runs the upstream join once
-        and has no Union, and it holds each undirected edge both ways,
-        once."""
-        from raptor_spark.functions.dedup import _edge_list
+    @pytest.mark.parametrize("distributed", [False, True])
+    def test_pairs_plan_runs_once_per_path(self, spark, distributed):
+        """Each path runs the upstream pair plan (here a UDF-projected
+        scan joined to another) exactly once: the UDF's row counter
+        reads the input size after the result is built and read."""
+        calls = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def counted(x):
+            calls.add(1)
+            return x
 
         left = spark.range(6).select(
-            F.col("id").alias("k"), F.col("id").alias("id_a")
+            F.col("id").alias("k"), counted("id").alias("id_a")
         )
         right = spark.range(6).select(
             F.col("id").alias("k"), ((F.col("id") + 1) % 3).alias("id_b")
         )
         pairs = left.join(right, "k")  # (0,1) (1,2) (2,0) (3,1) (4,2) (5,0)
-        edges = _edge_list(pairs, "id_a", "id_b")
-        plan = edges._jdf.queryExecution().executedPlan().toString()
-        assert "Union" not in plan
-        assert plan.count("Join") == 1
-        want = {(0, 1), (1, 2), (2, 0), (3, 1), (4, 2), (5, 0)}
-        want |= {(b, a) for a, b in want}
-        got = [tuple(r) for r in edges.collect()]
-        assert sorted(got) == sorted(want)
+        with _distributed(spark) if distributed else nullcontext():
+            got = _components(pairs)
+        assert got == {(i, 0) for i in range(6)}
+        assert calls.value == 6
 
     def test_job_counts_per_path(self, spark):
-        """On a small graph the driver path runs the edge checkpoint
-        (its distinct's shuffle-map job and the checkpoint job) and one
-        collect. With broadcasts off the same checkpoint is followed by
-        two star rounds of 8 jobs each (the second observes the first's
-        checksum unchanged); the count repeats exactly from run to run."""
+        """On a small graph the driver path runs the pair checkpoint
+        (one job: no shuffle runs before it) and one collect. With
+        broadcasts off the same checkpoint is followed by two star
+        rounds of 8 jobs each (the second observes the first's checksum
+        unchanged); the count repeats exactly from run to run."""
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
         )
@@ -223,6 +252,6 @@ class TestConnectedComponents:
         def jobs(group):
             return jobs_in_group(spark, group, lambda: connected_components(pairs))[1]
 
-        assert jobs("cc-driver-path") == 3
+        assert jobs("cc-driver-path") == 2
         with _distributed(spark):
-            assert jobs("cc-distributed-path") == 18
+            assert jobs("cc-distributed-path") == 17

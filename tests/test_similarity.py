@@ -16,6 +16,7 @@ from raptor_spark.functions.similarity import (
     lsh_signature,
     norm,
 )
+from tests.conftest import jobs_in_group
 
 SF_DIR = "/root/testdata/sf0.001"
 DIM = 64
@@ -149,6 +150,47 @@ def test_multi_plane_sets_superset_recall(spark, emb):
     assert set(one) <= set(two)
     for k, v in one.items():
         assert two[k] == v
+
+
+@pytest.fixture(scope="module")
+def uncached_sf(tmp_path_factory):
+    """A copy of the sf0.001 embeddings that no test caches: Spark
+    reuses no exchange of a self-join over a cached relation, and the
+    ``emb`` fixture caches the original path for the whole session."""
+    import shutil
+
+    out = tmp_path_factory.mktemp("sf")
+    shutil.copyfile(f"{SF_DIR}/embeddings.parquet", out / "embeddings.parquet")
+    return str(out)
+
+
+def test_neardup_pairs_compute_signatures_once(spark, uncached_sf):
+    """The bucket self-join shuffles the signature frame once and reads
+    that exchange on both sides: no side is broadcast, and the executed
+    plan projects the signature once."""
+    emb = spark.read.parquet(f"{uncached_sf}/embeddings.parquet")
+    pairs = embedding_neardup_pairs(emb, DIM, threshold=0.3)
+    pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "BroadcastExchange" not in final
+    assert "ReusedExchange" in final
+    assert final.count(" AS bucket#") == 1
+
+
+def test_semantic_dedup_query_job_count(spark, uncached_sf):
+    """A warm build + collect of the catalog's ``semantic_dedup`` runs
+    exactly 5 Spark jobs: the signature shuffle, the pair checkpoint,
+    the collect of the pairs for the driver CC solve, the broadcast of
+    the CC result and the corpus scan that joins it."""
+    from raptor_spark.queries import QUERIES
+
+    def run():
+        return QUERIES["semantic_dedup"](spark, uncached_sf).toPandas()
+
+    run()  # the first call also pays the table's one-time read
+    assert jobs_in_group(spark, "semantic-dedup", run)[1] == 5
 
 
 def test_max_bucket_drops_degenerate_bucket(spark):

@@ -85,7 +85,9 @@ def main():
     import os
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+    # query names in the order given, repeats kept: a name given twice
+    # runs twice in this process (none given: every query, once)
+    only = sys.argv[2:]
     # EXACT is the default: local runs must not silently pass what the
     # driver's bit-equal gate would fail (round-2 lesson). "0" loosens.
     exact = os.environ.get("SPARK_GRAFT_EXACT", "1") == "1"
@@ -102,13 +104,13 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
-    unknown = only - set(qs)
+    unknown = set(only) - set(qs)
     if unknown:
         print(f"FAIL unknown query name(s): {sorted(unknown)}")
         failures += len(unknown)
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    names = [n for n in only if n in qs] if only else list(qs)
+    for name in names:
+        fn = qs[name]
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()

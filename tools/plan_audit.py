@@ -222,23 +222,39 @@ NOTES = {
     ),
     "fuzzy_dedup": (
         "End-to-end dedup: LSH pair generation + CC run on the "
-        "candidate subgraph only (banded, capped buckets; edges "
-        "localCheckpoint'ed once with their row count observed; an "
-        "edge list under the broadcast threshold is collected and "
-        "solved on the driver, a larger one runs alternating "
+        "candidate subgraph only (banded, capped buckets; the raw pairs "
+        "localCheckpoint'ed once with their row count observed, no "
+        "distinct or both-direction edge list first; pairs under the "
+        "broadcast threshold are collected and solved on the driver, "
+        "cluster sizes included, a larger set runs alternating "
         "large/small star, one checkpoint per round — either way the "
         "audited plan shows only the final stage, as CC materialized "
-        "upstream at build time). Corpus-side filter is a LEFT ANTI "
-        "join against the duplicate-id set + a left join for cluster "
-        "sizes, with no hints: the driver-path CC result is a local "
-        "relation under the threshold, so both plan as broadcasts and "
-        "the full corpus is ONE scan with map-side probes."
+        "upstream at build time). Corpus-side filter is ONE left join "
+        "against (id, cluster_rep, cluster_size), keeping rows whose "
+        "rep is NULL or themselves, with no hints: the driver-path CC "
+        "result is a local relation under the threshold, so it plans "
+        "as a broadcast and the full corpus is ONE scan with a map-side "
+        "probe. The left-anti join and the cluster-size aggregate (its "
+        "shuffle and second broadcast) are gone."
     ),
     "semantic_dedup": (
         "Same keep-representatives tail as fuzzy_dedup, fed by "
-        "embedding-LSH cosine pairs (equi-join on hyperplane bucket, "
+        "embedding-LSH cosine pairs (see embedding_neardup: one "
+        "signature exchange read by both sides of the bucket join, "
         "never all-pairs; n_planes auto-sizing keeps mean bucket "
         "bounded at any corpus size)."
+    ),
+    "embedding_neardup": (
+        "Bucket self-join on the 8-plane LSH signature: the signature "
+        "frame is hash-shuffled on its bucket ONCE and both join sides "
+        "read that exchange (ReusedExchange, shuffled-hash join) — "
+        "without the shuffle_hash hint a small corpus broadcast one "
+        "side and streamed the other, computing every signature twice. "
+        "Exact cosine filters the in-bucket pairs; at scale the join "
+        "shuffles anyway, so the hint only makes small inputs plan the "
+        "way large ones do. The audit reads the plan before it runs, "
+        "so it counts both Exchanges; adaptive execution turns the "
+        "second into the ReusedExchange."
     ),
     "tokenize_corpus": (
         "Tokenize map-side (JVM regex + posexplode); ONE map-side-"
