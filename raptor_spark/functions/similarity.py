@@ -108,30 +108,26 @@ def brute_force_topk(
     )
 
 
-def _plane_coeff(plane: int, dim: int, plane_set: int = 0) -> list[float]:
+def _plane_coeff(plane: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane coefficients in [-1, 1]
-    derived from md5 — reproducible across engines/runs. ``plane_set``
-    salts an independent family of planes (set 0 keeps the original
-    derivation for oracle compatibility)."""
+    derived from md5 — reproducible across engines/runs (the oracle SQL
+    derives the same planes)."""
     import hashlib
 
-    tag = f"plane:{plane}" if plane_set == 0 else f"set{plane_set}:plane:{plane}"
     out = []
     for j in range(dim):
-        h = hashlib.md5(f"{tag}:{j}".encode()).hexdigest()
+        h = hashlib.md5(f"plane:{plane}:{j}".encode()).hexdigest()
         out.append(int(h[:15], 16) / float(16**15) * 2 - 1)
     return out
 
 
-def lsh_signature(
-    vec: str, dim: int, n_planes: int = 8, plane_set: int = 0
-) -> Column:
+def lsh_signature(vec: str, dim: int, n_planes: int = 8) -> Column:
     """Random-hyperplane signature as an int (bit i = sign of v·plane_i).
     ``vec`` is a SQL expression (a column name). A projection that is
     NULL (NULL vector, NULL element, wrong length) leaves its bit 0."""
     terms = ["0"]
     for p in range(n_planes):
-        coeff = ", ".join(f"{c!r}D" for c in _plane_coeff(p, dim, plane_set))
+        coeff = ", ".join(f"{c!r}D" for c in _plane_coeff(p, dim))
         proj = _dot_sql(vec, f"array({coeff})")
         terms.append(f"CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END")
     return F.expr(" + ".join(terms))
@@ -158,7 +154,6 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     n_planes: int | None = 8,
-    n_plane_sets: int = 1,
     max_bucket: int = 0,
     target_bucket: int = 64,
 ) -> DataFrame:
@@ -172,10 +167,6 @@ def embedding_neardup_pairs(
       bucket is small (n_planes ≈ log2(n_rows / target_bucket)); at
       10⁹ rows use ≥ 20 planes, not the default 8 (which caps at 256
       buckets and makes the in-bucket join quadratic).
-    - ``n_plane_sets``: OR-construction for recall — each extra
-      independent plane family re-buckets the corpus and unions the
-      candidate pairs (more planes cut recall per set; more sets win
-      it back, like MinHash bands).
     - ``max_bucket``: drop buckets larger than this before the
       self-join (0 = uncapped) — a degenerate bucket (e.g. zero
       vectors) otherwise puts O(n²) pairs in one task.
@@ -188,24 +179,13 @@ def embedding_neardup_pairs(
     """
     if n_planes is None:
         n_planes = auto_n_planes(df, id_col, target_bucket)
-    vecs = _normed(df, id_col, vec_col, "_id", "_v")
-    parts = [
-        vecs.select(
-            "*",
-            lsh_signature("_v", dim, n_planes, plane_set=s).alias("bucket"),
-            F.lit(s).alias("_pset"),
-        )
-        for s in range(n_plane_sets)
-    ]
-    sig = parts[0]
-    for p in parts[1:]:
-        sig = sig.unionByName(p)
+    sig = _normed(df, id_col, vec_col, "_id", "_v").withColumn(
+        "bucket", lsh_signature("_v", dim, n_planes)
+    )
     if max_bucket > 0:
         # bucket sizes ride the same shuffle the join needs anyway
         sig = (
-            sig.withColumn(
-                "_bn", F.count(F.lit(1)).over(W.partitionBy("_pset", "bucket"))
-            )
+            sig.withColumn("_bn", F.count(F.lit(1)).over(W.partitionBy("bucket")))
             .filter(F.col("_bn") <= max_bucket)
             .drop("_bn")
         )
@@ -214,8 +194,8 @@ def embedding_neardup_pairs(
     # shuffles of one plan are one exchange (the other side reads it as
     # a ReusedExchange)
     a, b = sig.alias("a"), sig.alias("b").hint("shuffle_hash")
-    pairs = (
-        a.join(b, ["_pset", "bucket"])
+    return (
+        a.join(b, "bucket")
         .filter(F.col("a._id") < F.col("b._id"))
         .select(
             F.col("a._id").alias("id_a"),
@@ -224,10 +204,6 @@ def embedding_neardup_pairs(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-    if n_plane_sets > 1:
-        # a pair found by several sets has identical cos_sim — dedup
-        pairs = pairs.groupBy("id_a", "id_b").agg(F.max("cos_sim").alias("cos_sim"))
-    return pairs
 
 
 def kmeans_fit(
@@ -463,7 +439,6 @@ def semantic_dedup_corpus(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     n_planes: int | None = 8,
-    n_plane_sets: int = 1,
     max_bucket: int = 0,
 ) -> DataFrame:
     """END-TO-END semantic dedup (the SemDeDup pass): embedding-cosine
@@ -474,7 +449,7 @@ def semantic_dedup_corpus(
     ``embedding_neardup_pairs`` with
     ``dedup.keep_cluster_representatives`` (each stage independently
     oracle-gated; see those for the 100 TB plan shape and the
-    n_planes / plane-set / bucket-cap scale levers — ``n_planes=None``
+    n_planes / bucket-cap scale levers — ``n_planes=None``
     auto-sizes from corpus cardinality).
 
     Returns one row per SURVIVING vector: ``(id_col, cluster_size)``.
@@ -488,7 +463,6 @@ def semantic_dedup_corpus(
         vec_col=vec_col,
         threshold=threshold,
         n_planes=n_planes,
-        n_plane_sets=n_plane_sets,
         max_bucket=max_bucket,
     )
     return keep_cluster_representatives(df, pairs, id_col)

@@ -21,6 +21,9 @@ explodes. All features sharing the key column join in a single pass:
 each contributes a value column that is NULL on spine rows and on other
 features' rows.
 
+``fill_last`` is the one staleness-guarded forward fill (W4), used by
+``asof_join`` and by the fused historical plan.
+
 Skew: conversations are Zipf-hot; salting a hot key's *feature* rows
 is impossible for as-of (needs full per-key order), so the skew lever
 here is AQE + hashing on the key only; within a single key the sort is
@@ -37,10 +40,24 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from .tsutil import micros
+
+
+def fill_last(value: Column, w: WindowSpec, value_ts: Column, now_us: Column,
+              staleness_us: int) -> Column:
+    """``last(value, ignorenulls)`` over ``w``, nulled when the row it
+    came from is stale: its ``value_ts`` (epoch µs, non-null exactly
+    where ``value`` is) < ``now_us`` − ``staleness_us``. 0 ⇒ no cutoff
+    (staleness check W4, replay.py:263-264)."""
+    filled = F.last(value, ignorenulls=True).over(w)
+    if staleness_us > 0:
+        filled_ts = F.last(value_ts, ignorenulls=True).over(w)
+        filled = F.when(filled_ts >= now_us - F.lit(staleness_us), filled)
+    return filled
 
 
 def asof_join(
@@ -117,11 +134,9 @@ def asof_join(
 
     out = unioned
     for c in value_cols:
-        filled = F.last(F.col(f"_v_{c}"), ignorenulls=True).over(w)
-        filled_ts = F.last(F.col(f"_vts_{c}"), ignorenulls=True).over(w)
-        st = staleness_us.get(c, 0)
-        if st and st > 0:
-            valid = filled_ts >= micros(ts_col) - F.lit(st)
-            filled = F.when(valid, filled)
+        filled = fill_last(
+            F.col(f"_v_{c}"), w, F.col(f"_vts_{c}"), micros(ts_col),
+            staleness_us.get(c) or 0,
+        )
         out = out.withColumn(c, filled)
     return out.filter(F.col("_is_spine") == 1).select(*spine_cols, *value_cols)

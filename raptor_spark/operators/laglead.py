@@ -1,12 +1,14 @@
 """Lag / lead / keep_previous / validity operators (SURVEY.md §2.5).
 
-- ``with_lags``: W2/W6 — N previous values of a column per key, the
-  Spark realization of the reference's keep_previous ring buffer
+- ``lag_versions``: W2/W6 — the one version chain: N previous values
+  of a column per key, the Spark realization of the reference's
+  keep_previous ring buffer
   (``/root/reference/internal/plugins/providers/state/redis/primitives.go:112-135``)
   and the ``@-N`` selector getter
   (``/root/reference/labsdk/raptor/replay.py:246-261``): at a query
   time, version N = the N-th newest value ≤ ts, **invalid when its ts <
-  ts_of_latest − N·over** (the age guard).
+  ts_of_latest − N·over** (the age guard). ``with_lags`` and every
+  keep_previous of ``plans/historical.py`` call it.
 - ``with_leads``: forward-looking turn features (north rule) — label
   engineering only; never joined as-of backward, so leakage-safe by
   construction when used on the label side.
@@ -25,14 +27,50 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .tsutil import micros
+from .tsutil import micros, micros_sql
+
+
+def _key_order(ts_col: str, tiebreak: Optional[str]) -> list[Column]:
+    return [F.col(c).asc() for c in (ts_col, tiebreak) if c]
 
 
 def _key_window(keys: Sequence[str], ts_col: str, tiebreak: Optional[str]):
-    order = [F.col(ts_col).asc()]
-    if tiebreak:
-        order.append(F.col(tiebreak).asc())
-    return W.partitionBy(*keys).orderBy(*order)
+    return W.partitionBy(*keys).orderBy(*_key_order(ts_col, tiebreak))
+
+
+def lag_versions(
+    col: str,
+    keys: Sequence[str],
+    order: Sequence[Column],
+    ts_us_sql: str,
+    versions: int,
+    over_us: int = 0,
+    updates_only: bool = False,
+    prefix: Optional[str] = None,
+) -> list[Column]:
+    """The ``{prefix}_prev{n}`` columns (n=1..versions) of ``col`` per
+    ``keys`` in ``order``: prev-n is the n-th previous value, NULL when
+    its row's ts (``ts_us_sql``, epoch µs) is older than the current
+    row's − n·``over_us`` (the age guard, replay.py:256-259; 0 = none).
+
+    updates_only: count only the rows where ``col`` is non-null
+    (``lag … IGNORE NULLS``), same-``order`` ties updates-first."""
+    c = f"`{col}`"
+    ts, ignore, tie = ts_us_sql, "", []
+    if updates_only:
+        ts = f"CASE WHEN {c} IS NOT NULL THEN {ts_us_sql} END"
+        ignore, tie = " ignore nulls", [F.col(col).isNull()]
+    w = W.partitionBy(*keys).orderBy(*order, *tie)
+    prefix = prefix if prefix is not None else col
+    out = []
+    for n in range(1, versions + 1):
+        lagged = F.expr(f"lag({c}, {n}){ignore}").over(w)
+        if over_us > 0:
+            lag_ts = F.expr(f"lag({ts}, {n}){ignore}").over(w)
+            guard = lag_ts >= F.expr(ts_us_sql) - F.lit(n * over_us)
+            lagged = F.when(guard, lagged)
+        out.append(lagged.alias(f"{prefix}_prev{n}"))
+    return out
 
 
 def with_lags(
@@ -45,20 +83,14 @@ def with_lags(
     tiebreak: Optional[str] = None,
     prefix: Optional[str] = None,
 ) -> DataFrame:
-    """Add ``{col}_prev{n}`` (n=1..versions) with the reference age
-    guard: prev-n is NULL when lag_n_ts < current_ts − n·over
-    (replay.py:256-259; over=0 ⇒ keep until next update, no guard)."""
-    w = _key_window(keys, ts_col, tiebreak)
+    """Add ``{col}_prev{n}`` (n=1..versions) per key in (ts, tiebreak)
+    order, with the reference age guard (``lag_versions``)."""
     prefix = prefix if prefix is not None else col
-    out = df
-    for n in range(1, versions + 1):
-        lagged = F.lag(F.col(col), n).over(w)
-        if over_us and over_us > 0:
-            lag_ts = F.lag(micros(ts_col), n).over(w)
-            guard = lag_ts >= micros(ts_col) - F.lit(n * over_us)
-            lagged = F.when(guard, lagged)
-        out = out.withColumn(f"{prefix}_prev{n}", lagged)
-    return out
+    lags = lag_versions(
+        col, keys, _key_order(ts_col, tiebreak),
+        micros_sql(ts_col), versions, over_us or 0, prefix=prefix,
+    )
+    return df.withColumns({f"{prefix}_prev{n}": c for n, c in enumerate(lags, 1)})
 
 
 def with_leads(

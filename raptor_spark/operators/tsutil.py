@@ -15,3 +15,9 @@ from pyspark.sql import functions as F
 def micros(c: Column | str) -> Column:
     col = F.col(c) if isinstance(c, str) else c
     return F.unix_micros(col.cast("timestamp"))
+
+
+def micros_sql(c: str) -> str:
+    """``micros`` of column ``c`` as a SQL expression (for window
+    functions only SQL can spell, e.g. ``lag … IGNORE NULLS``)."""
+    return f"unix_micros(cast(`{c}` as timestamp))"

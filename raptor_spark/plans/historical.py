@@ -10,7 +10,8 @@ Two physical plans, chosen from the inputs:
 
 - ``get_historical_fused`` — every feature is a window expression over
   ONE scan of the shared source (one hash shuffle + one in-partition
-  sort); the spine is the key feature's source rows.
+  sort, plus one tie-ordered sort per filtered keep_previous feature);
+  the spine is the key feature's source rows.
 - ``_assemble`` — the as-of plan. Each feature's value frame is read
   on its own (``replay_wide`` over its source, or a partition-pruned
   scan of the materialized store), the frames of one key family are
@@ -27,10 +28,12 @@ inputs are padded back by each feature's staleness
 complete; padding rows are dropped after the merge (``data`` vs
 ``base`` CTE, featureset.tmpl.sql:51).
 
-keep_previous (W2): the fused plan lags inside its window pass; the
-as-of plan packs each value column's versions into a struct on the
-value frame (``_kp_pack``, lag N of value & ts + age guard,
-replay.py:246-261) that rides the as-of join.
+keep_previous (W2, replay.py:246-261) is ``laglead.lag_versions`` and
+the staleness cutoff (W4, replay.py:263-264) is ``asof.fill_last`` in
+both plans. A value column's versions travel in a ``_kp_pack`` struct,
+forward-filled like the value: on the value frame through the as-of
+join, or in the fused plan's own projection for a filtered feature; a
+total feature's versions are a plain lag over its rows.
 """
 
 from __future__ import annotations
@@ -42,47 +45,32 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F, Window as W
 
-from ..operators.tsutil import micros
+from ..operators.asof import asof_join, fill_last
+from ..operators.laglead import lag_versions
+from ..operators.tsutil import micros, micros_sql
 
 from ..specs import FeatureSetSpec, FeatureSpec
 from .replay import _eval_expr, encode_keys, replay_wide
 
 
-def _kp_pack(fv: DataFrame, keys, cols, kp) -> DataFrame:
-    """keep_previous versions of each value column ``c`` in ``cols``,
-    PACKED into one struct column ``_kp_<c>`` with fields
-    ``<c>_prev1..N``. Version n is the n-th previous non-null ``c`` per
-    ``keys`` (IGNORE NULLS: the frames of a store read interleave the
-    rows of a feature's sibling fqns; on a replayed frame every row is
-    an update and this is a plain lag), same-ts ties ordered
-    updates-first like the fused plan, and nulled when older than
-    n × ``over`` (the reference's age guard, replay.py:256-259).
+def _kp_pack(c: str, keys, ts_us_sql: str, kp, prefix: str) -> Column:
+    """keep_previous versions of value column ``c``, PACKED into one
+    struct with fields ``<prefix>_prev1..N``: ``lag_versions`` over the
+    UPDATE rows of ``c`` (its non-null rows: a store read interleaves a
+    feature's sibling fqns, a filtered feature is null off its filter).
 
-    The pack is what keeps versions PIT-consistent through the as-of
-    merge: ``asof_join`` forward-fills each column independently with
-    ``last(ignorenulls)``, so a separate prev column whose age guard
-    nulled it AT the latest update would be "filled past" — the join
-    would resurrect an older update's (younger-at-the-time) version,
-    e.g. prev1 = the value from TWO updates back, disagreeing with the
-    fused plan and the reference's latest-update-anchored versioning
-    (caught by review r3, runtime-confirmed). The struct is non-null
-    at exactly the column's update rows even when its FIELDS are
-    guard-nulled, so the fill always lands on the same winning row as
-    the base value. Unpacked after the join by ``_unpack_kp``."""
-    tsu = micros("ts")
-    packs = []
-    for c in cols:
-        w = W.partitionBy(*keys).orderBy(tsu, F.col(c).isNull())
-        c_ts = f"CASE WHEN `{c}` IS NOT NULL THEN unix_micros(cast(ts as timestamp)) END"
-        fields = []
-        for n in range(1, kp.versions + 1):
-            lagged = F.expr(f"lag(`{c}`, {n}) ignore nulls").over(w)
-            if kp.over_us > 0:
-                lag_ts = F.expr(f"lag({c_ts}, {n}) ignore nulls").over(w)
-                lagged = F.when(lag_ts >= tsu - F.lit(n * kp.over_us), lagged)
-            fields.append(lagged.alias(f"{c}_prev{n}"))
-        packs.append(F.when(F.col(c).isNotNull(), F.struct(*fields)).alias(f"_kp_{c}"))
-    return fv.select("*", *packs)
+    The pack keeps versions PIT-consistent through a forward fill:
+    ``fill_last`` fills each column independently, so a separate prev
+    column whose age guard nulled it AT the latest update would be
+    "filled past" to an older update's version (caught by review r3,
+    runtime-confirmed). The struct is non-null at exactly the update
+    rows even when its FIELDS are guard-nulled, so the fill lands on
+    the same row as the base value. ``_unpack_kp`` expands it."""
+    versions = lag_versions(
+        c, keys, [F.expr(ts_us_sql)], ts_us_sql, kp.versions, kp.over_us,
+        updates_only=True, prefix=prefix,
+    )
+    return F.when(F.col(c).isNotNull(), F.struct(*versions))
 
 
 def _unpack_kp(df: DataFrame) -> DataFrame:
@@ -130,10 +118,10 @@ def _expr_total(spec: FeatureSpec) -> bool:
 def _fusible(spec: FeatureSpec, keys, ts_col: str) -> bool:
     """A feature can join the single-pass fused plan when it reads the
     shared source verbatim (same keys/ts, no re-keying) — filters are
-    fused via conditional aggregates; filtered keep_previous via
-    ``lag IGNORE NULLS`` (n-th previous update row, not n-th previous
-    source row). keep_previous on an AGGREGATED feature would need a
-    lag over a window column (a second pass) — general path only."""
+    fused via conditional aggregates; filtered keep_previous via a
+    forward-filled ``_kp_pack``. keep_previous on an AGGREGATED feature
+    would need a lag over a window column (a second pass) — general
+    path only."""
     return (
         tuple(spec.keys) == tuple(keys)
         and spec.timestamp_col == ts_col
@@ -165,16 +153,15 @@ def get_historical_fused(
       feature row ts' <= t (as-of-last-update, the reference's
       featureset.tmpl.sql:104-122 join semantics) — realized as
       publish-at-update + last(ignorenulls) forward-fill;
-    - staleness cutoff via the last-update timestamp guard (W4);
+    - staleness cutoff via the last-update ts guard (``fill_last``, W4);
     - implicit None-filter: conditional exprs keep null rows out of
       every aggregate (Spark aggs skip nulls);
-    - keep_previous = plain lag (every row is an update for unfiltered
-      exprs) with the reference age guard (replay.py:256-259).
+    - keep_previous = ``lag_versions`` with the reference age guard
+      (replay.py:256-259): a plain lag for a total expr (every row is
+      an update: the contract in ``specs.feature``), else the filled
+      ``_kp_pack`` of the latest update.
     """
-    from pyspark.sql import Window as W
-
     from ..operators.window_agg import _agg_over
-    from .replay import _eval_expr
 
     key_feature = fs.resolve_key_feature()
     keys, ts_col = key_feature.keys, "ts"
@@ -224,19 +211,23 @@ def get_historical_fused(
     # WindowExec below the orderBy(tsu) sliding aggregates — a
     # same-JVM alternating A/B at 48M turns put that design ~15-20%
     # SLOWER than the single-WindowExec RANGE plan (BENCH/BASELINE.md
-    # r3), so RANGE fill + one WindowExec stays. The
-    # tie ordering IS used below for the filtered keep_previous lag
-    # chains, whose `lag IGNORE NULLS` walk has no tie-aware frame
-    # equivalent and was order-dependent without it (ADVICE r2).
+    # r3), so RANGE fill + one WindowExec stays. A filtered
+    # keep_previous pack is staged in a projection of its own (Spark
+    # rejects a window inside last()): its tie-ordered Window runs
+    # below the RANGE fill, which reads the same sort.
     rows_w = (
         W.partitionBy(*keys).orderBy(tsu).rangeBetween(W.unboundedPreceding, 0)
     )
-    lag_w = W.partitionBy(*keys).orderBy(tsu)
 
+    def fill(value, v, staleness_us):
+        return fill_last(value, rows_w, F.when(v.isNotNull(), tsu), tsu, staleness_us)
+
+    packs: list = []
     out_cols: list = []
     key_value = None
-    for spec in fs.features:
+    for i, spec in enumerate(fs.features):
         v = F.col(vname[spec.name])
+        total = _expr_total(spec)
         if spec.aggr is not None:
             a = spec.aggr
             rw = (
@@ -244,7 +235,7 @@ def get_historical_fused(
                 .orderBy(tsu)
                 .rangeBetween(-(a.over_us - 1), 0)
             )
-            if _expr_total(spec):
+            if total:
                 # total expr: every row is an update → the anchored
                 # window IS the as-of value; no fill/guard machinery
                 # (halves the buffered window columns). Unfiltered
@@ -255,85 +246,38 @@ def get_historical_fused(
                         _agg_over(fn, v, rw).alias(f"{spec.name}_{fn}")
                     )
                 continue
-            upd_ts = F.last(F.when(v.isNotNull(), tsu), ignorenulls=True).over(
-                rows_w
-            )
-            guard = upd_ts >= tsu - F.lit(a.over_us)
             for fn in a.fns:
-                anchored = _agg_over(fn, v, rw)
-                published = F.when(v.isNotNull(), anchored)
-                filled = F.last(published, ignorenulls=True).over(rows_w)
+                published = F.when(v.isNotNull(), _agg_over(fn, v, rw))
                 out_cols.append(
-                    F.when(guard, filled).alias(f"{spec.name}_{fn}")
+                    fill(published, v, a.over_us).alias(f"{spec.name}_{fn}")
                 )
+            continue
+        col = v if total else fill(v, v, spec.effective_staleness_us)
+        out_cols.append(col.alias(spec.name))
+        if spec is key_feature:
+            # spine membership = the key feature has a value AT this
+            # row (raw expr non-null, fs.go:35-49) — NOT the
+            # forward-filled column, which would admit every row after
+            # the first update
+            key_value = v
+        kp = spec.keep_previous
+        if kp is None:
+            continue
+        if total:
+            out_cols += lag_versions(
+                vname[spec.name], keys, [tsu], "_tsu", kp.versions,
+                kp.over_us, prefix=spec.name,
+            )
         else:
-            st = spec.effective_staleness_us
-            if not _expr_total(spec):
-                filled = F.last(v, ignorenulls=True).over(rows_w)
-                upd_ts = F.last(
-                    F.when(v.isNotNull(), tsu), ignorenulls=True
-                ).over(rows_w)
-                col = (
-                    F.when(upd_ts >= tsu - F.lit(st), filled) if st > 0 else filled
-                )
-            else:
-                col = v
-            out_cols.append(col.alias(spec.name))
-            if spec is key_feature:
-                # spine membership = the key feature has a value AT
-                # this row (raw expr non-null, fs.go:35-49) — NOT the
-                # forward-filled column, which would admit every row
-                # after the first update
-                key_value = v
-            kp = spec.keep_previous
-            if kp is not None:
-                vn = vname[spec.name]
-                # update-row ts, null on non-update rows (same null mask
-                # as the value itself) — lets IGNORE NULLS walk updates
-                vts_sql = f"CASE WHEN {vn} IS NOT NULL THEN _tsu END"
-                # filtered kp: the IGNORE-NULLS lag walk must count a
-                # same-ts update (the RANGE fill above sees it, so the
-                # version chain must too) — order ties UPDATES-FIRST
-                # per feature. Deterministic under the at-most-one-
-                # update-per-(key,ts,feature) contract; adds one
-                # Window pass only for feature sets that HAVE a
-                # filtered kp (ADVICE r2 fix).
-                tie_w = W.partitionBy(*keys).orderBy(tsu, v.isNull())
-                for n in range(1, kp.versions + 1):
-                    if _expr_total(spec):
-                        # total expr: every row is an update → plain lag
-                        lagged = F.lag(v, n).over(lag_w)
-                        if kp.over_us > 0:
-                            lag_ts = F.lag(tsu, n).over(lag_w)
-                            lagged = F.when(
-                                lag_ts >= tsu - F.lit(n * kp.over_us), lagged
-                            )
-                    else:
-                        # filtered expr: versions count UPDATE rows. At a
-                        # row the latest update is itself (v non-null) or
-                        # strictly earlier (v null; same-ts updates sort
-                        # BEFORE this row in tie_w, so the walk sees
-                        # them) — the n-th version before the latest is
-                        # the n-th / (n+1)-th previous non-null.
-                        def _ign(sql: str, off: int, _w=tie_w):
-                            return F.expr(
-                                f"lag({sql}, {off}) ignore nulls"
-                            ).over(_w)
-
-                        lagged = F.when(v.isNotNull(), _ign(vn, n)).otherwise(
-                            _ign(vn, n + 1)
-                        )
-                        if kp.over_us > 0:
-                            pts = F.when(
-                                v.isNotNull(), _ign(vts_sql, n)
-                            ).otherwise(_ign(vts_sql, n + 1))
-                            anchor = F.last(
-                                F.when(v.isNotNull(), tsu), ignorenulls=True
-                            ).over(rows_w)
-                            lagged = F.when(
-                                pts >= anchor - F.lit(n * kp.over_us), lagged
-                            )
-                    out_cols.append(lagged.alias(f"{spec.name}_prev{n}"))
+            # the latest update's pack, filled over the RANGE frame
+            # (which sees a same-ts update)
+            packs.append(
+                _kp_pack(vname[spec.name], keys, "_tsu", kp, spec.name)
+                .alias(f"_kp_{i}")
+            )
+            out_cols.append(fill(F.col(f"_kp_{i}"), v, 0).alias(f"_kp_{spec.name}"))
+    if packs:
+        df = df.select("*", *packs)
 
     out = df.select(
         *keys,
@@ -347,7 +291,7 @@ def get_historical_fused(
         out = out.filter(F.col("_spine")).drop("_spine")
     if since is not None:
         out = out.filter(F.col(ts_col) >= F.lit(since))
-    return out
+    return _unpack_kp(out)
 
 
 def _assemble(
@@ -380,8 +324,6 @@ def _assemble(
     equi-joins back, legal as long as the spine row carries its key
     columns. Outputs already on the spine are not joined again.
     """
-    from ..operators.asof import asof_join
-
     on_spine = set(spine.columns)
     families: dict[tuple[str, ...], tuple[list[DataFrame], dict[str, int]]] = {}
     for spec in fs.base_features():
@@ -408,7 +350,10 @@ def _assemble(
             c: spec.effective_staleness_us for c in base if c not in on_spine
         }
         if spec.keep_previous is not None:
-            fv = _kp_pack(fv, on, base, spec.keep_previous)
+            fv = fv.select("*", *[
+                _kp_pack(c, on, micros_sql("ts"), spec.keep_previous, c).alias(f"_kp_{c}")
+                for c in base
+            ])
             staleness.update({f"_kp_{c}": 0 for c in base})
         frames, fam_staleness = families.setdefault(tuple(spec.keys), ([], {}))
         frames.append(fv.select(*on, "ts", *staleness))

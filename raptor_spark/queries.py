@@ -370,7 +370,7 @@ def q_kp_filtered(spark, sf_dir):
     """W2 + filter through the FUSED plan: keep_previous of a FILTERED
     feature (last click value + its previous version with the 2h age
     guard anchored at the latest update), as-of joined onto the
-    purchase spine — the lag-IGNORE-NULLS single-pass realization."""
+    purchase spine — the forward-filled version pack, single pass."""
     from .plans.historical import get_historical
     from .specs import FeatureSetSpec, feature
 

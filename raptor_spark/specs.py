@@ -98,7 +98,9 @@ class FeatureSpec:
     staleness_us: int = 0
     aggr: Optional[AggrSpec] = None
     keep_previous: Optional[KeepPreviousSpec] = None
-    # optional pre-filter on the source (e.g. role='tool'); SQL string
+    # optional pre-filter on the source (e.g. role='tool'); SQL string.
+    # Without it (and ``expr_may_be_null``) the expr must be TOTAL,
+    # non-null at every row: see ``feature``
     filter: Optional[str] = None
     # the expr itself can evaluate to NULL (it ENCODES a filter — e.g.
     # a compiled handler with `return None` paths). Plans must then use
@@ -161,6 +163,12 @@ def feature(
 ) -> FeatureSpec:
     """Ergonomic constructor mirroring @feature/@aggregation/@freshness/
     @keep_previous (decorators.py:364-527) in one call.
+
+    Total-expression contract: an ``expr`` without ``filter`` must be
+    non-null at every source row. The fused historical plan reads its
+    value and versions off each row unfilled, so a NULL is served (and
+    versioned) as NULL where the as-of plan fills the previous value.
+    Rows where the value is undefined belong in ``filter``.
     """
     if isinstance(keys, str):
         keys = (keys,)

@@ -40,6 +40,18 @@ def test_fused_is_selected(spark):
     assert plan[: plan.index("Exchange")].count("Sort [") == 1
 
 
+def test_kp_filtered_is_one_sort(spark):
+    """A filtered keep_previous stages its version pack one Window below
+    the RANGE fill, so the pack's tie-ordered sort serves both: the
+    ``kp_filtered`` query plans exactly one Exchange and one Sort."""
+    from raptor_spark.queries import QUERIES
+
+    df = QUERIES["kp_filtered"](spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    assert plan.count("Sort [") == 1
+
+
 def test_fused_since_until(spark):
     src = transcripts(spark, n_convs=30).cache()
     fs = transcript_feature_set()
@@ -83,11 +95,11 @@ def test_filtered_keep_previous_fuses_and_matches_general(spark):
 def test_same_ts_update_visible_in_fused_plan(spark):
     """A filtered feature's update AT the spine row's exact ts must be
     visible (ts' <= ts semantics) REGARDLESS of physical tie order —
-    the fused plan sorts ties updates-first per feature so its ROWS
-    fill frame and the keep_previous lag chain both see the same-ts
-    update deterministically (a plain ts-ordered rows-frame made it
-    depend on arbitrary intra-tie ordering; caught by the adversarial
-    exact-gate run, and the un-tiebroken lag chain by ADVICE r2)."""
+    the fused plan's RANGE fill frame sees the same-ts update, and so
+    does the fill of the keep_previous version pack (a plain
+    ts-ordered rows-frame made it depend on arbitrary intra-tie
+    ordering; caught by the adversarial exact-gate run, and an
+    un-tiebroken lag chain by ADVICE r2)."""
     import datetime as dt
 
     from raptor_spark.specs import FeatureSetSpec, feature

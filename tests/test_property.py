@@ -1,6 +1,9 @@
 """Property-based tests (hypothesis): the engine's core temporal
 operators vs the pandas reference oracles on adversarial random data —
-duplicate timestamps, bursts, idle gaps, single-row keys."""
+duplicate timestamps, bursts, idle gaps, single-row keys — and the
+fused historical plan vs the union-merge plan."""
+
+import datetime as dt
 
 import pandas as pd
 import pytest
@@ -112,6 +115,74 @@ class TestProperties:
                      & (pdf2["bucket"] <= b)]
             assert row["count"] == pytest.approx(float(len(m)))
             assert row["sum"] == pytest.approx(float(m["v"].sum()))
+
+
+@st.composite
+def kp_cases(draw):
+    """A keep_previous case for the fused vs union-merge comparison:
+    rows ``(rid, k, ts, typ, v)`` on a 10-minute grid where update rows
+    (``typ = 'u'``) may share (k, ts) with non-update rows (at most one
+    update per (k, ts), the plans' contract), plus the feature's
+    settings. A ``total`` case keys on the unfiltered feature itself,
+    so its rows are unique per (k, ts): every row is an update."""
+    total = draw(st.booleans())
+    n = draw(st.integers(1, 24))
+    slots = draw(st.lists(st.tuples(st.sampled_from("ab"), st.integers(0, 30)),
+                          min_size=n, max_size=n))
+    if total:
+        slots = list(dict.fromkeys(slots))
+    typs = draw(st.lists(st.sampled_from("un"), min_size=len(slots),
+                         max_size=len(slots)))
+    vals = draw(st.lists(st.integers(-50, 50), min_size=len(slots),
+                         max_size=len(slots)))
+    seen, rows = set(), []
+    base = dt.datetime(2024, 1, 1)
+    for i, ((k, off), typ, v) in enumerate(zip(slots, typs, vals)):
+        if typ == "u" and (k, off) in seen:
+            typ = "n"
+        if typ == "u":
+            seen.add((k, off))
+        rows.append((i, k, base + dt.timedelta(minutes=10 * off), typ, float(v)))
+    over = draw(st.sampled_from(["0", "30m", "2h"]))
+    since = None
+    if over != "0" and draw(st.booleans()):
+        since = base + dt.timedelta(minutes=10 * draw(st.integers(0, 30)))
+    return dict(
+        rows=rows, total=total, versions=draw(st.integers(1, 3)), over=over,
+        staleness=draw(st.sampled_from([None, "1h"])), since=since,
+    )
+
+
+@settings(max_examples=15, deadline=None)
+@given(case=kp_cases())
+def test_fused_keep_previous_equals_union_merge(spark, case):
+    """keep_previous through the fused plan (a total feature's plain
+    lag, a filtered feature's forward-filled version pack) equals the
+    union-merge as-of plan row for row — same-ts non-update rows,
+    versions 1..3, age guard on and off, staleness and ``since``: a
+    wrong fill frame, tie order or guard anchor diverges here."""
+    from raptor_spark.plans.historical import (
+        _historical_union_merge, get_historical,
+    )
+    from raptor_spark.specs import FeatureSetSpec, feature
+
+    src = spark.createDataFrame(
+        case["rows"], "rid long, k string, ts timestamp, typ string, v double"
+    )
+    kp = feature(
+        "fv", "k", "v", staleness=case["staleness"],
+        filter=None if case["total"] else "typ = 'u'",
+        keep_previous=(case["versions"], case["over"]),
+    )
+    fs = FeatureSetSpec(features=[feature("rid", "k", "rid"), kp], key_feature="rid")
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return [tuple(r) for r in df.select(*cols).orderBy("rid").collect()]
+
+    fused = get_historical(src, fs, since=case["since"])
+    assert "Union" not in fused._jdf.queryExecution().executedPlan().toString()
+    assert rows(fused) == rows(_historical_union_merge(src, fs, since=case["since"]))
 
 
 @settings(max_examples=500, deadline=None)

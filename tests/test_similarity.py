@@ -1,5 +1,5 @@
 """Similarity-search operators: signature stability (oracle compat),
-multi-plane-set recall, bucket cap, ANN vs brute-force recall."""
+bucket cap, ANN vs brute-force recall."""
 
 import math
 
@@ -28,15 +28,14 @@ def emb(spark):
 
 
 def test_plane_set_zero_unchanged():
-    """Set 0 must keep the original md5 derivation — the DuckDB oracle
-    for embedding_neardup/ann_lsh reproduces exactly these planes."""
+    """The planes must keep the original md5 derivation — the DuckDB
+    oracle for embedding_neardup/ann_lsh reproduces exactly these
+    planes."""
     import hashlib
 
     h = hashlib.md5(b"plane:3:7").hexdigest()
     want = int(h[:15], 16) / float(16**15) * 2 - 1
     assert _plane_coeff(3, DIM)[7] == want
-    # other sets derive differently
-    assert _plane_coeff(3, DIM, plane_set=1)[7] != want
 
 
 def _fold(prods):
@@ -78,7 +77,7 @@ def test_vector_math_matches_numpy_left_fold(spark):
             "i", "na", "nb",
             dot("a", "b").alias("dot"),
             cosine("a", "b", "na", "nb").alias("cos"),
-            lsh_signature("a", dim, n_planes, plane_set=2).alias("sig"),
+            lsh_signature("a", dim, n_planes).alias("sig"),
         )
         .orderBy("i")
         .toPandas()
@@ -89,7 +88,7 @@ def test_vector_math_matches_numpy_left_fold(spark):
     den = na * nb
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = np.where(den > 0, d / den, 0.0)
-    planes = np.array([_plane_coeff(p, dim, 2) for p in range(n_planes)])
+    planes = np.array([_plane_coeff(p, dim) for p in range(n_planes)])
     proj = _fold(a64[:, None, :] * planes[None, :, :])
     sig = ((proj > 0) * (1 << np.arange(n_planes))).sum(axis=1)
     assert _bits(got["na"]) == _bits(na)
@@ -132,24 +131,6 @@ def test_vector_math_null_and_length_mismatch(spark):
         (2, None, None, 0.0, 0),
         (3, math.sqrt(5.0), None, None, 0),
     ]
-
-
-def test_multi_plane_sets_superset_recall(spark, emb):
-    """OR-construction: pairs found with 2 plane sets ⊇ pairs found
-    with 1 (same planes for set 0), values identical on the overlap."""
-    one = {
-        (r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in embedding_neardup_pairs(emb, DIM, threshold=0.8).collect()
-    }
-    two = {
-        (r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in embedding_neardup_pairs(
-            emb, DIM, threshold=0.8, n_plane_sets=2
-        ).collect()
-    }
-    assert set(one) <= set(two)
-    for k, v in one.items():
-        assert two[k] == v
 
 
 @pytest.fixture(scope="module")

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Generate PLANS.md — a physical-plan audit of the headline queries.
 
-For each audited query: exchange (shuffle) count, single-partition
-window check, scan pushdown summary, and whole-stage-codegen coverage,
-plus a hand-written note on WHY the plan has that shape and how it
+For each audited query: exchange (shuffle) count, in-partition sort
+count, single-partition window check, scan pushdown summary, and
+whole-stage-codegen coverage, plus a hand-written note on WHY the plan has that shape and how it
 scales to 10^12 rows. Run from the repo root:
 
     python tools/plan_audit.py        # rewrites PLANS.md
@@ -90,11 +90,12 @@ NOTES = {
         "Probe/scan is the same broadcast equi-join as ann_ivf."
     ),
     "kp_filtered": (
-        "Filtered keep_previous FUSED: lag IGNORE NULLS walks update "
-        "rows with a per-feature updates-first tie order (one exchange, "
-        "no Union; the tie-ordered lags add one Window pass below the "
-        "RANGE fill) — versions count updates incl. same-ts ones, the "
-        "age guard anchors at the latest update's ts."
+        "Filtered keep_previous FUSED: the version pack's lag IGNORE "
+        "NULLS walks update rows (updates-first tie order, age guard "
+        "anchored at each update's ts) in a projection of its own, one "
+        "Window below the RANGE fill, and the fill forward-fills the "
+        "pack of the latest update. Both Windows read ONE tie-ordered "
+        "sort (one exchange, one sort, no Union)."
     ),
     "store_read_pit": (
         "Production read: per-fqn partition-PRUNED scans of the "
@@ -446,6 +447,7 @@ def partitionless_windows(plan: str) -> tuple[list[str], list[str]]:
 def audit(name: str, df) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_exchange = len(re.findall(r"\bExchange hashpartitioning", plan))
+    n_sort = plan.count("Sort [")
     n_bcast = len(re.findall(r"\bBroadcastExchange", plan))
     unbounded, limit_fed = partitionless_windows(plan)
     n_codegen = len(re.findall(r"\*\(\d+\)", plan))
@@ -454,6 +456,7 @@ def audit(name: str, df) -> dict:
     read_schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     return {
         "shuffles": n_exchange,
+        "sorts": n_sort,
         "broadcasts": n_bcast,
         "unbounded_global_windows": unbounded,
         "limit_fed_global_windows": limit_fed,
@@ -471,10 +474,11 @@ def main() -> None:
         "",
         "Generated by `python tools/plan_audit.py` (sf0.01 inputs; plan",
         "SHAPE is scale-invariant). Shuffle = `Exchange hashpartitioning`;",
+        "sorts = `Sort [` (each an in-partition sort);",
         "single-partition windows (the scale-killer pattern) are flagged.",
         "",
-        "| query | shuffles | broadcasts | expands | 1-part window | scan cols |",
-        "|---|---|---|---|---|---|",
+        "| query | shuffles | sorts | broadcasts | expands | 1-part window | scan cols |",
+        "|---|---|---|---|---|---|---|",
     ]
     notes = []
     for name in NOTES:
@@ -494,7 +498,7 @@ def main() -> None:
             flag = "no"
         exp = f"**{a['expands']}**" if a["expands"] else "0"
         lines.append(
-            f"| {name} | {a['shuffles']} | {a['broadcasts']} | {exp} | "
+            f"| {name} | {a['shuffles']} | {a['sorts']} | {a['broadcasts']} | {exp} | "
             f"{flag} | {a['read_cols']} |"
         )
         notes.append(f"\n## {name}\n\n{NOTES[name]}\n")
