@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .durations import parse_duration_us
 from .plans.historical import get_historical
 from .plans.replay import replay as _replay_long
+from .plans.validate import _NUMERIC_ONLY_FNS
 from .program import compile_handler
 from .selector import DEFAULT_NAMESPACE, parse_selector
 from .specs import AggrSpec, FeatureSetSpec, FeatureSpec, KeepPreviousSpec
@@ -209,7 +210,7 @@ class Feature:
         feature-values frame (labsdk replay.py:78-152)."""
         return _replay_long(df, self.spec)
 
-    def manifest(self, to_file: bool = False) -> str:
+    def manifest(self) -> str:
         """Deployment manifest in the reference's CRD layout
         (types/feature.py:225-250: apiVersion/kind/metadata/spec).
         The builder code is the handler's source — the production
@@ -255,14 +256,7 @@ class Feature:
                 },
             },
         }
-        out = yaml.safe_dump(doc, sort_keys=False)
-        if to_file:
-            import os
-
-            os.makedirs("out", exist_ok=True)
-            with open(f"out/{s.name}.yaml", "w") as f:
-                f.write(out)
-        return out
+        return yaml.safe_dump(doc, sort_keys=False)
 
     def __call__(self, *args, **kwargs):
         raise TypeError(
@@ -291,7 +285,7 @@ def feature(
         deps = prog.dependencies
         aggr = opts.get("aggr")
         if aggr is not None and prog.cast_to in ("string", "boolean"):
-            numeric_needed = {"sum", "avg", "min", "max"} & set(aggr.fns)
+            numeric_needed = _NUMERIC_ONLY_FNS & set(aggr.fns)
             if numeric_needed:
                 raise TypeError(
                     f"feature '{name or fn.__name__}': aggregation(s) "

@@ -9,7 +9,7 @@ MinHash+LSH, SimHash, n-gram Jaccard. Designed for 100 TB corpora:
   The only shuffle is the band-bucket groupBy; candidate verification
   joins docs back by id (broadcast when the candidate set is small).
 - **SimHash**: 32-bit sign-aggregated token hashes; near-dups = equal
-  simhash (or Hamming ≤ k via band rotation, scale path).
+  simhash.
 - **n-gram Jaccard**: exact set similarity on candidate pairs only —
   never all-pairs at scale; here gated by LSH buckets or blocking keys.
 """
@@ -538,10 +538,10 @@ def _star_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def window_fingerprints(
-    text: Column | str, w: int = 48, stride: int = 24
+def window_fingerprints_from_norm(
+    t: Column, w: int = 48, stride: int = 24
 ) -> Column:
-    """Sampled fixed-width window fingerprints over the normalized
+    """Sampled fixed-width window fingerprints over ALREADY-NORMALIZED
     text: md5-derived longs of each ``w``-char window every ``stride``
     chars (array<long>, distinct). Shared window hashes between two
     docs flag PARTIAL overlap — contained quotes / boilerplate blocks —
@@ -549,18 +549,11 @@ def window_fingerprints(
     away. md5 keeps the fingerprints engine-portable (the DuckDB oracle
     reproduces them); a Rabin-Karp rolling hash would save the
     per-window rehash at stride=1, but sampled strides make the md5
-    cost O(len/stride) and keep cross-engine determinism."""
-    t = _norm(F.col(text) if isinstance(text, str) else text)
-    return window_fingerprints_from_norm(t, w, stride)
+    cost O(len/stride) and keep cross-engine determinism.
 
-
-def window_fingerprints_from_norm(
-    t: Column, w: int = 48, stride: int = 24
-) -> Column:
-    """As :func:`window_fingerprints` over ALREADY-NORMALIZED text.
-    Stage the normalization in its own select for per-row hot paths —
-    a lambda-embedded ``_norm(text)`` re-evaluates the full-text
-    regex per window (the higher-order-function pitfall)."""
+    Stage the normalization in its own select — a lambda-embedded
+    ``_norm(text)`` re-evaluates the full-text regex per window (the
+    higher-order-function pitfall)."""
     n_win = F.floor((F.length(t) - w) / F.lit(stride)) + 1
     wins = F.when(
         F.length(t) >= w,
@@ -728,15 +721,6 @@ def token_hashes(text: Column | str) -> Column:
     t = F.col(text) if isinstance(text, str) else text
     toks = F.array_distinct(F.split(_norm(t), " "))
     return F.transform(toks, lambda s: md5_long(s))
-
-
-def simhash(text: Column | str, bits: int = 32) -> Column:
-    """SimHash over whitespace tokens: bit i of the signature = sign of
-    Σ_tokens (bit i of md5_long(token) ? +1 : −1). Near-dup docs get
-    equal/close signatures. Native exprs only. For hot paths prefer
-    ``simhash_from_hashes`` over a pre-materialized ``token_hashes``
-    column (one md5 pass instead of ``bits``)."""
-    return simhash_from_hashes(token_hashes(text), bits)
 
 
 def simhash_from_hashes(hashes: Column, bits: int = 32) -> Column:

@@ -4,20 +4,18 @@ pipelines.
 Media ride through the engine as opaque ``binary`` payloads plus typed
 metadata — the layout every large multimodal pipeline uses (payload is
 never parsed by Catalyst; metadata columns carry the prunable facts).
-Decode / feature-extraction runs as **Arrow-batched pandas iterators**
-(``mapInPandas``) so the per-item Python cost is amortized over
-columnar batches and executors stream batches without materializing a
-partition in memory.
+Feature extraction and frame sampling run as **Arrow-batched pandas
+iterators** (``mapInPandas``) so the per-item Python cost is amortized
+over columnar batches and executors stream batches without
+materializing a partition in memory.
 
-Codec coverage: 24-bit uncompressed BMP decodes/encodes/resamples FOR
-REAL via the dependency-free pure-Python codec below (``decode_bmp``
-/ ``encode_bmp`` / ``resize_rgb_nearest``), so decode → resize →
-featurize runs end-to-end on actual pixels in this container
-(``synthesize_bmp_media`` generates valid BMPs for tests). Compressed
-formats (JPEG/PNG) and audio/video decoding still need PIL/opencv/
-ffmpeg — absent here — and raise ``NotImplementedError``; their
-Spark-side plumbing (schema, batch iteration, partitioning, output
-shape) is identical and tested through the BMP and stand-in paths.
+Codec coverage: none. No image, audio or video codec ships here:
+JPEG/PNG/audio/video decoding needs PIL/opencv/ffmpeg, which this
+engine does not depend on. The two stages keep the real Spark-side
+shape (schema, batch iteration, partitioning, row fan-out) around
+deterministic stand-ins: ``extract_features`` featurizes the raw
+payload bytes (swap ``_fake_feature`` for a model) and
+``sample_frames`` slices stand-in frame bytes per sampled timestamp.
 
 Media schema::
 
@@ -96,144 +94,6 @@ def synthesize_media(df: DataFrame, id_col: str, text_col: str = "text") -> Data
     )
 
 
-def synthesize_bmp_media(df: DataFrame, id_col: str) -> DataFrame:
-    """REAL image media over any id column: every payload is a valid
-    24-bit BMP (md5-seeded pixels, dims cycle deterministically), so
-    decode -> resize -> featurize runs on actual image bytes — no
-    stand-in anywhere. Built in a mapInPandas (the encoder is Python),
-    same media schema as :func:`synthesize_media`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads, metas = [], [], [], []
-            for mid in pdf["_id"]:
-                mid = int(mid)
-                w, h = 4 + mid % 13, 3 + mid % 9
-                raw = b""
-                seed = f"bmp:{mid}".encode()
-                while len(raw) < w * h * 3:
-                    seed = hashlib.md5(seed).digest()
-                    raw += seed
-                payloads.append(encode_bmp(w, h, raw[: w * h * 3]))
-                ids.append(mid)
-                types.append("image")
-                metas.append({"width": w, "height": h, "duration_ms": 0})
-            yield pd.DataFrame(
-                {"media_id": ids, "media_type": types,
-                 "payload": payloads, "meta": metas}
-            )
-
-    return df.select(F.col(id_col).cast("long").alias("_id")).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
-
-
-# --------------------------------------------------------- BMP codec
-# A REAL, dependency-free codec for one uncompressed format so the
-# decode -> resize -> featurize path runs on actual image bytes in
-# this container: 24-bit BI_RGB Windows BMP (54-byte header,
-# bottom-up BGR rows padded to 4 bytes). Compressed formats
-# (JPEG/PNG) still need external libs and still raise.
-
-_BMP_HEADER_LEN = 54
-
-
-def encode_bmp(width: int, height: int, rgb: bytes) -> bytes:
-    """Encode top-down row-major RGB triplets (len == w*h*3) as a
-    24-bit uncompressed BMP."""
-    import struct
-
-    if width <= 0 or height <= 0 or len(rgb) != width * height * 3:
-        raise ValueError(
-            f"rgb length {len(rgb)} != {width}x{height}x3"
-        )
-    row_pad = (-(width * 3)) % 4
-    stride = width * 3 + row_pad
-    img_size = stride * height
-    header = struct.pack(
-        "<2sIHHI", b"BM", _BMP_HEADER_LEN + img_size, 0, 0, _BMP_HEADER_LEN
-    )
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, img_size,
-        2835, 2835, 0, 0,
-    )
-    pad = b"\x00" * row_pad
-    rows = []
-    for y in range(height - 1, -1, -1):  # bottom-up row order
-        row = rgb[y * width * 3:(y + 1) * width * 3]
-        bgr = bytearray(width * 3)
-        bgr[0::3] = row[2::3]
-        bgr[1::3] = row[1::3]
-        bgr[2::3] = row[0::3]
-        rows.append(bytes(bgr) + pad)
-    return header + info + b"".join(rows)
-
-
-def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode a 24-bit uncompressed bottom-up BMP to
-    ``(width, height, top-down row-major RGB bytes)``. Raises
-    ``ValueError`` on anything that is not exactly that format."""
-    import struct
-
-    if len(payload) < _BMP_HEADER_LEN or payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    (hdr_size, width, height, planes, bpp, compression) = struct.unpack_from(
-        "<IiiHHI", payload, 14
-    )
-    if hdr_size < 40 or planes != 1 or bpp != 24 or compression != 0:
-        raise ValueError(
-            f"unsupported BMP variant (hdr={hdr_size} planes={planes} "
-            f"bpp={bpp} compression={compression})"
-        )
-    if width <= 0 or height <= 0:
-        raise ValueError(f"unsupported BMP dims {width}x{height}")
-    row_pad = (-(width * 3)) % 4
-    stride = width * 3 + row_pad
-    if len(payload) < data_off + stride * height:
-        raise ValueError("truncated BMP pixel data")
-    out = bytearray(width * height * 3)
-    for y in range(height):
-        src = data_off + (height - 1 - y) * stride
-        bgr = payload[src:src + width * 3]
-        dst = y * width * 3
-        out[dst + 0:dst + width * 3:3] = bgr[2::3]
-        out[dst + 1:dst + width * 3:3] = bgr[1::3]
-        out[dst + 2:dst + width * 3:3] = bgr[0::3]
-    return width, height, bytes(out)
-
-
-def resize_rgb_nearest(
-    rgb: bytes, w: int, h: int, nw: int, nh: int
-) -> bytes:
-    """Nearest-neighbor resample of top-down RGB bytes (floor index
-    mapping — the deterministic classic)."""
-    out = bytearray(nw * nh * 3)
-    for y in range(nh):
-        sy = y * h // nh
-        row_base = sy * w * 3
-        dst_base = y * nw * 3
-        for x in range(nw):
-            sx = x * w // nw
-            s = row_base + sx * 3
-            d = dst_base + x * 3
-            out[d:d + 3] = rgb[s:s + 3]
-    return bytes(out)
-
-
-def decode_image(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode an image payload to (width, height, RGB bytes). BMP
-    (24-bit uncompressed) decodes for real via the pure-Python codec
-    above; compressed formats need PIL/opencv, absent here."""
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    raise NotImplementedError(
-        "only 24-bit uncompressed BMP decodes in this container; "
-        "JPEG/PNG need PIL/opencv (use synthesize_bmp_media for real-"
-        "bytes tests, synthesize_media for plumbing tests)"
-    )
-
-
 def _fake_feature(payload: bytes, dim: int) -> list[float]:
     """Deterministic stand-in for an embedding extractor: md5-seeded
     floats in [0,1). Same shape/dtype/batching as a real model."""
@@ -245,10 +105,6 @@ def _fake_feature(payload: bytes, dim: int) -> list[float]:
     return out[:dim]
 
 
-# resize preserves the media row shape — ONE schema definition so a
-# future media-schema change cannot silently desynchronize them
-RESIZED_SCHEMA = MEDIA_SCHEMA
-
 FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -257,76 +113,6 @@ FRAME_SCHEMA = StructType(
         StructField("payload", BinaryType()),
     ]
 )
-
-
-def resize_images(media: DataFrame, max_w: int = 64, max_h: int = 64) -> DataFrame:
-    """Resize stage: pandas batches in, same media schema out with
-    updated metadata. Payloads that decode as 24-bit BMP get a REAL
-    nearest-neighbor resample re-encoded as BMP (pure-Python codec
-    above — actual pixels move). Other payloads (compressed formats
-    need PIL/opencv, absent here) take the deterministic stand-in:
-    clamp dimensions, truncate the payload proportionally — preserving
-    the exact batch/schema/partitioning contract either way."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            metas = []
-            payloads = []
-            for meta, payload in zip(pdf["meta"], pdf["payload"]):
-                if payload is None:
-                    # NULL payload passes through untouched (mirrors
-                    # SQL NULL propagation); computing on it would
-                    # crash the whole Arrow batch.
-                    metas.append(meta)
-                    payloads.append(payload)
-                    continue
-                dur = None if meta is None else meta["duration_ms"]
-                dur = None if dur is None else int(dur)
-                b = bytes(payload)
-                decoded = None
-                if b[:2] == b"BM":
-                    try:
-                        decoded = decode_bmp(b)
-                    except ValueError:
-                        decoded = None  # BM-prefixed non-image: stand-in
-                if decoded is not None:
-                    w, h, rgb = decoded  # trust the pixels, not meta
-                    scale = min(max_w / max(w, 1), max_h / max(h, 1), 1.0)
-                    nw, nh = max(int(w * scale), 1), max(int(h * scale), 1)
-                    if (nw, nh) != (w, h):
-                        rgb = resize_rgb_nearest(rgb, w, h, nw, nh)
-                    payloads.append(encode_bmp(nw, nh, rgb))
-                    metas.append(
-                        {"width": nw, "height": nh, "duration_ms": dur}
-                    )
-                    continue
-                if (
-                    meta is None
-                    or meta["width"] is None
-                    or meta["height"] is None
-                ):
-                    # only the STAND-IN branch reads meta dims (the BMP
-                    # branch above trusts the pixels, so a decodable
-                    # payload with NULL meta still resizes); without
-                    # them the row passes through. duration_ms is never
-                    # a gate — it is copied, not computed on.
-                    metas.append(meta)
-                    payloads.append(payload)
-                    continue
-                w, h = int(meta["width"]), int(meta["height"])
-                scale = min(max_w / max(w, 1), max_h / max(h, 1), 1.0)
-                nw, nh = max(int(w * scale), 1), max(int(h * scale), 1)
-                n = max(int(len(b) * scale * scale), 1)
-                payloads.append(b[:n])
-                metas.append(
-                    {"width": nw, "height": nh, "duration_ms": dur}
-                )
-            out["meta"] = metas
-            out["payload"] = payloads
-            yield out
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -364,62 +150,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-PIXEL_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("mean_r", DoubleType()),
-        StructField("mean_g", DoubleType()),
-        StructField("mean_b", DoubleType()),
-    ]
-)
-
-
-def bmp_pixel_features(media: DataFrame) -> DataFrame:
-    """REAL decode-and-featurize over BMP payloads: per-channel pixel
-    means from actually-decoded bytes (no stand-in). Rows whose
-    payload is NULL or not a decodable 24-bit BMP yield NULL features
-    (the row survives with its id — same NULL contract as
-    ``extract_features``)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, rs, gs, bs = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                dec = None
-                if payload is not None:
-                    b = bytes(payload)  # materialize the buffer ONCE
-                    if b[:2] == b"BM":
-                        try:
-                            dec = decode_bmp(b)
-                        except ValueError:
-                            dec = None
-                if dec is None:
-                    ws.append(None); hs.append(None)
-                    rs.append(None); gs.append(None); bs.append(None)
-                    continue
-                w, h, rgb = dec
-                n = w * h
-                ws.append(w); hs.append(h)
-                rs.append(sum(rgb[0::3]) / n / 255.0)
-                gs.append(sum(rgb[1::3]) / n / 255.0)
-                bs.append(sum(rgb[2::3]) / n / 255.0)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "mean_r": pd.array(rs, dtype="float64"),
-                    "mean_g": pd.array(gs, dtype="float64"),
-                    "mean_b": pd.array(bs, dtype="float64"),
-                }
-            )
-
-    return media.mapInPandas(run, schema=PIXEL_FEATURE_SCHEMA)
 
 
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:

@@ -32,19 +32,6 @@ def hash_bucket(key: Column, salt: str) -> Column:
     return md5_long(F.concat(F.lit(salt + "|"), key.cast("string"))) % RESOLUTION
 
 
-def sample_fraction(
-    df: DataFrame, id_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Deterministic Bernoulli(fraction) sample keyed on ``id_col``.
-    Map-only filter — Catalyst pushes it into the scan, so at 100 TB
-    the dropped rows never leave the reader."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0,1], got {fraction}")
-    return df.filter(
-        hash_bucket(F.col(id_col), salt) < int(round(fraction * RESOLUTION))
-    )
-
-
 def sample_mixture(
     df: DataFrame,
     id_col: str,

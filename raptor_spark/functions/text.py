@@ -1,9 +1,12 @@
 """Text-analysis functions for large-scale training-data pipelines:
 language-ID (stopword heuristic), quality scoring, token counting,
-document fingerprinting. All are **native Column expressions** (JVM
-codegen, no Python) so they run at full scan speed over a 100 TB
-corpus; every formula is deliberately expressible in ANSI SQL so the
-DuckDB oracle can pin it exactly.
+document fingerprinting, PII masking, chunking, URL canonicalization
+and boilerplate removal. The per-row functions are **native Column
+expressions** and the DataFrame-level ones (``mask_pii``,
+``chunk_docs``, ``tokenize_corpus``, ``remove_boilerplate_segments``)
+are built from them (JVM codegen, no Python), so they run at full scan
+speed over a 100 TB corpus; every formula is deliberately expressible
+in ANSI SQL so the DuckDB oracle can pin it exactly.
 """
 
 from __future__ import annotations
@@ -191,36 +194,19 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_mask(text: Column | str) -> tuple[Column, dict[str, Column]]:
-    """Mask URLs / emails / IPv4s / phone-ish digit runs with typed
-    placeholder tokens — the standard pre-training PII / link scrub.
-    Returns ``(masked_text, {kind: count})`` where each count is the
-    number of redactions of that kind, measured on the text AS IT WAS
-    when that pattern ran (sequential semantics: an email inside a URL
-    is one <URL>, not an <EMAIL>).
-
-    Pure JVM exprs (regexp_replace / regexp_extract_all) — full scan
-    speed at 100 TB, no Python. Heuristic by design: a version string
-    '1.2.3.4' reads as an IP; acceptable for corpus scrubbing where
-    recall beats precision. Reference has no PII stage — this is one
-    of the training-pipeline extensions (brief §pipeline)."""
-    t = F.col(text) if isinstance(text, str) else text
-    counts: dict[str, Column] = {}
-    cur = t
-    for kind, pat, token in PII_PATTERNS:
-        counts[kind] = F.size(
-            F.regexp_extract_all(cur, F.lit(pat), 0)
-        ).cast("int")
-        cur = F.regexp_replace(cur, pat, token)
-    return cur, counts
-
-
 def mask_pii(df, id_col: str = "doc_id", text_col: str = "text"):
-    """DF-level PII scrub: one staged select per pattern so each
-    regexp chain is evaluated ONCE per row (a single projection would
-    re-evaluate the growing replace chain inside every count — the
-    expression-re-evaluation trap in CLAUDE.md). Returns
-    (id, masked_text, n_<kind>...)."""
+    """PII / link scrub: mask URLs / emails / IPv4s / phone-ish digit
+    runs with typed placeholder tokens. Returns (id, masked_text,
+    n_<kind>...), each count the number of redactions of that kind,
+    measured on the text AS IT WAS when that pattern ran (sequential
+    semantics: an email inside a URL is one <URL>, not an <EMAIL>).
+
+    One staged select per pattern so each regexp chain is evaluated
+    ONCE per row (a single projection would re-evaluate the growing
+    replace chain inside every count — the expression-re-evaluation
+    trap in CLAUDE.md). Heuristic by design: a version string
+    '1.2.3.4' reads as an IP; acceptable for corpus scrubbing where
+    recall beats precision."""
     cur = df.select(F.col(id_col), F.col(text_col).alias("_t"))
     for kind, pat, token in PII_PATTERNS:
         cur = cur.select(

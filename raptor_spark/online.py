@@ -30,10 +30,10 @@ import datetime as dt
 import os
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.tsutil import micros
+from .operators.laglead import latest_per_key
 
 
 class OnlineStore:
@@ -118,13 +118,9 @@ class OnlineStore:
         # greatest value — ties must resolve identically on every
         # run/engine (row_number over ts alone is physical-order luck)
         gen = F.col("_gen") if "_gen" in fv.columns else F.lit(0)
-        w = W.partitionBy("fqn", "keys").orderBy(
-            F.col("ts").desc(), gen.desc(), F.col("value").desc()
-        )
-        return (
-            fv.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        return latest_per_key(
+            fv, ["fqn", "keys"], F.col("ts").desc(), gen.desc(),
+            F.col("value").desc(),
         )
 
     def read_latest(self, fqns: Optional[Sequence[str]] = None) -> DataFrame:

@@ -147,17 +147,14 @@ def with_freshness_flag(
 
 
 def latest_per_key(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    tiebreak: Optional[str] = None,
+    df: DataFrame, keys: Sequence[str], *order_cols: Column
 ) -> DataFrame:
-    """W3: top-1 newest row per key (featureset.tmpl.sql:90,99) via
-    row_number — no global sort."""
-    order = [F.col(ts_col).desc()]
-    if tiebreak:
-        order.append(F.col(tiebreak).desc())
-    w = W.partitionBy(*keys).orderBy(*order)
+    """W3: top-1 row per key (featureset.tmpl.sql:90,99) — the first row
+    of each key under ``order_cols`` (newest first: ``F.col("ts").desc()``
+    then the tie-breaks) via row_number, no global sort. The one
+    top-1-per-key window: the online store's latest value and the
+    bucket-write dedup are calls to it."""
+    w = W.partitionBy(*keys).orderBy(*order_cols)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

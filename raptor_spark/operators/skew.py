@@ -1,22 +1,18 @@
 """Skew handling — salted two-level aggregation (SURVEY.md §4 "skew").
 
 The reference has no skew story (Redis shards implicitly); the north
-rule requires explicit handling for Zipf-hot conversations. Two levers:
+rule requires explicit handling for Zipf-hot conversations. One lever,
+**salted_agg**: for per-key *aggregations*, add salt =
+pmod(xxhash64(ts-derived), n) so one hot key's rows spread over n
+reducers; phase-1 partials per (key, salt); phase-2 merge per key.
+The partials and their merge are the bucketed window path's own
+(``window_agg._partial_aggs`` / ``window_agg._merged``), merged as a
+plain aggregate instead of over the bucket window.
 
-1. **salted_agg**: for per-key *aggregations*, add salt =
-   pmod(xxhash64(ts-derived), n) so one hot key's rows spread over n
-   reducers; phase-1 partials per (key, salt); phase-2 merge per key.
-   The partials and their merge are the bucketed window path's own
-   (``window_agg._partial_aggs`` / ``window_agg._merged``), merged as
-   a plain aggregate instead of over the bucket window.
-   NOTE: Spark's hash aggregate already does map-side partials, so
-   salting only pays off when a single *reduce* group is hotter than a
-   task (≫ tens of millions of rows per key) — exactly the 50k-turn
-   Zipf conversations of the north rule combined with per-bucket
-   grouping.
-
-2. **hot key detection**: a map-side-combined exact count picks keys above a
-   row-count threshold (drives a broadcast list for plan-time routing).
+NOTE: Spark's hash aggregate already does map-side partials, so
+salting only pays off when a single *reduce* group is hotter than a
+task (≫ tens of millions of rows per key) — exactly the 50k-turn Zipf
+conversations of the north rule combined with per-bucket grouping.
 
 Window-based ops (as-of, sliding window) need full per-key order and
 cannot be salted: in batch historical a hot conversation's rows stay in
@@ -33,21 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .window_agg import _merged, _partial_aggs
-
-
-def detect_hot_keys(
-    df: DataFrame, keys: Sequence[str], threshold: int
-) -> DataFrame:
-    """Keys whose row count exceeds ``threshold``. The count is an
-    EXACT groupBy count — itself map-side combined, so one shuffle of
-    pre-aggregated (key, n) rows; no approximate pass needed. Returns
-    a small DataFrame to broadcast."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > threshold)
-        .select(*keys)
-    )
 
 
 def salted_agg(

@@ -51,6 +51,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .laglead import latest_per_key
 from .tsutil import micros
 
 # per-event exact distinct beyond this window span gets a warning
@@ -271,12 +272,7 @@ def dedup_bucket_writes(
         order.append(F.col(order_col).desc_nulls_last())
     else:
         order.append(F.xxhash64(*[F.col(c) for c in fv.columns]).asc())
-    w = W.partitionBy(*keys).orderBy(*order)
-    return (
-        fv.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return latest_per_key(fv, keys, *order)
 
 
 def sliding_agg_bucketed(

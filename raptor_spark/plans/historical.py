@@ -51,6 +51,7 @@ from ..operators.tsutil import micros, micros_sql
 
 from ..specs import FeatureSetSpec, FeatureSpec
 from .replay import _eval_expr, encode_keys, replay_wide
+from .validate import check_value_type
 
 
 def _kp_pack(c: str, keys, ts_us_sql: str, kp, prefix: str) -> Column:
@@ -195,6 +196,9 @@ def get_historical_fused(
         vname[spec.name] = f"_v_{i}"
         proj.append(v.alias(f"_v_{i}"))
     df = df.select(*proj)
+    schema = df.schema
+    for i, spec in enumerate(fs.features):
+        check_value_type(spec, schema[f"_v_{i}"].dataType)
 
     tsu = F.col("_tsu")
     # RANGE fill frame, not ROWS: a spine row must see a same-ts update

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..specs import FeatureSpec
 from ..operators.window_agg import sliding_agg_exact
+from .validate import check_value_type
 
 
 def _eval_expr(df: DataFrame, expr) -> Column:
@@ -109,6 +110,7 @@ def replay_wide(source: DataFrame, spec: FeatureSpec) -> DataFrame:
     proj = project_feature(source, spec)
     if spec.aggr is None:
         return proj.withColumnRenamed("value", spec.name)
+    check_value_type(spec, proj.schema["value"].dataType)
     a = spec.aggr
     agged = sliding_agg_exact(
         proj, spec.keys, "ts", F.col("value"), a.over_us, a.fns,

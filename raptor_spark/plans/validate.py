@@ -1,51 +1,34 @@
 """Plan-build type validation (P9) — the Spark analog of the
-reference's bind-time checks: aggregated features must be numeric
-(``/root/reference/api/feature.go:50-64`` — sum/avg/min/max only over
-int/float; count/distinct over anything) and the declared primitive
-must match the resolved type
-(``internal/engine/engine_bind.go:51-53``)."""
+reference's bind-time check that aggregated features are numeric
+(``api/feature.go:50-64``: sum/avg/min/max only over int/float;
+count/distinct over anything).
+
+Both PIT plans apply the rule where they already hold the resolved
+value type — the fused plan's early projection and ``replay_wide``'s
+per-row projection — so a bad feature set fails on the driver at plan
+build, with no Spark job, instead of on an executor with a cast error
+(or, for a column of numeric strings, silently). ``api.feature``
+applies the same rule at definition time to the handler's declared
+return type."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ByteType,
-    DecimalType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    ShortType,
-)
+from pyspark.sql.types import DataType, NumericType
 
-from ..specs import FeatureSetSpec, FeatureSpec
-from .replay import project_feature
+from ..specs import FeatureSpec
 
-_NUMERIC = (
-    ByteType, ShortType, IntegerType, LongType,
-    FloatType, DoubleType, DecimalType,
-)
-_NUMERIC_ONLY_FNS = {"sum", "avg", "min", "max"}
+_NUMERIC_ONLY_FNS = frozenset({"sum", "avg", "min", "max"})
 
 
-def validate_spec(source: DataFrame, spec: FeatureSpec) -> None:
-    """Resolve the feature expr against the source schema and enforce
-    the aggregation type rules. Raises TypeError/AnalysisException at
-    plan build — never at executor time."""
-    if spec.derived_inputs is not None:
-        return  # validated against the wide frame by construction
-    proj = project_feature(source, spec)  # resolves or raises
-    vtype = proj.schema["value"].dataType
-    if spec.aggr is not None:
-        numeric_needed = _NUMERIC_ONLY_FNS & set(spec.aggr.fns)
-        if numeric_needed and not isinstance(vtype, _NUMERIC):
-            raise TypeError(
-                f"feature {spec.fqn!r}: aggregation(s) "
-                f"{sorted(numeric_needed)} require a numeric value, got "
-                f"{vtype.simpleString()} (api/feature.go:50-64 rule)"
-            )
-
-
-def validate_feature_set(source: DataFrame, fs: FeatureSetSpec) -> None:
-    for spec in fs.features:
-        validate_spec(source, spec)
+def check_value_type(spec: FeatureSpec, vtype: DataType) -> None:
+    """Raise TypeError when ``spec`` aggregates its value with a
+    numeric-only fn and the value resolved to ``vtype``, not a number."""
+    if spec.aggr is None:
+        return
+    numeric_needed = _NUMERIC_ONLY_FNS & set(spec.aggr.fns)
+    if numeric_needed and not isinstance(vtype, NumericType):
+        raise TypeError(
+            f"feature {spec.fqn!r}: aggregation(s) "
+            f"{sorted(numeric_needed)} require a numeric value, got "
+            f"{vtype.simpleString()} (api/feature.go:50-64 rule)"
+        )

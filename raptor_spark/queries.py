@@ -267,7 +267,9 @@ def q_valid_till_1h(spark, sf_dir):
 def q_latest_per_key(spark, sf_dir):
     """W3: newest event per user."""
     ev = _t(spark, sf_dir, "events")
-    return latest_per_key(ev, ["user_id"], "ts", tiebreak="event_id").select(
+    return latest_per_key(
+        ev, ["user_id"], F.col("ts").desc(), F.col("event_id").desc()
+    ).select(
         "user_id", "event_id", "ts", "value"
     )
 
@@ -2009,7 +2011,7 @@ def _semantic_dedup_sql() -> str:
 
 def _simhash_sql() -> str:
     """32-bit simhash over distinct whitespace tokens, mirroring
-    functions.dedup.simhash bit-for-bit."""
+    functions.dedup.simhash_from_hashes bit-for-bit."""
     bits = []
     for i in range(32):
         bit = (

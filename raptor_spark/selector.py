@@ -60,25 +60,6 @@ class Selector:
         return s
 
 
-def select_features(df, selectors, keep=("conv_id", "ts")):
-    """Project a wide historical frame down to the requested FQN
-    selectors (the ``model(... features=[...])`` consumption surface,
-    ``/root/reference/labsdk/raptor/decorators.py:532-705``): each
-    ``ns.name[+fn][@-N]`` resolves to its flat column, aliased back to
-    the selector string."""
-    cols = [c for c in keep if c in df.columns]
-    out = list(cols)
-    for s in selectors:
-        sel = parse_selector(s) if isinstance(s, str) else s
-        if sel.column not in df.columns:
-            raise KeyError(
-                f"selector {sel} resolves to column {sel.column!r}, "
-                f"not present in {df.columns}"
-            )
-        out.append(df[sel.column].alias(str(sel)))
-    return df.select(*out)
-
-
 def parse_selector(s: str, default_namespace: str = DEFAULT_NAMESPACE) -> Selector:
     m = _SELECTOR.match(s.strip())
     if not m:

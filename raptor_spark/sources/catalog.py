@@ -148,20 +148,3 @@ class Catalog:
                 "pday date"
             ).option("basePath", self._path(name)).parquet(self._path(name))
         return df.filter(F.col("fqn").isin(fqns)).drop("pday")
-
-    def read_key_prune(self, name: str, conv_id: str) -> DataFrame:
-        """Single-key read using the bucket partition column — prunes to
-        1/n_buckets of the files before the conv_id filter runs."""
-        if self.kind == "iceberg":
-            return self.spark.table(self._ident(name)).filter(
-                F.col("conv_id") == conv_id
-            )  # iceberg prunes via its own bucket transform metadata
-        df = self.spark.read.parquet(self._path(name))
-        return (
-            df.filter(
-                F.col("pbucket")
-                == F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(self.n_buckets))
-            )
-            .filter(F.col("conv_id") == conv_id)
-            .drop("pbucket", "pday")
-        )

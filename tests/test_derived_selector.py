@@ -1,10 +1,9 @@
-"""Derived (sourceless) features and FQN-selector projection."""
+"""Derived (sourceless) features."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from raptor_spark.plans.historical import get_historical
-from raptor_spark.selector import select_features
 from raptor_spark.sources.transcripts import transcripts
 from raptor_spark.specs import FeatureSetSpec, feature
 
@@ -54,24 +53,3 @@ def test_derived_cycle_raises(spark):
 def test_derived_with_window_rejected():
     with pytest.raises(ValueError, match="derived"):
         feature("x", "conv_id", "y", inputs=["y"], aggr=["sum"], over="1h")
-
-
-def test_selector_projection(spark, fs):
-    src = transcripts(spark, n_convs=5)
-    out = get_historical(src, fs)
-    sel = select_features(
-        out, ["turn_len", "turn_len@-1", "turns_10m+count", "default.len_per_turn"]
-    )
-    assert sel.columns == [
-        "conv_id", "ts",
-        "default.turn_len", "default.turn_len@-1",
-        "default.turns_10m+count", "default.len_per_turn",
-    ]
-    r = sel.limit(1).collect()
-    assert r
-
-
-def test_selector_unknown_column(spark, fs):
-    out = get_historical(transcripts(spark, 3), fs)
-    with pytest.raises(KeyError, match="nope"):
-        select_features(out, ["nope+sum"])

@@ -98,7 +98,9 @@ def test_valid_till(spark):
 def test_latest_per_key(spark, transcripts_pair):
     sdf, pdf = transcripts_pair
     got = (
-        latest_per_key(sdf, ["conv_id"], "ts", tiebreak="turn_idx")
+        latest_per_key(
+            sdf, ["conv_id"], F.col("ts").desc(), F.col("turn_idx").desc()
+        )
         .select("conv_id", "turn_idx")
         .toPandas()
         .sort_values("conv_id")

@@ -1,5 +1,5 @@
 """Deterministic sampling / mixing (functions/sampling.py) and PII
-masking (functions/text.py pii_mask / mask_pii) unit tests.
+masking (functions/text.py mask_pii) unit tests.
 
 Reference has no sampling or PII stage — these are training-pipeline
 extensions; semantics pinned here + by the pii_scrub /
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from raptor_spark.functions.sampling import (
     RESOLUTION,
     hash_bucket,
-    sample_fraction,
     sample_mixture,
     shuffle_order,
 )
@@ -23,33 +22,6 @@ from raptor_spark.functions.text import PII_PATTERNS, mask_pii
 
 def _ids(spark, n=2000):
     return spark.range(n).withColumnRenamed("id", "doc_id")
-
-
-def test_sample_fraction_deterministic_and_calibrated(spark):
-    df = _ids(spark)
-    a = sample_fraction(df, "doc_id", 0.25, salt="s1")
-    b = sample_fraction(df, "doc_id", 0.25, salt="s1")
-    na, nb = a.count(), b.count()
-    assert na == nb  # bit-identical rerun
-    assert 0.25 * 2000 * 0.7 < na < 0.25 * 2000 * 1.3  # calibrated
-    # different salt -> independent draw (overlap ~ p^2, not p)
-    c = sample_fraction(df, "doc_id", 0.25, salt="s2")
-    overlap = a.join(c, "doc_id").count()
-    assert overlap < na  # not the same subset
-
-
-def test_sample_fraction_nesting(spark):
-    """Same salt, smaller fraction => strict subset (threshold
-    monotonicity) — lets a user shrink a sample without resampling."""
-    df = _ids(spark)
-    big = sample_fraction(df, "doc_id", 0.5, salt="s")
-    small = sample_fraction(df, "doc_id", 0.2, salt="s")
-    assert small.join(big, "doc_id", "left_anti").count() == 0
-
-
-def test_sample_fraction_bounds():
-    with pytest.raises(ValueError):
-        sample_fraction(None, "doc_id", 1.5)
 
 
 def test_sample_mixture_rates_and_default(spark):

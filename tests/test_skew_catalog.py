@@ -4,7 +4,7 @@ the table-format catalog layer."""
 import pytest
 from pyspark.sql import functions as F
 
-from raptor_spark.operators.skew import detect_hot_keys, salted_agg
+from raptor_spark.operators.skew import salted_agg
 from raptor_spark.sources.catalog import Catalog, iceberg_available
 from raptor_spark.sources.transcripts import transcripts
 
@@ -16,11 +16,6 @@ def skewed(spark):
 
 
 class TestSkew:
-    def test_detect_hot_keys(self, spark, skewed):
-        hot = detect_hot_keys(skewed, ["conv_id"], threshold=1000)
-        ids = {r["conv_id"] for r in hot.collect()}
-        assert ids == {f"conv_{i:08d}" for i in range(10)}
-
     def test_salted_agg_matches_plain(self, spark, skewed):
         df = skewed.select("conv_id", F.length("text").cast("double").alias("v"))
         salted = salted_agg(df, ["conv_id"], "v", ["count", "sum", "min", "max", "avg"])
@@ -131,10 +126,16 @@ class TestCatalog:
         assert sorted(back.columns) == sorted(src.columns)
         assert back.count() == src.count()
 
-        one = cat.read_key_prune("transcripts", "conv_00000003")
+        # a key's bucket predicate prunes the scan to 1 of 8 bucket dirs
+        # (the pbucket layout a backfill shards on, shard_col="pbucket")
+        bucket = F.pmod(F.xxhash64(F.lit("conv_00000003")), F.lit(8))
+        one = (
+            cat.read("transcripts", with_partition_cols=True)
+            .filter(F.col("pbucket") == bucket)
+            .filter(F.col("conv_id") == "conv_00000003")
+        )
         want = src.filter(F.col("conv_id") == "conv_00000003")
         assert one.count() == want.count()
-        # partition pruning visible in the scan: only 1 of 8 buckets read
         plan = one._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "pbucket" in plan
 

@@ -193,31 +193,6 @@ class TestMultimodal:
         # n_bytes = utf-8 length of the source text
         assert a[3]["n_bytes"] == 200
 
-    def test_decode_stub_raises(self):
-        from raptor_spark.functions.multimodal import decode_image
-
-        with pytest.raises(NotImplementedError):
-            decode_image(b"\xff\xd8\xff")
-
-    def test_resize_clamps_and_preserves_schema(self, spark):
-        from raptor_spark.functions.multimodal import resize_images, synthesize_media
-
-        docs = spark.createDataFrame(
-            [(i, "y" * (100 + i * 37)) for i in range(30)], "doc_id long, text string"
-        )
-        media = synthesize_media(docs, "doc_id")
-        out = resize_images(media, max_w=32, max_h=32)
-        assert [f.name for f in out.schema.fields] == [
-            "media_id", "media_type", "payload", "meta",
-        ]
-        rows = out.collect()
-        assert len(rows) == 30
-        assert all(r["meta"]["width"] <= 32 and r["meta"]["height"] <= 32
-                   for r in rows)
-        # deterministic across runs
-        assert {r["media_id"]: bytes(r["payload"]) for r in rows} == \
-               {r["media_id"]: bytes(r["payload"]) for r in out.collect()}
-
     def test_sample_frames_video_only(self, spark):
         from raptor_spark.functions.multimodal import sample_frames, synthesize_media
         from pyspark.sql import functions as SF
@@ -236,9 +211,10 @@ class TestMultimodal:
 
     def test_null_meta_and_payload_survive(self, spark):
         """A NULL meta struct (not just NULL payload) must not crash
-        the Arrow batch (ADVICE r3): resize passes the row through
-        untouched; sample_frames emits no frames for it."""
-        from raptor_spark.functions.multimodal import resize_images, sample_frames
+        the Arrow batch (ADVICE r3): extract_features keeps every row,
+        with NULL features for a NULL payload; sample_frames emits no
+        frames for a video without payload or duration."""
+        from raptor_spark.functions.multimodal import extract_features, sample_frames
 
         media = spark.createDataFrame(
             [
@@ -252,15 +228,11 @@ class TestMultimodal:
             "media_id long, media_type string, payload binary, "
             "meta struct<width:int,height:int,duration_ms:int>",
         )
-        rows = {r["media_id"]: r for r in resize_images(media, 32, 32).collect()}
+        rows = {r["media_id"]: r for r in extract_features(media, dim=4).collect()}
         assert len(rows) == 5                       # nothing dropped
-        assert rows[1]["meta"]["width"] <= 32       # real row still resized
-        assert rows[2]["payload"] is None and rows[2]["meta"] is None
-        assert rows[3]["meta"] is None              # passed through untouched
-        # duration_ms is copied, never computed on: a NULL duration must
-        # NOT exempt a large image from resizing (ADVICE r4)
-        assert rows[5]["meta"]["width"] <= 32
-        assert rows[5]["meta"]["duration_ms"] is None
+        assert rows[1]["n_bytes"] == 300 and len(rows[1]["feature"]) == 4
+        assert rows[2]["n_bytes"] is None and rows[2]["feature"] is None
+        assert rows[3]["digest"] is not None        # NULL meta is not read
         frames = sample_frames(media, every_ms=1000).collect()
         assert frames == []                         # no decodable video rows
 
